@@ -1940,23 +1940,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return page_keywords(pages, headings_text_col="headings_text",
                              top_n=10)
 
-    def p3_priority_wave(spark, sf):
-        """Depth/priority frontier wave cut (frontier.priority_wave_cut):
-        the 200 best pending URLs by (priority DESC, seq ASC) selected
-        via range-bucket counting — no global sort, no TakeOrdered
-        funnel; only the boundary bucket gets a window rank. The oracle
-        is the plain row_number() definition."""
-        from librecrawl_spark.operators.frontier import priority_wave_cut
-
-        d = _t(spark, sf, "documents").select("doc_id")
-        pending = d.select(
-            F.concat(F.lit("https://q.example/p"),
-                     F.col("doc_id").cast("string")).alias("url"),
-            F.col("doc_id").cast("long").alias("seq"),
-            ((F.col("doc_id") * 13) % 7).cast("int").alias("priority"))
-        sel, _ = priority_wave_cut(pending, budget=200)
-        return sel
-
     def sk_kmv_distinct(spark, sf):
         """K-minimum-values distinct-count sketch (operators/sketch.py)
         over lineitem.l_orderkey — the engine-portable cardinality
@@ -2121,7 +2104,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "p2_budget_alloc": p2_budget_alloc,
         "kw_cannibalization": kw_cannibalization,
         "kw_page_keywords": kw_page_keywords,
-        "p3_priority_wave": p3_priority_wave,
         "sk_kmv_distinct": sk_kmv_distinct,
         "graph_bfs_dist": graph_bfs_dist,
         "text_unigram_lm": text_unigram_lm,
@@ -4329,17 +4311,6 @@ def oracle_sql() -> dict[str, str]:
                 AS prominence_score,
               CAST(r.rnk AS INT) AS "rank"
             FROM ranked r JOIN scal s USING (url)
-        """,
-        "p3_priority_wave": """
-            WITH p AS (
-              SELECT 'https://q.example/p' || CAST(doc_id AS VARCHAR) AS url,
-                     CAST(doc_id AS BIGINT) AS seq,
-                     CAST((doc_id * 13) % 7 AS INT) AS priority
-              FROM documents)
-            SELECT url, seq, priority FROM (
-              SELECT *, row_number() OVER (
-                ORDER BY priority DESC, seq ASC) AS rn FROM p)
-            WHERE rn <= 200
         """,
         "sk_kmv_distinct": """
             WITH hashes AS (

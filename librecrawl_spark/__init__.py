@@ -4,7 +4,7 @@ engine with the query/data-processing capabilities of LibreCrawl
 
 This is NOT a port: the reference is a threaded, row-at-a-time Python
 crawler; this engine declares every stage (fetch-join, extraction,
-link explosion, canonicalization, dedup, politeness scheduling, issue
+link explosion, URL cleaning, dedup, politeness scheduling, issue
 detection) as DataFrame plans so Catalyst/Tungsten/AQE pick the physical
 strategy, with Arrow-vectorized pandas UDFs only where Spark has no
 builtin (urljoin/robots matching/span parsing).

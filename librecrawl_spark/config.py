@@ -66,8 +66,6 @@ class CrawlConfig:
     # 0 disables (tests that assert per-wave snapshot history use 0).
     maintenance_every_waves: int = 64
     host_salt_buckets: int = 16             # salted repartition fan-out for hot hosts
-    bloom_expected_items: int = 10_000_000  # seen-set bloom sizing at 1e10 design scale
-    bloom_fpp: float = 0.01
 
     def polite(self) -> "CrawlConfig":
         """Polite-mode overrides (crawler.py:318-323)."""

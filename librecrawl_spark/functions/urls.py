@@ -10,17 +10,7 @@ parsing quirks.
 from __future__ import annotations
 
 import re
-from urllib.parse import parse_qsl, urlencode, urljoin, urlparse
-
-# Tracking params stripped by the canonical *hash key* (north-star
-# canonicalization; the stored URL keeps its query — see reference_clean).
-TRACKING_PARAMS = frozenset(
-    {
-        "utm_source", "utm_medium", "utm_campaign", "utm_term", "utm_content",
-        "utm_id", "gclid", "gbraid", "wbraid", "fbclid", "msclkid", "mc_cid",
-        "mc_eid", "igshid", "ref", "ref_src", "_ga", "_gl", "yclid", "dclid",
-    }
-)
+from urllib.parse import urljoin, urlparse
 
 _UUID_RE = re.compile(r"[a-f0-9]{8}-[a-f0-9]{4}-[a-f0-9]{4}-[a-f0-9]{4}-[a-f0-9]{12}")
 _DIGITS_RE = re.compile(r"\d+")
@@ -40,34 +30,6 @@ def reference_clean(href: str, current_url: str) -> str:
     if parsed.query:
         clean += f"?{parsed.query}"
     return clean
-
-
-def canonicalize(url: str) -> str:
-    """North-star canonical form used as the seen-set HASH KEY: lowercase
-    scheme+host, strip fragment, drop tracking params, sort query keys.
-
-    This is an engine-side key (BASELINE.json north_star); the stored URL
-    and crawl ordering still follow reference_clean semantics.
-    """
-    parsed = urlparse(url)
-    host = parsed.netloc.lower()
-    # default-port strip
-    if host.endswith(":80") and parsed.scheme.lower() == "http":
-        host = host[:-3]
-    elif host.endswith(":443") and parsed.scheme.lower() == "https":
-        host = host[:-4]
-    path = parsed.path or "/"
-    pairs = [
-        (k, v)
-        for k, v in parse_qsl(parsed.query, keep_blank_values=True)
-        if k.lower() not in TRACKING_PARAMS
-    ]
-    pairs.sort()
-    query = urlencode(pairs)
-    out = f"{parsed.scheme.lower()}://{host}{path}"
-    if query:
-        out += f"?{query}"
-    return out
 
 
 def url_signature(url: str) -> str:

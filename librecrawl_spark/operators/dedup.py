@@ -158,9 +158,7 @@ def minhash_incremental_candidates(
     the incremental path finds exactly every pair involving a new doc.
 
     Scale shape: one band-key hash join of O(wave) new rows against the
-    index (the index side shuffles once; store it bucketed by band_key
-    via storage/bucketed.py for an Exchange-free probe) + one O(wave)
-    self-join. Historical text is never re-read.
+    index (the index side shuffles once) + one O(wave) self-join. Historical text is never re-read.
     """
     new_bands = minhash_band_index(new_docs, text_col, n_hashes,
                                    n_bands).persist()

@@ -15,13 +15,13 @@ intra-page link index) order.
 Scale notes
 -----------
 - seen-set dedup is a left-anti join on the exact stored URL (the
-  reference's set-membership contract), pre-filtered by a broadcast
-  Bloom filter at scale (``bloom_prefilter``): bloom "unseen" rows skip
-  the shuffle join entirely; only "maybe seen" rows verify exactly —
-  the false-positive-safe composition.
-- global sequence assignment never single-partitions: range-partition by
-  the order key, count per partition, broadcast prefix offsets, assign
-  in one mapInPandas pass (``add_global_seq``).
+  reference's set-membership contract), run after the keep-first
+  aggregate so it probes one row per URL; past the broadcast threshold
+  it is a shuffle-hash join against the already hash-partitioned
+  candidates (``anti_join_seen``).
+- global sequence assignment never single-partitions: range-bucket by
+  the order key, count per bucket, broadcast prefix offsets, rank
+  within each bucket in parallel (``add_global_seq``).
 - per-host politeness quotas + salted repartition break hot-host skew
   (``apply_politeness`` / ``salted_repartition``).
 """
@@ -46,7 +46,7 @@ def default_seq_buckets(spark) -> int:
 
 
 def add_global_seq(df: DataFrame, order_cols: list[str], start: int,
-                   out_col: str = "seq", n_buckets: int | None = None,
+                   out_col: str = "seq",
                    lead_bounds: tuple[int, int] | None = None,
                    bucket_counts: dict[int, int] | None = None) -> DataFrame:
     """Assign a contiguous global sequence ``start, start+1, ...`` in
@@ -65,8 +65,7 @@ def add_global_seq(df: DataFrame, order_cols: list[str], start: int,
     entirely, e.g. when the counts were piggybacked on an earlier
     action (schedule_wave's combined probe)."""
     spark = df.sparkSession
-    if n_buckets is None:
-        n_buckets = default_seq_buckets(spark)
+    n_buckets = default_seq_buckets(spark)
     lead = order_cols[0]
     if lead_bounds is not None:
         # caller knows the leading key's range (e.g. the wave's seq span)
@@ -104,70 +103,6 @@ def add_global_seq(df: DataFrame, order_cols: list[str], start: int,
         .withColumn(out_col, (F.col("_off") + F.row_number().over(w) - 1).cast("long"))
         .drop("_bkt", "_off")
     )
-
-
-def priority_wave_cut(pending: DataFrame, budget: int,
-                      priority_col: str = "priority", seq_col: str = "seq",
-                      max_priority: int = 255,
-                      n_buckets: int | None = None):
-    """Depth/priority frontier queue (north rule): select the next wave
-    as the ``budget`` best pending URLs by (priority DESC, seq ASC) —
-    highest priority first, FIFO within a priority class. The reference's
-    queue is a pure FIFO deque (link_manager.py:13,253-258); this is the
-    priority generalization the north rule names, with priority=const
-    degenerating to the engine's exact FIFO cut.
-
-    Scale strategy: never a global sort and never a driver-side top-k
-    materialization (the FIFO cut's orderBy().limit(n) plans
-    TakeOrdered, which funnels n rows through one task — fine for seq
-    thresholds, wrong for 10^8-row waves). Instead (priority, seq) packs
-    into one long; ONE aggregate gives its bounds + total; range-bucket
-    counts (<= 2*shuffle.partitions rows to the driver) locate the
-    bucket containing the budget-th row; only THAT bucket's rows get a
-    window rank for the residual quota. Exact and deterministic for
-    unique ``seq``; requires 0 <= priority <= max_priority and
-    seq < 2^40 (schedule_wave's packing already guarantees < 2^35).
-    Returns (selected, deferred).
-    """
-    assert budget >= 0
-    spark = pending.sparkSession
-    if n_buckets is None:
-        n_buckets = default_seq_buckets(spark)
-    if budget == 0:
-        return pending.limit(0), pending
-    inv = (F.lit(max_priority) - F.col(priority_col)).cast("long")
-    packed = F.shiftleft(inv, 40) + F.col(seq_col).cast("long")
-    d = pending.withColumn("_pk", packed)
-    stats = d.agg(F.min("_pk").alias("lo"), F.max("_pk").alias("hi"),
-                  F.count("*").alias("n")).collect()[0]
-    if stats["n"] == 0 or stats["n"] <= budget:
-        return d.drop("_pk"), pending.limit(0)
-    lo, hi = int(stats["lo"]), int(stats["hi"])
-    assert lo >= 0, "priority exceeds max_priority or negative seq"
-    width = max((hi - lo) // n_buckets + 1, 1)
-    bucket = ((F.col("_pk") - F.lit(lo)) / F.lit(width)).cast("long")
-    b = d.withColumn("_bkt", bucket)
-    counts = {r["_bkt"]: r["count"]
-              for r in b.groupBy("_bkt").count().collect()}
-    acc = 0
-    boundary, residual = None, 0
-    for k in sorted(counts):
-        if acc + counts[k] >= budget:
-            boundary, residual = k, budget - acc
-            break
-        acc += counts[k]
-    w = Window.partitionBy("_bkt").orderBy("_pk")
-    in_boundary = b.filter(F.col("_bkt") == boundary)
-    keep_boundary = (in_boundary
-                     .withColumn("_rk", F.row_number().over(w))
-                     .filter(F.col("_rk") <= residual).drop("_rk"))
-    selected = (b.filter(F.col("_bkt") < boundary)
-                .unionByName(keep_boundary).drop("_bkt", "_pk"))
-    deferred = (in_boundary.withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") > residual).drop("_rk")
-                .unionByName(b.filter(F.col("_bkt") > boundary))
-                .drop("_bkt", "_pk"))
-    return selected, deferred
 
 
 # --------------------------------------------------------------------------
@@ -495,11 +430,11 @@ def _can_use_native_policy(config: CrawlConfig) -> bool:
 
 
 # --------------------------------------------------------------------------
-# seen-set dedup with bloom prefilter
+# seen-set dedup
 # --------------------------------------------------------------------------
 
 def anti_join_seen(candidates: DataFrame, seen: DataFrame,
-                   bloom=None, *, big: bool = False) -> DataFrame:
+                   *, big: bool = False) -> DataFrame:
     """Exact dedup: left-anti join candidate.clean_url vs seen.url.
 
     ``big`` (seen outgrew the broadcast threshold): force shuffle_hash —
@@ -509,76 +444,11 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame,
     (schedule_wave's keep-first aggregate), the join's required
     distribution is already satisfied and only ``seen`` exchanges.
     Below the threshold the planner's own broadcast choice stays in
-    charge.
-
-    ``bloom`` (optional, pyspark BloomFilter built over seen urls): rows
-    the bloom reports unseen bypass the join (bloom has no false
-    negatives); only "maybe seen" rows take the shuffle. Worth it ONLY
-    when candidates are raw occurrences whose shuffle the bloom can
-    avert; for pre-partitioned deduped candidates the bloom is pure
-    overhead — the probe costs as much as the hash-table lookup it
-    saves, and the fresh/maybe union splits the plan into two branches
-    that each recompute the upstream aggregate (Catalyst pushes the
-    grouping-key bloom predicate below the groupBy, defeating exchange
-    reuse) — so schedule_wave passes ``big`` instead."""
+    charge."""
     seen_keyed = seen.select(F.col("url").alias("clean_url"))
-    if bloom is not None:
-        maybe = candidates.filter(_bloom_might_contain(bloom, F.col("clean_url")))
-        fresh = candidates.filter(~_bloom_might_contain(bloom, F.col("clean_url")))
-        verified = maybe.join(seen_keyed.hint("shuffle_hash"), "clean_url", "left_anti")
-        return fresh.unionByName(verified)
     if big:
         return candidates.join(seen_keyed.hint("shuffle_hash"), "clean_url", "left_anti")
     return candidates.join(seen_keyed, "clean_url", "left_anti")
-
-
-class _SeenBloom:
-    """A serialized ``org.apache.spark.util.sketch.BloomFilter`` built
-    over ``xxhash64(url)`` (long-hash space), probed JVM-side via the
-    Catalyst ``BloomFilterMightContain`` expression — the same machinery
-    Spark's own runtime row-level filtering injects, so the probe stays
-    inside whole-stage codegen (no Python, no extra exchange)."""
-
-    __slots__ = ("raw", "spark")
-
-    def __init__(self, raw, spark):
-        self.raw = raw
-        self.spark = spark
-
-
-def _bloom_might_contain(bloom: "_SeenBloom", col):
-    from pyspark.sql.column import Column
-
-    jvm = bloom.spark._jvm
-    lit = jvm.org.apache.spark.sql.catalyst.expressions.Literal.create(
-        bloom.raw, jvm.org.apache.spark.sql.types.DataTypes.BinaryType
-    )
-    eu = jvm.org.apache.spark.sql.classic.ExpressionUtils
-    expr = jvm.org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        lit, eu.expression(F.xxhash64(col)._jc)
-    )
-    return Column(eu.column(expr))
-
-
-def build_seen_bloom(seen: DataFrame, expected: int, fpp: float):
-    """Bloom filter over the seen-set for the anti-join prefilter.
-
-    PySpark 4.x dropped ``DataFrameStatFunctions.bloomFilter``, so the
-    build goes through the JVM stat API over ``xxhash64(url)`` longs
-    (``putLong`` — the hash space ``BloomFilterMightContain`` probes
-    with ``mightContainLong``) and ships the serialized bitmap into the
-    probe expression as a binary literal. Returns None when the
-    internal JVM surface is unavailable (callers fall back to the plain
-    anti-join, which stays exact — the bloom is only a prefilter)."""
-    spark = seen.sparkSession
-    try:
-        jb = (seen.select(F.xxhash64("url").alias("h"))
-              ._jdf.stat().bloomFilter("h", expected, fpp))
-        bos = spark._jvm.java.io.ByteArrayOutputStream()
-        jb.writeTo(bos)
-        return _SeenBloom(bos.toByteArray(), spark)
-    except Exception:
-        return None
 
 
 # --------------------------------------------------------------------------
@@ -755,10 +625,9 @@ def schedule_wave(
     base_domain: str,
     config: CrawlConfig,
     seq_start: int,
-    bloom=None,
     src_seq_bounds: tuple[int, int] | None = None,
     host_rules: DataFrame | None = None,
-    seen_big: bool | None = None,
+    seen_big: bool = False,
 ):
     """One wave of frontier growth. Returns (new_frontier, counts_delta,
     trap_hits, cache_handle).
@@ -834,12 +703,9 @@ def schedule_wave(
     # (not one per occurrence), and its required distribution matches the
     # aggregate's hash partitioning on clean_url, so the big side never
     # re-exchanges: only `seen` shuffles (or broadcasts below the 64MB
-    # session threshold). No bloom here even when the caller built one —
-    # see anti_join_seen's docstring. The hot path stays exact without
-    # its own anti-join because occ_hot inner-joins `first` on clean_url
-    # and seen URLs are absent from `first`.
-    if seen_big is None:
-        seen_big = bloom is not None
+    # session threshold). The hot path stays exact without its own
+    # anti-join because occ_hot inner-joins `first` on clean_url and seen
+    # URLs are absent from `first`.
     first = anti_join_seen(first, seen, big=seen_big)
     # signature/host re-derived on the deduped survivors (one eval per
     # URL, codegen); rows outside the exact-native gate carry NULLs and
@@ -906,7 +772,7 @@ def schedule_wave(
         exchange, and only bucket rows plus threshold-crossers survive
         to the collect. This halves the wave's per-job fixed cost at
         high core counts, where job/stage/task-launch scheduling — not
-        data — dominates small waves (BENCH/wave_overhead.json)."""
+        data — dominates small waves."""
         sig_acc = F.sum(F.col("policy_ok").cast("long"))
         if p_bounds is None:
             sig_stat = (
@@ -1089,9 +955,7 @@ def host_of(url_col):
 def apply_politeness(eligible: DataFrame, hosts: DataFrame,
                      wave_seconds: float,
                      seq_bounds: tuple[int, int] | None = None,
-                     n_buckets: int | None = None,
-                     host_col: str | None = None,
-                     mode: str = "window") -> tuple[DataFrame, DataFrame]:
+                     host_col: str | None = None) -> tuple[DataFrame, DataFrame]:
     """Per-host per-wave fetch quota: a host with crawl-delay d gets
     floor(wave_seconds/d) fetch slots this wave (>=1); overflow rows are
     deferred to the next wave preserving their seq (FIFO within host).
@@ -1099,40 +963,14 @@ def apply_politeness(eligible: DataFrame, hosts: DataFrame,
     pacing (rate_limiter.py:24-38) made per-host, as the north rule
     requires. Returns (selected, deferred).
 
-    Two physical plans, row-identical (asserted by tests/test_priority
-    .py::test_politeness_matches_naive_window), chosen by ``mode``:
+    One host-keyed exchange, row_number per host, rank <= budget.
+    Zero-delay hosts bypass the window, so the hot *unlimited* host
+    never serializes; each rate-limited host's rows sort in one task.
 
-    ``mode="window"`` (default): one host-keyed exchange, row_number
-    per host, rank <= budget. Zero-delay hosts bypass the window, so
-    the hot *unlimited* host never serializes; each rate-limited host's
-    rows sort in one task. Measured the better plan when rate-limited
-    volume is spread over many hosts (the sort parallelizes with
-    cores; the bucket plan's extra scans are memory-bandwidth-bound).
-
-    ``mode="bucket"``: the skew path — when a single RATE-LIMITED host
-    dominates the wave, the window plan sorts that host's entire row
-    set in one task to keep its first `budget` rows; this plan instead
-    locates the cut with aggregates and ranks only the rows straddling
-    it:
-
-    1. bucket rows by disjoint `seq` ranges (seq is the wave-unique
-       FIFO key, so bucket order IS host-local rank order);
-    2. per (host, bucket) counts — a map-side-combinable hash
-       aggregate, shuffling one row per group, never per input row;
-    3. per host, the single bucket containing its budget-th row falls
-       out of a cumulative sum over that tiny frame;
-    4. the per-host verdict (<= one row per host) broadcasts back: rows
-       in buckets before the cut are selected, after it deferred — no
-       row exchange at all — and ONLY boundary-bucket rows (about
-       host_rows/n_buckets per host) take the exact row_number window.
-       No task ever sorts more than one host's slice of one bucket.
-
-    ``seq_bounds``: optional (lo, hi) bounds of the wave's seq values —
-    callers that assigned the seq this wave know them; without the hint
-    one extra map-side min/max aggregate derives them in the same DAG
-    (scalar-subquery style, no driver action). ``host_col``: name of a
-    precomputed host column to use instead of re-deriving it from the
-    URL (it stays in the output columns)."""
+    ``seq_bounds`` is accepted and unused: perfbench's wave workload
+    passes the wave's seq range. ``host_col``: name of a precomputed
+    host column to use instead of re-deriving it from the URL (it stays
+    in the output columns)."""
     cols = list(eligible.columns)
     e = eligible.withColumn(
         "_h", F.col(host_col) if host_col else host_of(F.col("url")))
@@ -1148,53 +986,11 @@ def apply_politeness(eligible: DataFrame, hosts: DataFrame,
         F.floor(F.lit(wave_seconds) / F.col("crawl_delay")), F.lit(1)
     ).cast("long")
     limited = limited.withColumn("_budget", budget).drop("crawl_delay")
-    if mode == "window":
-        w_host = Window.partitionBy("_h").orderBy("seq")
-        ranked = limited.withColumn("_hrank", F.row_number().over(w_host))
-        selected = unlimited.unionByName(
-            ranked.filter(F.col("_hrank") <= F.col("_budget")).select(*cols))
-        deferred = ranked.filter(F.col("_hrank") > F.col("_budget")).select(*cols)
-        return selected, deferred
-    if seq_bounds is not None:
-        lo_c = F.lit(int(seq_bounds[0]))
-        hi_c = F.lit(int(seq_bounds[1]))
-    else:
-        bounds = limited.agg(F.min("seq").alias("_lo"), F.max("seq").alias("_hi"))
-        limited = limited.crossJoin(F.broadcast(bounds))
-        lo_c, hi_c = F.col("_lo"), F.col("_hi")
-    nb = n_buckets or default_seq_buckets(eligible.sparkSession) * 8
-    width = F.greatest(
-        F.floor((hi_c - lo_c + F.lit(1)) / F.lit(nb)), F.lit(1)
-    ).cast("long")
-    limited = limited.withColumn(
-        "_b", F.floor((F.col("seq") - lo_c) / width).cast("long"))
-    # per-(host, bucket) counts; cumulative over the (tiny) group frame
-    gb = limited.groupBy("_h", "_b").agg(
-        F.count("*").alias("_cnt"), F.first("_budget").alias("_budget"))
-    w_cum = (Window.partitionBy("_h").orderBy("_b")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    gb = gb.withColumn("_before", F.coalesce(F.sum("_cnt").over(w_cum), F.lit(0)))
-    # per-host verdict (one row per host): _cut_b = first bucket not
-    # fully inside the budget (_before + _cnt > budget); NULL for hosts
-    # whose total fits the budget (every bucket's cumulative count stays
-    # <= total <= budget). _before is monotone in _b, so min() pairs the
-    # cut bucket with its own prefix count.
-    crosses = F.col("_before") + F.col("_cnt") > F.col("_budget")
-    verdict = gb.groupBy("_h").agg(
-        F.first("_budget").alias("_budget"),
-        F.min(F.when(crosses, F.col("_b"))).alias("_cut_b"),
-        F.min(F.when(crosses, F.col("_before"))).alias("_cut_before"),
-    )
-    j = limited.drop("_budget").join(F.broadcast(verdict), "_h")
-    under = F.col("_cut_b").isNull()
-    pass_rows = j.filter(under | (F.col("_b") < F.col("_cut_b"))).select(*cols)
-    defer_rows = j.filter(~under & (F.col("_b") > F.col("_cut_b"))).select(*cols)
-    bnd = j.filter(~under & (F.col("_b") == F.col("_cut_b"))).withColumn(
-        "_r", F.row_number().over(Window.partitionBy("_h", "_b").orderBy("seq")))
-    keep_bnd = F.col("_r") <= F.col("_budget") - F.col("_cut_before")
-    selected = unlimited.unionByName(pass_rows).unionByName(
-        bnd.filter(keep_bnd).select(*cols))
-    deferred = defer_rows.unionByName(bnd.filter(~keep_bnd).select(*cols))
+    w_host = Window.partitionBy("_h").orderBy("seq")
+    ranked = limited.withColumn("_hrank", F.row_number().over(w_host))
+    selected = unlimited.unionByName(
+        ranked.filter(F.col("_hrank") <= F.col("_budget")).select(*cols))
+    deferred = ranked.filter(F.col("_hrank") > F.col("_budget")).select(*cols)
     return selected, deferred
 
 

@@ -1226,7 +1226,7 @@ def dup_candidate_pairs(pages: DataFrame, threshold: float = 0.85,
     which admits 2.5x length spreads and any character reordering, so
     content-based keys cannot be complete. For 10^7+ page crawls pass
     ``approx_minhash=True`` to conjoin a title character-3-gram MinHash
-    OR-band key (r=2, b=4 — the dedup.py banding scheme): candidate
+    OR-band key (r=2 rows per band, b=4 bands): candidate
     enumeration drops ~5-10x; recall for a true pair with title-shingle
     Jaccard J is 1-(1-J^2)^4 (>98% at J>=0.8, where 0.85-threshold
     near-dup titles live) — measured, documented, and OFF by default so
@@ -1239,8 +1239,13 @@ def dup_candidate_pairs(pages: DataFrame, threshold: float = 0.85,
     base = 1.0 / ratio_bound
     need_h = (threshold - (1.0 - w["h1"])) / w["h1"]
 
+    # fetch order (wave, seq): the reference scores each pair as
+    # (earlier page, later page), and SequenceMatcher.ratio() is not
+    # symmetric. Pages without those columns tie and keep url order.
+    fetch_order = F.struct(*[F.col(c) if c in pages.columns else F.lit(0)
+                             for c in ("wave", "seq")])
     d = pages.select(
-        "url",
+        "url", fetch_order.alias("fo"),
         F.lower(F.trim(F.coalesce("title", F.lit("")))).alias("t"),
         F.lower(F.trim(F.coalesce("meta_description", F.lit("")))).alias("d"),
         F.lower(F.trim(F.coalesce("h1", F.lit("")))).alias("h"),
@@ -1303,6 +1308,7 @@ def dup_candidate_pairs(pages: DataFrame, threshold: float = 0.85,
         cond = cond & (F.col("a.mh_id") == F.col("b.mh_id")) & (
             F.col("a.mh_val") == F.col("b.mh_val"))
     return left.alias("a").join(right.alias("b"), cond).select(
+        (F.col("a.fo") <= F.col("b.fo")).alias("a_first"),
         F.col("a.url").alias("url_a"), F.col("a.t").alias("t_a"),
         F.col("a.d").alias("d_a"), F.col("a.h").alias("h_a"), F.col("a.wc").alias("wc_a"),
         F.col("b.url").alias("url_b"), F.col("b.t").alias("t_b"),
@@ -1335,6 +1341,12 @@ def duplicate_content_pairs(pages: DataFrame, threshold: float = 0.85,
 
         import pandas as pd
 
+        def ratio(a, b, a_first):
+            if not (a and b):
+                return 0.0
+            return (SequenceMatcher(None, a, b) if a_first
+                    else SequenceMatcher(None, b, a)).ratio()
+
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
@@ -1347,17 +1359,17 @@ def duplicate_content_pairs(pages: DataFrame, threshold: float = 0.85,
                 max_pot = 1.0 - w["word_count"] + score
                 if max_pot < threshold:
                     continue
-                t_sim = SequenceMatcher(None, r.t_a, r.t_b).ratio() if (r.t_a and r.t_b) else 0.0
+                t_sim = ratio(r.t_a, r.t_b, r.a_first)
                 score += t_sim * w["title"]
                 max_pot = max_pot - w["title"] + t_sim * w["title"]
                 if max_pot < threshold:
                     continue
-                d_sim = SequenceMatcher(None, r.d_a, r.d_b).ratio() if (r.d_a and r.d_b) else 0.0
+                d_sim = ratio(r.d_a, r.d_b, r.a_first)
                 score += d_sim * w["desc"]
                 max_pot = max_pot - w["desc"] + d_sim * w["desc"]
                 if max_pot < threshold:
                     continue
-                h_sim = SequenceMatcher(None, r.h_a, r.h_b).ratio() if (r.h_a and r.h_b) else 0.0
+                h_sim = ratio(r.h_a, r.h_b, r.a_first)
                 score += h_sim * w["h1"]
                 if score >= threshold:
                     rows.append({"url_a": r.url_a, "url_b": r.url_b,

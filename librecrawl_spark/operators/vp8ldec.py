@@ -437,7 +437,9 @@ def _apply_inverse(px, w, h, transforms):
                         pred = px[i - w]
                     else:
                         mode = (data[(y >> bits) * tw + (x >> bits)] >> 8) & 0xFF
-                        tr = px[i - w + 1] if x + 1 < w else px[i - w]
+                        # rightmost column: TR is the leftmost pixel of
+                        # the current row (RFC 9649 4.4.1), i.e. i - w + 1
+                        tr = px[i - w + 1]
                         pred = _predict(mode, px[i - 1], px[i - w],
                                         tr, px[i - w - 1])
                     px[i] = _addpix(px[i], pred)
@@ -704,7 +706,7 @@ def _fwd_predict(argb, w, h, mode: int):
             elif x == 0:
                 pred = argb[i - w]
             else:
-                tr = argb[i - w + 1] if x + 1 < w else argb[i - w]
+                tr = argb[i - w + 1]
                 pred = _predict(mode, argb[i - 1], argb[i - w],
                                 tr, argb[i - w - 1])
             out.append((((argb[i] >> 24) - (pred >> 24) & 0xFF) << 24)

@@ -124,15 +124,6 @@ class CrawlEngine:
         self._sitemap_locs_raw: list[str] | None = None
         self._sitemap_urls_df = None
 
-    @staticmethod
-    def _with_hash(df: DataFrame) -> DataFrame:
-        """north-star canonical hash key — used for seen-set bucketing
-        and the bloom filter; membership truth stays raw-string equality
-        (link_manager.py:83-85)."""
-        from librecrawl_spark.functions.url_exprs import canonical_hash
-
-        return df.withColumn("url_hash", canonical_hash(F.col("url")))
-
     def _bootstrap_urls(self) -> list[str]:
         """Seed list + (optionally) the base host's sitemap page URLs in
         document order, policy-checked — the engine side of
@@ -270,7 +261,7 @@ class CrawlEngine:
                 seq_cache.unpersist()
         return {
             "pending": pending,
-            "seen": self._with_hash(pending.select("url", "depth", "seq")),
+            "seen": pending.select("url", "depth", "seq"),
             "counts": spark.createDataFrame([], schema="signature string, cnt long"),
             "traps": spark.createDataFrame(
                 [], schema="signature string, example_url string, hits long, first_wave int"
@@ -289,6 +280,8 @@ class CrawlEngine:
         for col, default in (("retry_count", 0), ("ready_wave", 0)):
             if col not in st["pending"].columns:
                 st["pending"] = st["pending"].withColumn(col, F.lit(default))
+        # checkpoints written when seen carried an extra hash column
+        st["seen"] = st["seen"].select("url", "depth", "seq")
         st.update(ck["state"])
         return st
 
@@ -416,9 +409,7 @@ class CrawlEngine:
 
             if self.politeness:
                 fetch_set, deferred = FR.apply_politeness(
-                    fetch_set, self.hosts, cfg.wave_seconds,
-                    seq_bounds=(0, int(cut_seq)),
-                )
+                    fetch_set, self.hosts, cfg.wave_seconds)
                 leftover = leftover.unionByName(deferred)
 
             fetch_set = fetch_set.withColumn("wave", F.lit(wave))
@@ -486,11 +477,7 @@ class CrawlEngine:
             # raises autoBroadcastJoinThreshold); past that, seen_big
             # makes schedule_wave force a shuffle_hash build of the seen
             # side against the already-partitioned deduped wave (no
-            # candidate-side exchange, no sort). A per-wave bloom
-            # prefilter is NOT built: since the wave dedups before the
-            # join, the bloom's probe saves only an equally-priced hash
-            # lookup while costing a full seen scan per wave (see
-            # anti_join_seen).
+            # candidate-side exchange, no sort).
             new_frontier, counts_delta, trap_hits, occ = FR.schedule_wave(
                 cands, seen, counts, self.hosts, self.base_domain, cfg, st["next_seq"],
                 seen_big=st["next_seq"] >= 1_500_000,
@@ -513,15 +500,12 @@ class CrawlEngine:
                 )
             )
             st["traps"] = self._merge_traps(st["traps"], trap_hits, wave)
-            st["seen"] = seen.unionByName(
-                self._with_hash(new_frontier.select("url", "depth", "seq"))
-            )
+            st["seen"] = seen.unionByName(new_frontier.select("url", "depth", "seq"))
             # Once the crawl enters the shuffle-hash regime, maintain the
             # seen set HASH-PARTITIONED on the join key so every later
             # wave's anti-join finds both sides co-partitioned (the
             # keep-first aggregate partitions the candidate side) and
-            # plans ZERO Exchange — the in-memory analog of the bucketed
-            # disk layout (storage/bucketed.py, plan-asserted in
+            # its seen side plans no Exchange (plan-asserted in
             # tests/test_bucketing.py). The placement shuffle happens
             # once here at checkpoint time — off the scheduling path —
             # instead of inside every subsequent wave's join. Partition
@@ -551,7 +535,10 @@ class CrawlEngine:
                 "wall_ms": round((time.time() - t0) * 1000, 1),
             })
             waves_this_run += 1
-            if n_new == 0 and leftover.isEmpty():
+            # n_new == 0 makes the checkpointed pending exactly leftover;
+            # leftover itself may still read a resumed snapshot's files,
+            # which maintenance has just expired
+            if n_new == 0 and st["pending"].isEmpty():
                 break
 
         return self._finalize(st, pages_parts, links_parts, sources_parts,

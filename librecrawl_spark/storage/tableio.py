@@ -99,20 +99,6 @@ class TableIO:
                 removed += 1
         return removed
 
-    def compact(self, spark, name: str, target_files: int = 8) -> int:
-        """Rewrite the table's CURRENT rows into ``target_files`` parquet
-        files and publish that as a new snapshot — Iceberg's
-        rewrite_data_files. A crawl commits one snapshot per wave, each
-        appending a task's worth of small files; after 10^5 waves the
-        manifest lists millions of files and every scan pays open/footer
-        cost per file. Compaction caps that: same rows (reads chain to
-        the new snapshot), prior snapshots keep their original file
-        lists, so time travel is unaffected until expire_snapshots
-        reclaims them. ``coalesce`` (not repartition) so the rewrite
-        itself is shuffle-free."""
-        df = self.read(spark, name).coalesce(max(1, target_files))
-        return self.commit(name, df, mode="overwrite")
-
     def compact_small(self, spark, name: str,
                       small_bytes: int = 32 * 1024 * 1024,
                       target_files: int = 8) -> int:
@@ -123,8 +109,8 @@ class TableIO:
         whose file list = untouched large files + the packed rewrite.
         Cost per maintenance run is O(bytes in small files), NOT
         O(table) — the property that makes an every-K-waves cadence
-        viable over a 10^5-wave crawl, where full compact() would be
-        O(n^2) total rewrite. Row-identical by construction (same rows,
+        viable over a 10^5-wave crawl, where a full-table rewrite would
+        be O(n^2) total. Row-identical by construction (same rows,
         different file layout); prior snapshots keep their file lists,
         so time travel and checkpoint pins are unaffected until
         expire_snapshots reclaims them. Returns the new snapshot id
@@ -164,7 +150,7 @@ class TableIO:
         """Drop snapshot manifests older than the newest ``keep_last``
         and physically delete data files no remaining manifest
         references — Iceberg's expire_snapshots + orphan-file vacuum,
-        the storage-reclaim half of the compact() lifecycle. A snapshot
+        the storage-reclaim half of the compact_small() lifecycle. A snapshot
         pinned by the crawl-level checkpoint (resume would read it) is
         always retained regardless of age. Returns
         (manifests_removed, data_files_deleted)."""

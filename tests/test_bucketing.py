@@ -1,40 +1,8 @@
-"""Bucketed co-located joins: the seen-set layout for 10^10-URL runs.
-
-Proves the property that matters at scale, from the physical plan:
-joining two tables bucketed on the same key with the same bucket count
-plans with ZERO Exchange operators, while the identical join over plain
-parquet pays a shuffle on both sides."""
+"""Co-partitioned seen set: once a crawl passes the broadcast threshold
+the wave loop keeps ``seen`` hash-partitioned on url, so the seen-set
+anti-join's seen side needs no Exchange. Proved from the physical plan."""
 
 import pyspark.sql.functions as F
-import pytest
-
-from librecrawl_spark.storage.bucketed import (
-    is_bucketed,
-    read_table,
-    write_bucketed,
-)
-
-N_BUCKETS = 8
-
-
-@pytest.fixture(scope="module")
-def bucketed_pair(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("buck")
-    seen = spark.range(20_000).select(
-        F.concat(F.lit("https://h"), (F.col("id") % 97).cast("string"),
-                 F.lit(".example/p/"), F.col("id").cast("string")).alias("url"),
-        F.col("id").alias("seq"),
-    )
-    cand = spark.range(5_000).select(
-        F.concat(F.lit("https://h"), (F.col("id") % 97).cast("string"),
-                 F.lit(".example/p/"), (F.col("id") * 3).cast("string")).alias("url"),
-        (F.col("id") % 7).alias("depth"),
-    )
-    write_bucketed(seen, "seen_b", "url", N_BUCKETS, path=str(root / "seen"))
-    write_bucketed(cand, "cand_b", "url", N_BUCKETS, path=str(root / "cand"))
-    yield seen, cand
-    spark.sql("DROP TABLE IF EXISTS seen_b")
-    spark.sql("DROP TABLE IF EXISTS cand_b")
 
 
 def _plan(df) -> str:
@@ -48,42 +16,10 @@ def _no_broadcast(spark):
             "spark.sql.adaptive.enabled": "false"}
 
 
-def test_catalog_records_bucketing(spark, bucketed_pair):
-    assert is_bucketed(spark, "seen_b", "url")
-    assert is_bucketed(spark, "cand_b", "url")
-
-
-def test_bucketed_join_has_no_exchange(spark, bucketed_pair):
-    with _conf(spark, _no_broadcast(spark)):
-        j = read_table(spark, "cand_b").join(read_table(spark, "seen_b"),
-                                             "url", "left_anti")
-        plan = _plan(j)
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        # and it computes the right thing
-        assert j.count() == read_table(spark, "cand_b").join(
-            read_table(spark, "seen_b").hint("shuffle_hash"),
-            "url", "left_anti").count()
-
-
-def test_plain_parquet_join_pays_two_exchanges(spark, bucketed_pair, tmp_path):
-    seen, cand = bucketed_pair
-    seen.write.mode("overwrite").parquet(str(tmp_path / "seen_p"))
-    cand.write.mode("overwrite").parquet(str(tmp_path / "cand_p"))
-    with _conf(spark, _no_broadcast(spark)):
-        j = spark.read.parquet(str(tmp_path / "cand_p")).join(
-            spark.read.parquet(str(tmp_path / "seen_p")), "url", "left_anti")
-        # two Exchange nodes in the tree (explain("formatted") prints each
-        # node again in a numbered detail block, so count tree lines only)
-        plan = _plan(j)
-        assert plan.count("+- Exchange") + plan.count(":- Exchange") == 2, plan
-
-
 def test_prepartitioned_seen_elides_join_exchange(spark):
-    """The in-memory analog of the bucketed layout: a persisted seen set
-    hash-partitioned on the join key (what plans/crawl.py maintains once
-    the crawl enters the shuffle-hash regime, and what
-    bench.bench_frontier_schedule's input mirrors) satisfies the
+    """A persisted seen set hash-partitioned on the join key (what
+    plans/crawl.py maintains once the crawl enters the shuffle-hash
+    regime, and what perfbench's wave_bulk input mirrors) satisfies the
     anti-join's required distribution THROUGH the url->clean_url alias,
     so only the candidate side's keep-first aggregate exchange remains
     in the wave plan."""

@@ -2,7 +2,7 @@
 from the snapshot checkpoint, and assert the final tables equal an
 uninterrupted run's — plus snapshot time-travel on the TableIO layer."""
 
-import pytest
+from dataclasses import replace
 
 from librecrawl_spark.config import CrawlConfig
 from librecrawl_spark.fixtures.sitegen import SiteGenConfig, generate_site, site_to_spark
@@ -109,28 +109,6 @@ def test_tableio_empty_commit(spark, tmp_path):
     assert out.columns == ["id", "v"]
 
 
-def test_tableio_compact_preserves_rows_and_history(spark, tmp_path):
-    tio = TableIO(str(tmp_path / "c"))
-    for w in range(4):  # 4 waves of small appends => many small files
-        df = spark.createDataFrame(
-            [(w * 10 + i, f"r{w}_{i}") for i in range(5)],
-            "id int, v string").repartition(4)
-        tio.commit("t", df)
-    before = sorted((r["id"], r["v"]) for r in tio.read(spark, "t").collect())
-    pre_sid = tio.snapshots("t")[-1]
-    n_files_before = len(tio._manifest("t", pre_sid)["files"])
-    sid = tio.compact(spark, "t", target_files=2)
-    m = tio._manifest("t", sid)
-    assert len(m["files"]) <= 2 < n_files_before
-    after = sorted((r["id"], r["v"]) for r in tio.read(spark, "t").collect())
-    assert after == before
-    # time travel to the pre-compaction snapshot still works
-    assert tio.read(spark, "t", pre_sid).count() == 20
-    # appends after compaction chain from the compacted snapshot
-    tio.commit("t", spark.createDataFrame([(99, "x")], "id int, v string"))
-    assert tio.read(spark, "t").count() == 21
-
-
 def test_tableio_expire_snapshots_vacuums_unreferenced(spark, tmp_path):
     import os
 
@@ -138,7 +116,8 @@ def test_tableio_expire_snapshots_vacuums_unreferenced(spark, tmp_path):
     for w in range(3):
         df = spark.createDataFrame([(w, "v")], "id int, v string")
         tio.commit("t", df)
-    tio.compact(spark, "t", target_files=1)
+    # a full rewrite into one file: its predecessors' files go unreferenced
+    tio.commit("t", tio.read(spark, "t").coalesce(1), mode="overwrite")
     all_sids = tio.snapshots("t")
     removed, deleted = tio.expire_snapshots("t", keep_last=1)
     assert removed == len(all_sids) - 1
@@ -250,4 +229,33 @@ def test_maintenance_wave_loop_bounds_files_and_resumes(spark, tmp_path):
     assert partial.stats["crawled"] < full.stats["crawled"]
     resumed = mk(ckdir2).run()
     assert resumed.stats["resumed"] is True
+    assert snap(resumed) == snap(full)
+
+
+def test_resume_into_maintenance_on_last_wave(spark, tmp_path):
+    """Kill-and-resume where the first resumed wave both runs storage
+    maintenance and empties the frontier. Expiry deletes the pending
+    snapshot the resumed run was reading, so the end-of-crawl check
+    must test the wave's checkpointed state, not the resumed files."""
+    site = generate_site(SITE)
+    cfg = CrawlConfig(max_depth=3, max_urls=500, discover_sitemaps=False,
+                      maintenance_every_waves=0)
+    docs, hosts, _ = site_to_spark(spark, site)
+
+    def mk(config, **kw):
+        return CrawlEngine(spark, docs, hosts, site.base_url, config,
+                           seed_urls=[s["url"] for s in site.seeds], **kw)
+
+    full = mk(cfg).run()
+    n_waves = full.stats["waves"]
+    assert n_waves >= 2 and full.lineage[-1]["new_frontier"] == 0
+
+    # maintenance first fires on the final wave, which the resumed run runs
+    cfg_m = replace(cfg, maintenance_every_waves=n_waves)
+    ckdir = str(tmp_path / "mlast")
+    mk(cfg_m, checkpoint_dir=ckdir, max_waves=n_waves - 1).run()
+    resumed = mk(cfg_m, checkpoint_dir=ckdir).run()
+    assert resumed.stats["resumed"] is True
+    assert [w["wave"] for w in resumed.lineage] == [n_waves - 1]
+    assert resumed.lineage[-1]["new_frontier"] == 0
     assert snap(resumed) == snap(full)

@@ -256,6 +256,36 @@ def test_duplicate_content_matches_reference_transcription(pages):
     assert got == want
 
 
+def test_duplicate_scores_follow_fetch_order(spark):
+    """SequenceMatcher.ratio() is not symmetric: the reference scores
+    each pair as (earlier-fetched page, later page). Here the later page
+    has the smaller URL and the title pair scores 0.909 one way and
+    0.727 the other, so only fetch-order orientation reproduces the
+    reference's similarity percentage."""
+    from librecrawl_spark.oracle.refissues import RefIssueDetector
+
+    rows = [  # fetch order
+        ("https://d.example/z", 0, 0, "bcabcbbccbb"),
+        ("https://d.example/a", 0, 1, "bcabccbbcbb"),
+    ]
+    assert (SequenceMatcher(None, rows[0][3], rows[1][3]).ratio()
+            != SequenceMatcher(None, rows[1][3], rows[0][3]).ratio())
+    pg = spark.createDataFrame(
+        [(u, w, q, t, "same description", "same heading", 300)
+         for u, w, q, t in rows],
+        "url string, wave int, seq long, title string, meta_description string, "
+        "h1 string, word_count int")
+    det = RefIssueDetector()
+    det.detect_duplication_issues(
+        [dict(zip(("url", "wave", "seq", "title"), r),
+              meta_description="same description", h1="same heading",
+              word_count=300) for r in rows])
+    want = sorted(_issue_key(i) for i in det.get_issues())
+    got = sorted(_issue_key(r.asDict()) for r in
+                 I.duplicate_content_issues(pg, blocking="exact").collect())
+    assert len(want) == 2 and got == want
+
+
 def test_hreflang_reciprocity(pages):
     pg, _ = pages
     out = I.hreflang_reciprocity(pg).collect()

@@ -1061,50 +1061,6 @@ class TestVideoHeader:
         assert per_vid == {"m0": 3, "m3": 4, "m6": 4, "m9": 4}
 
 
-class TestSeenBloom:
-    """The bloom prefilter must actually BUILD on this Spark version
-    (PySpark 4.x dropped df.stat.bloomFilter — a silent None here
-    degrades every big-crawl wave to a full-shuffle anti-join) and the
-    prefiltered anti-join must stay exact (bloom has no false
-    negatives, 'maybe' rows are verified by the real join)."""
-
-    def test_bloom_builds_and_antijoin_exact(self, spark):
-        from librecrawl_spark.operators import frontier as FR
-
-        seen = spark.range(50_000).select(
-            F.concat(F.lit("https://x.example/p/"),
-                     F.col("id").cast("string")).alias("url"))
-        bloom = FR.build_seen_bloom(seen, expected=100_000, fpp=0.03)
-        assert bloom is not None, \
-            "build_seen_bloom returned None — JVM bloom surface broken"
-        cands = spark.range(0, 100_000).select(
-            F.concat(F.lit("https://x.example/p/"),
-                     (F.col("id") * 2).cast("string")).alias("clean_url"),
-            F.col("id").alias("payload"))
-        with_bloom = FR.anti_join_seen(cands, seen, bloom)
-        without = FR.anti_join_seen(cands, seen, None)
-        assert with_bloom.count() == without.count() == 75_000
-        assert with_bloom.select("clean_url").exceptAll(
-            without.select("clean_url")).isEmpty()
-
-    def test_bloom_probe_is_jvm_side(self, spark):
-        """The might-contain probe must be a Catalyst expression (shows
-        up in the physical plan), not a Python UDF round-trip."""
-        from librecrawl_spark.operators import frontier as FR
-
-        seen = spark.range(1000).select(
-            F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"))
-        bloom = FR.build_seen_bloom(seen, expected=2000, fpp=0.03)
-        assert bloom is not None
-        df = spark.range(1000).select(
-            F.concat(F.lit("u"), F.col("id").cast("string")).alias("clean_url"))
-        plan = df.filter(
-            FR._bloom_might_contain(bloom, F.col("clean_url"))
-        )._jdf.queryExecution().executedPlan().toString()
-        assert "might_contain" in plan
-        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
 class TestPageColumns:
     def test_page_columns_match_schema_order(self, spark):
         """extract_pages builds row tuples positionally against

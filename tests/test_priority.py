@@ -1,5 +1,5 @@
-"""priority_wave_cut: exact (priority DESC, seq ASC) wave selection via
-range-bucket counting — equality with the window-based reference."""
+"""apply_politeness: the per-host crawl-delay quota equals a naive
+per-host row_number window."""
 
 from __future__ import annotations
 
@@ -7,63 +7,6 @@ import random
 
 import pytest
 from pyspark.sql import Window, functions as F
-
-from librecrawl_spark.operators.frontier import priority_wave_cut
-
-
-@pytest.fixture(scope="module")
-def pending(spark):
-    rng = random.Random(7)
-    rows = [(f"https://p.example/{i}", i, rng.randint(0, 9))
-            for i in range(2000)]
-    return spark.createDataFrame(
-        rows, "url string, seq long, priority int").persist()
-
-
-def _reference(pending, budget):
-    w = Window.orderBy(F.desc("priority"), F.asc("seq"))
-    ranked = pending.withColumn("_rn", F.row_number().over(w))
-    sel = {r["url"] for r in ranked.filter(F.col("_rn") <= budget).collect()}
-    return sel
-
-
-@pytest.mark.parametrize("budget", [1, 137, 500, 1999])
-def test_matches_window_reference(spark, pending, budget):
-    sel, dfr = priority_wave_cut(pending, budget)
-    got = {r["url"] for r in sel.collect()}
-    assert got == _reference(pending, budget)
-    assert dfr.count() == 2000 - budget
-    # selected + deferred partition the input
-    assert sel.unionByName(dfr).count() == 2000
-    assert set(sel.columns) == {"url", "seq", "priority"}
-
-
-def test_budget_covers_all_and_zero(spark, pending):
-    sel, dfr = priority_wave_cut(pending, 5000)
-    assert sel.count() == 2000 and dfr.count() == 0
-    sel0, dfr0 = priority_wave_cut(pending, 0)
-    assert sel0.count() == 0 and dfr0.count() == 2000
-
-
-def test_constant_priority_degenerates_to_fifo(spark):
-    rows = [(f"https://p.example/{i}", i, 3) for i in range(100)]
-    df = spark.createDataFrame(rows, "url string, seq long, priority int")
-    sel, _ = priority_wave_cut(df, 10)
-    assert sorted(r["seq"] for r in sel.collect()) == list(range(10))
-
-
-def test_fifo_within_priority_class(spark):
-    rows = ([(f"https://hi.example/{i}", 100 + i, 9) for i in range(5)]
-            + [(f"https://lo.example/{i}", i, 1) for i in range(5)])
-    df = spark.createDataFrame(rows, "url string, seq long, priority int")
-    sel, _ = priority_wave_cut(df, 7)
-    got = sel.collect()
-    assert sum(r["priority"] == 9 for r in got) == 5
-    lo = sorted(r["seq"] for r in got if r["priority"] == 1)
-    assert lo == [0, 1]  # FIFO within the low class
-
-
-# --- apply_politeness: bucket-cut plan == naive per-host window ----------
 
 from librecrawl_spark.operators.frontier import apply_politeness
 
@@ -112,13 +55,9 @@ def _naive_politeness(frontier, hosts, wave_seconds):
 
 
 @pytest.mark.parametrize("kwargs", [
-    {},                                    # default window plan
-    {"mode": "bucket"},
-    {"mode": "bucket", "n_buckets": 1},
-    {"mode": "bucket", "n_buckets": 3},
-    {"mode": "bucket", "n_buckets": 1000},
-    {"mode": "bucket", "seq_bounds": (0, 722)},
-    {"mode": "bucket", "seq_bounds": (0, 10_000)},  # loose upper bound
+    {},
+    {"seq_bounds": (0, 722)},              # accepted and unused
+    {"seq_bounds": (0, 10_000)},
 ])
 def test_politeness_matches_naive_window(spark, politeness_fixture, kwargs):
     frontier, hosts = politeness_fixture
@@ -130,15 +69,14 @@ def test_politeness_matches_naive_window(spark, politeness_fixture, kwargs):
     assert {r["seq"] for r in dfr.collect()} == want_dfr
 
 
-@pytest.mark.parametrize("mode", ["window", "bucket"])
-def test_politeness_budget_floor_is_one(spark, mode):
+def test_politeness_budget_floor_is_one(spark):
     # delay far above wave_seconds still grants one slot per wave
     frontier = spark.createDataFrame(
         [(f"https://slow.example/{i}", 1, i) for i in range(4)],
         "url string, depth int, seq long")
     hosts = spark.createDataFrame(
         [("slow.example", 1e6)], "host string, crawl_delay double")
-    sel, dfr = apply_politeness(frontier, hosts, 10.0, mode=mode)
+    sel, dfr = apply_politeness(frontier, hosts, 10.0)
     assert [r["seq"] for r in sel.collect()] == [0]
     assert sorted(r["seq"] for r in dfr.collect()) == [1, 2, 3]
 
@@ -148,7 +86,6 @@ def test_politeness_host_col_passthrough(spark, politeness_fixture):
     want_sel, _ = _naive_politeness(frontier, hosts, 10.0)
     pre = frontier.withColumn(
         "hc", F.regexp_extract("url", r"^https?://([^/]*)", 1))
-    sel, dfr = apply_politeness(
-        pre, hosts, 10.0, mode="bucket", host_col="hc")
+    sel, dfr = apply_politeness(pre, hosts, 10.0, host_col="hc")
     assert {r["seq"] for r in sel.collect()} == want_sel
     assert set(sel.columns) == {"url", "depth", "seq", "hc"}

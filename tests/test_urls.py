@@ -2,7 +2,6 @@
 (/root/reference/src/core/link_manager.py, src/crawler.py)."""
 
 import pytest
-from hypothesis import given, settings, strategies as st
 
 from librecrawl_spark.functions import urls as U
 
@@ -26,24 +25,6 @@ class TestReferenceClean:
     def test_keeps_query_order(self):
         # reference does NOT sort query keys
         assert U.reference_clean("/p?b=2&a=1", "https://x.example/").endswith("?b=2&a=1")
-
-
-class TestCanonicalize:
-    def test_lowercases_and_sorts(self):
-        assert (
-            U.canonicalize("https://WWW.Example.com/P?b=2&a=1&utm_source=x#f")
-            == "https://www.example.com/P?a=1&b=2"
-        )
-
-    def test_default_port(self):
-        assert U.canonicalize("https://x.example:443/p") == "https://x.example/p"
-        assert U.canonicalize("http://x.example:80/p") == "http://x.example/p"
-
-    @given(st.text(alphabet="abcz059:/?&=#._-", min_size=1, max_size=40))
-    @settings(max_examples=200, deadline=None)
-    def test_idempotent(self, tail):
-        u = "https://h.example/" + tail
-        assert U.canonicalize(U.canonicalize(u)) == U.canonicalize(u)
 
 
 class TestSignature:
@@ -120,40 +101,6 @@ class TestNormalizeForCompare:
         assert U.normalize_for_compare("HTTPS://X.Example/P/#f") == "https://x.example/p"
         assert U.normalize_for_compare("https://x.example/") == "https://x.example/"
         assert U.normalize_for_compare("https://x.example/p/?q=1") == "https://x.example/p?q=1"
-
-
-class TestNativeCanonical:
-    """Native canonical_key (url_exprs) agrees with the Python
-    canonicalize() on the fixture URL universe + common shapes."""
-
-    def test_agreement(self, spark):
-        from pyspark.sql import functions as F
-
-        from librecrawl_spark.fixtures.sitegen import SiteGenConfig, generate_site
-        from librecrawl_spark.functions.url_exprs import canonical_key
-
-        site = generate_site(SiteGenConfig(seed=3, n_hosts=4))
-        urls = [d["doc_id"] for d in site.documents] + [
-            "https://WWW.Example.com/P?b=2&a=1&utm_source=x#f",
-            "https://x.example:443/p?z=1&gclid=abc",
-            "http://x.example:80/",
-            "https://x.example/path/?q=1&q=0",
-        ]
-        df = spark.createDataFrame([(u,) for u in urls], "url string")
-        got = {r["url"]: r["k"] for r in df.select("url", canonical_key(F.col("url")).alias("k")).collect()}
-        for u in urls:
-            assert got[u] == U.canonicalize(u), u
-
-    def test_hash_is_stable(self, spark):
-        from pyspark.sql import functions as F
-
-        from librecrawl_spark.functions.url_exprs import canonical_hash
-
-        df = spark.createDataFrame(
-            [("https://a.example/p?b=2&a=1",), ("https://A.EXAMPLE/p?a=1&b=2#frag",)],
-            "url string")
-        h = [r["h"] for r in df.select(canonical_hash(F.col("url")).alias("h")).collect()]
-        assert h[0] == h[1]
 
 
 class TestWordCountRegex:

@@ -67,6 +67,32 @@ class TestVp8lDecode:
             assert decode_webp_lossless(make_test_webp_lossless(
                 pp, palette=True)) == _want(pp), f"palette {ncol}"
 
+    def test_rightmost_column_tr_is_row_start(self):
+        """RFC 9649 4.4.1: a rightmost-column pixel takes the leftmost
+        pixel of its own row as TR (not the pixel above). Mode 3
+        predicts from TR alone, so each right-edge residual must be the
+        pixel minus its row's first pixel, and the decoder must invert
+        that."""
+        from librecrawl_spark.operators.vp8ldec import (
+            _fwd_predict, decode_webp_lossless, make_test_webp_lossless)
+
+        w, h = 3, 3
+        argb = [0xFF000000 | (10 * i + 1) << 16 | (7 * i + 2) << 8 | (3 * i + 5)
+                for i in range(w * h)]
+        res = _fwd_predict(argb, w, h, 3)
+        for y in range(1, h):
+            i, row0 = y * w + w - 1, y * w
+            want = 0
+            for sh in (24, 16, 8, 0):
+                want |= (((argb[i] >> sh) - (argb[row0] >> sh)) & 0xFF) << sh
+            assert res[i] == want, y
+
+        rnd = random.Random(11)
+        for mode in (3, 5, 9, 10):
+            p = _img(rnd, 6, 5)
+            assert decode_webp_lossless(make_test_webp_lossless(
+                p, predictor_mode=mode)) == _want(p), f"predictor {mode}"
+
     def test_cache_backrefs_meta(self):
         """Color-cache hits, distance-1 LZ77 backrefs (the 2D distance
         map path), and a meta-huffman entropy image selecting between
