@@ -797,47 +797,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return per_page_issues(_issue_pages(spark, sf))
 
-    def c15_requeue_math(spark, sf):
-        """S1 requeue mode (operators/extract.py split_retries): per-row
-        disposition of a deterministic fetch wave — recorded rows carry
-        the closed-form backoff_total, requeued 429s carry retry_count+1
-        and ready_wave = wave + ceil(backoff/wave_seconds)."""
-        from librecrawl_spark.operators import extract as X
-
-        ev = _t(spark, sf, "events").select("event_id")
-        i = F.col("event_id")
-        fetched = ev.select(
-            F.concat(F.lit("https://r.example/p"), i.cast("string")).alias("url"),
-            F.lit(1).alias("depth"),
-            i.cast("long").alias("seq"),
-            F.lit(5).alias("wave"),
-            F.pmod(i, F.lit(3)).cast("int").alias("retry_count"),
-            F.when(i % 4 == 0, F.lit(429)).otherwise(F.lit(200))
-            .cast("int").alias("status_code"),
-            F.lit(None).cast("string").alias("error"),
-            F.when(i % 8 == 0, F.lit("7")).otherwise(F.lit("")).alias("retry_after"),
-            F.when(i % 12 == 4, F.lit(2)).otherwise(F.lit(0))
-            .cast("int").alias("recover_after"),
-            F.lit(200).cast("int").alias("recover_status"),
-        )
-        rec, rq = X.split_retries(fetched, retries=3, base_delay=2.0,
-                                  wave=5, wave_seconds=60.0)
-        return (
-            rec.select(
-                "url", "seq", F.lit("record").alias("path"),
-                F.col("status_code").cast("int").alias("status"),
-                F.round("backoff_total", 2).alias("backoff"),
-                F.lit(None).cast("int").alias("ready_wave"),
-                F.col("retry_count").cast("int").alias("retry_count"),
-            ).unionByName(rq.select(
-                "url", "seq", F.lit("requeue").alias("path"),
-                F.lit(None).cast("int").alias("status"),
-                F.lit(None).cast("double").alias("backoff"),
-                F.col("ready_wave").cast("int").alias("ready_wave"),
-                F.col("retry_count").cast("int").alias("retry_count"),
-            ))
-        )
-
     def p1_politeness_quota(spark, sf):
         """Per-host politeness quota (operators/frontier.py
         apply_politeness): host h gets floor(wave_seconds/crawl_delay)
@@ -2128,7 +2087,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "j7_dup_candidates": j7_dup_candidates,
         "i_issue_predicates": i_issue_predicates,
         "i_sitewide_security": i_sitewide_security,
-        "c15_requeue_math": c15_requeue_math,
         "p1_politeness_quota": p1_politeness_quota,
         "u4_links_dedup": u4_links_dedup,
         "c2_normalize_compare": c2_normalize_compare,
@@ -2635,36 +2593,6 @@ def oracle_sql() -> dict[str, str]:
             FROM events GROUP BY event_type
         """,
         "i_issue_predicates": _issue_predicates_sql(),
-        # split_retries math (operators/extract.py): eff status via the
-        # attempt-indexed recover rule; backoff closed forms per
-        # retry_count in {0,1,2} with base_delay=2.0, Retry-After='7'
-        "c15_requeue_math": """
-            WITH f AS (
-              SELECT 'https://r.example/p' || CAST(event_id AS VARCHAR) AS url,
-                     event_id AS seq,
-                     CAST(event_id % 3 AS INT) AS retry_count,
-                     CASE WHEN event_id % 4 = 0 THEN 429 ELSE 200 END AS status_code,
-                     CASE WHEN event_id % 8 = 0 THEN '7' ELSE '' END AS retry_after,
-                     CASE WHEN event_id % 12 = 4 THEN 2 ELSE 0 END AS recover_after
-              FROM events
-            ), e AS (
-              SELECT *, CASE WHEN recover_after > 0 AND retry_count >= recover_after
-                             THEN 200 ELSE status_code END AS eff
-              FROM f
-            )
-            SELECT url, seq, 'record' AS path, CAST(eff AS INT) AS status,
-                   round(CASE WHEN retry_after = '7' THEN retry_count * 7.0
-                              ELSE CASE retry_count WHEN 0 THEN 0.0
-                                   WHEN 1 THEN 2.0 ELSE 6.0 END END, 2) AS backoff,
-                   CAST(NULL AS INT) AS ready_wave, retry_count
-            FROM e WHERE NOT (eff = 429 AND retry_count < 3)
-            UNION ALL
-            SELECT url, seq, 'requeue' AS path, CAST(NULL AS INT) AS status,
-                   CAST(NULL AS DOUBLE) AS backoff,
-                   CAST(6 AS INT) AS ready_wave,
-                   CAST(retry_count + 1 AS INT) AS retry_count
-            FROM e WHERE eff = 429 AND retry_count < 3
-        """,
         # apply_politeness (operators/frontier.py): host h = event_id%7,
         # crawl_delay = h%4, quota = greatest(floor(10/delay), 1),
         # unlimited when delay<=0; FIFO by seq within host

@@ -227,11 +227,9 @@ def join_fetch(frontier: DataFrame, fetch_map: DataFrame, documents: DataFrame) 
         F.when(F.col("url").rlike("^https?://[^/]*$"), F.concat(F.col("url"), F.lit("/")))
         .otherwise(F.col("url")),
     )
-    if "retry_count" not in f.columns:
-        f = f.withColumn("retry_count", F.lit(0))
     joined = f.join(fetch_map, f["fetch_key"] == fetch_map["doc_id"], "left").drop("doc_id")
     joined = joined.select(
-        "url", "depth", "seq", "wave", "retry_count",
+        "url", "depth", "seq", "wave",
         F.coalesce("status_code", F.lit(0)).alias("status_code"),
         F.coalesce("content_type", F.lit("")).alias("content_type"),
         F.coalesce("size", F.lit(0)).alias("size"),
@@ -325,7 +323,7 @@ _SPANS_TYPE = "array<struct<kind:string,text:string,media_ref:string,offset:int>
 
 
 def resolve_retries_inline(fetched: DataFrame, retries: int, base_delay: float) -> DataFrame:
-    """S1/C14, inline mode: closed-form per-row resolution of the
+    """S1/C14: closed-form per-row resolution of the
     reference's blocking retry loop (crawler.py:941-976). With the
     fixture's attempt-indexed recover_after field the loop outcome is a
     pure function of the row:
@@ -355,42 +353,6 @@ def resolve_retries_inline(fetched: DataFrame, retries: int, base_delay: float) 
         .withColumn("backoff_total", _backoff_total_expr(base_delay))
         .drop("retry_after", "recover_after", "recover_status")
     )
-
-
-def split_retries(fetched: DataFrame, retries: int, base_delay: float,
-                  wave: int, wave_seconds: float) -> tuple[DataFrame, DataFrame]:
-    """S1/C14, requeue mode: one attempt per wave. Rows answering 429
-    with retry budget left re-enter the frontier with retry_count+1 and
-    become eligible at wave + ceil(backoff/wave_seconds); everything else
-    is recorded. The scale-true re-expression when waves model
-    wall-clock: a recovering host's rows resolve in a later wave instead
-    of blocking an executor. Returns (record_rows, requeue_rows)."""
-    # effective status of THIS attempt (attempt number = retry_count)
-    eff = F.when(
-        (F.col("recover_after") > 0) & (F.col("retry_count") >= F.col("recover_after")),
-        F.col("recover_status"),
-    ).otherwise(F.col("status_code"))
-    f = fetched.withColumn("status_code", eff)
-    should_retry = (
-        F.col("error").isNull() & (F.col("status_code") == 429) & (F.col("retry_count") < retries)
-    )
-    wait = _backoff_wait(F.col("retry_count").cast("double"), base_delay)
-    requeue = (
-        f.filter(should_retry)
-        .select(
-            "url", "depth", "seq",
-            F.lit(wave).alias("wave"),
-            (F.col("retry_count") + 1).cast("int").alias("retry_count"),
-            (F.lit(wave) + F.greatest(F.ceil(wait / F.lit(wave_seconds)), F.lit(1)))
-            .cast("int").alias("ready_wave"),
-        )
-    )
-    record = (
-        f.filter(~should_retry)
-        .withColumn("backoff_total", _backoff_total_expr(base_delay))
-        .drop("retry_after", "recover_after", "recover_status")
-    )
-    return record, requeue
 
 
 def extract_pages(fetched: DataFrame, base_domain: str, *,

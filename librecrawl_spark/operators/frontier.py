@@ -45,41 +45,33 @@ def default_seq_buckets(spark) -> int:
     return int(spark.conf.get("spark.sql.shuffle.partitions", "32")) * 2
 
 
-def add_global_seq(df: DataFrame, order_cols: list[str], start: int,
+def add_global_seq(df: DataFrame, order_cols: list[str], start: int, *,
+                   lead_bounds: tuple[int, int],
                    out_col: str = "seq",
-                   lead_bounds: tuple[int, int] | None = None,
                    bucket_counts: dict[int, int] | None = None) -> DataFrame:
     """Assign a contiguous global sequence ``start, start+1, ...`` in
     ``order_cols`` order without ever collapsing to one partition.
 
     Two-phase distributed ranking, sampling-free: bucket rows by a
-    deterministic range function of the leading order column (its min/max
-    come from one cheap aggregate), count rows per bucket, broadcast the
-    prefix-sum offsets, then rank within each bucket with an ordinary
-    window — buckets are disjoint key ranges, so
-    ``seq = offset[bucket] + rank - 1`` is globally contiguous and every
-    bucket ranks in parallel.
+    deterministic range function of the leading order column over
+    ``lead_bounds`` (its min/max, known to the caller — e.g. the wave's
+    seq span), count rows per bucket, broadcast the prefix-sum offsets,
+    then rank within each bucket with an ordinary window — buckets are
+    disjoint key ranges, so ``seq = offset[bucket] + rank - 1`` is
+    globally contiguous and every bucket ranks in parallel.
 
-    ``bucket_counts`` (requires ``lead_bounds``): per-bucket row counts
+    ``bucket_counts``: per-bucket row counts
     the caller already knows — skips this function's counting pass
     entirely, e.g. when the counts were piggybacked on an earlier
     action (schedule_wave's combined probe)."""
     spark = df.sparkSession
     n_buckets = default_seq_buckets(spark)
     lead = order_cols[0]
-    if lead_bounds is not None:
-        # caller knows the leading key's range (e.g. the wave's seq span)
-        # — skips one full pass over the data
-        lo, hi = lead_bounds
-    else:
-        lo_hi = df.agg(F.min(lead).alias("lo"), F.max(lead).alias("hi")).collect()[0]
-        if lo_hi["lo"] is None:
-            return df.withColumn(out_col, F.lit(start).cast("long"))
-        lo, hi = int(lo_hi["lo"]), int(lo_hi["hi"])
+    lo, hi = lead_bounds
     width = max((hi - lo) // n_buckets + 1, 1)
     bucket = ((F.col(lead).cast("long") - F.lit(lo)) / F.lit(width)).cast("long")
     b = df.withColumn("_bkt", bucket)
-    if bucket_counts is not None and lead_bounds is not None:
+    if bucket_counts is not None:
         counts = bucket_counts
     else:
         counts = {r["_bkt"]: r["count"] for r in b.groupBy("_bkt").count().collect()}
@@ -458,8 +450,7 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame,
 def policy_gate_lazy(df: DataFrame, hosts: DataFrame, base_domain: str,
                      config: CrawlConfig, host_rules: DataFrame | None = None,
                      *, url_col: str = "clean_url",
-                     keep: tuple[str, ...] = (),
-                     fill_parse: bool = False) -> tuple[DataFrame, DataFrame]:
+                     keep: tuple[str, ...] = ()) -> tuple[DataFrame, DataFrame]:
     """Native policy in ONE pass + a deferred UDF residue.
 
     Returns ``(lazy, udf_part)``:
@@ -471,11 +462,11 @@ def policy_gate_lazy(df: DataFrame, hosts: DataFrame, base_domain: str,
       keeps single-rule rows on the codegen'd fast expression and only
       multi-rule rows pay the interpreted array-lambda walk.
     - ``udf_part``: the exact UDF verdicts for the NULL rows, same slim
-      schema, derived from the same join lineage. Callers evaluate it
-      ONLY when the lazy frame actually contains NULLs (schedule_wave
-      piggybacks that count on its probe action) — steady-state waves of
-      quote-safe URLs never pay the second reduce-side pass that the old
-      eager native-union-udf plan ran every wave.
+      schema, derived from the same join lineage (``policy_gate`` over
+      the residue). Callers evaluate it ONLY when the lazy frame
+      actually contains NULLs (schedule_wave piggybacks that count on
+      its probe action) — steady-state waves of quote-safe URLs never
+      pay a second reduce-side pass for the residue.
 
     Requires ``_can_use_native_policy(config)``."""
     assert _can_use_native_policy(config)
@@ -492,12 +483,11 @@ def policy_gate_lazy(df: DataFrame, hosts: DataFrame, base_domain: str,
         F.col(url_col), base_domain, config
     )
     _, _, hof_ok = native_policy_exprs(F.col(url_col), base_domain, config)
-    if fill_parse:
-        # df's host/signature came from parse_url_native and are NULL
-        # outside its gate — those rows must take the exact residue (a
-        # NULL host would otherwise fall through the robots chain's
-        # missing-host allow-default even when the real host has rules)
-        eligible = eligible & F.col("host").isNotNull()
+    # df's host/signature came from parse_url_native and are NULL
+    # outside its gate — those rows must take the exact residue (a
+    # NULL host would otherwise fall through the robots chain's
+    # missing-host allow-default even when the real host has rules)
+    eligible = eligible & F.col("host").isNotNull()
     single = (F.coalesce("n_rules", F.lit(0)) <= 1) if config.respect_robots \
         else F.lit(True)
     # NULL-as-"needs udf" is sound: the native verdict itself is never
@@ -511,110 +501,39 @@ def policy_gate_lazy(df: DataFrame, hosts: DataFrame, base_domain: str,
         )
         .select(*slim)
     )
-    policy_udf = make_policy_udf(base_domain, config)
-    udf_src = j.filter(~eligible)
-    if fill_parse:
-        # complete host (for the robots lookup) and signature with the
-        # exact Python parse before judging the residue
-        pu = make_parse_url_udf()(F.col(url_col))
-        udf_src = udf_src.withColumn("_pu", pu).withColumn(
-            "host", F.coalesce(F.col("host"), F.col("_pu.host"))
-        )
-        if "signature" in keep:
-            udf_src = udf_src.withColumn(
-                "signature",
-                F.coalesce(F.col("signature"), F.col("_pu.signature")),
-            )
-        udf_src = udf_src.drop("_pu")
-    udf_part = (
-        udf_src
-        .join(F.broadcast(hosts.select("host", "robots_txt")), "host", "left")
-        .withColumn("policy_ok", policy_udf(F.col(url_col), F.col("robots_txt")))
-        .select(*slim)
-    )
+    udf_part = policy_gate(j.filter(~eligible), hosts, base_domain, config,
+                           url_col=url_col, keep=keep)
     return lazy, udf_part
 
 
 def policy_gate(df: DataFrame, hosts: DataFrame, base_domain: str,
-                config: CrawlConfig, host_rules: DataFrame | None = None,
-                *, url_col: str = "clean_url",
-                keep: tuple[str, ...] = (),
-                fill_parse: bool = False) -> DataFrame:
+                config: CrawlConfig, *, url_col: str = "clean_url",
+                keep: tuple[str, ...] = ()) -> DataFrame:
     """Append ``policy_ok`` (robots + scope + extension + patterns,
-    crawler.py:1425-1492) with the three-way native/hof/udf split:
+    crawler.py:1425-1492) from the exact Arrow policy UDF, row by row.
 
-    - fast: quote-safe URL + <=1 robots rule => whole policy is codegen'd
-      column exprs (no regex, no lambda, no Python);
-    - hof:  quote-safe URL + multi-rule host => same exprs with the
-      interpreted array-lambda rule walk (small subset);
-    - udf:  everything else => Arrow policy UDF (exactness first).
-
-    ``df`` must carry ``url_col`` and ``host``; the output projects
-    (url_col, *keep, policy_ok). Eager variant (complete policy_ok) for
-    the once-per-crawl sitemap bootstrap; schedule_wave uses
-    policy_gate_lazy + its probe to skip the UDF branch when no row
-    needs it."""
-    slim = (url_col, *keep, "policy_ok")
-    if _can_use_native_policy(config):
-        lazy, udf_part = policy_gate_lazy(
-            df, hosts, base_domain, config, host_rules,
-            url_col=url_col, keep=keep, fill_parse=fill_parse,
+    Two callers: schedule_wave when include/exclude patterns are
+    configured (the native expressions do not evaluate fnmatch/regex
+    patterns), and policy_gate_lazy's residue. ``df`` carries
+    ``url_col`` plus the ``host`` (and, when kept, ``signature``) that
+    parse_url_native derived — NULL outside its gate, so the exact
+    Python parse completes them first (the host drives the robots
+    lookup). The output projects (url_col, *keep, policy_ok)."""
+    pu = make_parse_url_udf()(F.col(url_col))
+    df = df.withColumn("_pu", pu).withColumn(
+        "host", F.coalesce(F.col("host"), F.col("_pu.host"))
+    )
+    if "signature" in keep:
+        df = df.withColumn(
+            "signature", F.coalesce(F.col("signature"), F.col("_pu.signature"))
         )
-        return lazy.filter(F.col("policy_ok").isNotNull()).unionByName(udf_part)
     policy_udf = make_policy_udf(base_domain, config)
-    if fill_parse:
-        pu = make_parse_url_udf()(F.col(url_col))
-        df = df.withColumn("_pu", pu).withColumn(
-            "host", F.coalesce(F.col("host"), F.col("_pu.host"))
-        )
-        if "signature" in keep:
-            df = df.withColumn(
-                "signature",
-                F.coalesce(F.col("signature"), F.col("_pu.signature")),
-            )
-        df = df.drop("_pu")
     return (
-        df.join(F.broadcast(hosts.select("host", "robots_txt")), "host", "left")
+        df.drop("_pu")
+        .join(F.broadcast(hosts.select("host", "robots_txt")), "host", "left")
         .withColumn("policy_ok", policy_udf(F.col(url_col), F.col("robots_txt")))
-        .select(*slim)
+        .select(url_col, *keep, "policy_ok")
     )
-
-
-def ordered_seq_by_key(df: DataFrame, key_col: str, start: int,
-                       out_col: str = "seq"):
-    """Contiguous global sequence in ``key_col`` (string) order without a
-    single-partition window: range-repartition by the key, count rows per
-    (ordered, disjoint) partition, broadcast prefix-sum offsets, rank
-    within partitions in parallel. The string-key sibling of
-    add_global_seq (whose range bucketing needs a numeric lead).
-
-    Returns (df_with_seq, cache_handle); the caller unpersists the
-    handle once the result is materialized (same contract as
-    schedule_wave's handle — keeps the repartitioned cache from living
-    for the rest of the crawl)."""
-    spark = df.sparkSession
-    n_part = default_seq_buckets(spark)
-    d = df.repartitionByRange(n_part, F.col(key_col)).withColumn(
-        "_pid", F.spark_partition_id()
-    ).persist()
-    counts = {r["_pid"]: r["count"] for r in d.groupBy("_pid").count().collect()}
-    if not counts:
-        d.unpersist()
-        return df.withColumn(out_col, F.lit(start).cast("long")), None
-    offsets, acc = {}, start
-    for k in sorted(counts):
-        offsets[k] = acc
-        acc += counts[k]
-    odf = F.broadcast(
-        spark.createDataFrame(list(offsets.items()), schema="_pid int, _off long")
-    )
-    w = Window.partitionBy("_pid").orderBy(key_col)
-    out = (
-        d.join(odf, "_pid")
-        .withColumn(out_col, (F.col("_off") + F.row_number().over(w) - 1).cast("long"))
-        .drop("_pid", "_off")
-    )
-    return out, d
 
 
 def schedule_wave(
@@ -625,12 +544,16 @@ def schedule_wave(
     base_domain: str,
     config: CrawlConfig,
     seq_start: int,
-    src_seq_bounds: tuple[int, int] | None = None,
+    *,
+    src_seq_bounds: tuple[int, int],
     host_rules: DataFrame | None = None,
     seen_big: bool = False,
 ):
     """One wave of frontier growth. Returns (new_frontier, counts_delta,
-    trap_hits, cache_handle).
+    trap_hits, cache_handle); new_frontier is (url, depth, seq).
+
+    ``src_seq_bounds``: the (min, max) seq of the wave's fetched pages —
+    the range buckets of the seq assignment are cut from it.
 
     Exact-semantics derivation (link_manager.py:83-118, concurrency-1):
     within a wave, candidates are processed in (src_seq, link_idx) order.
@@ -684,8 +607,7 @@ def schedule_wave(
     # clamped — ordering past that collapses to depth,
     # pathological-page-only), depth 8 bits (asserted).
     assert config.max_depth < 256, "depth packing requires max_depth < 256"
-    if src_seq_bounds is not None:
-        assert src_seq_bounds[1] < (1 << 35), "seq packing requires src_seq < 2^35"
+    assert src_seq_bounds[1] < (1 << 35), "seq packing requires src_seq < 2^35"
     packed = (
         F.shiftleft(F.col("src_seq").cast("long"), 28)
         + F.shiftleft(F.least(F.col("link_idx"), F.lit((1 << 20) - 1)).cast("long"), 8)
@@ -710,7 +632,7 @@ def schedule_wave(
     # signature/host re-derived on the deduped survivors (one eval per
     # URL, codegen); rows outside the exact-native gate carry NULLs and
     # are completed by the policy residue (their policy_ok is NULL too,
-    # so the probe's null count routes them — fill_parse below)
+    # so the probe's null count routes them to policy_gate's parse)
     _par, _netloc, _sig = parse_url_native(F.col("clean_url"))
     first = first.select(
         "clean_url", "_p",
@@ -740,20 +662,17 @@ def schedule_wave(
     if _can_use_native_policy(config):
         lazy, lazy_udf = policy_gate_lazy(
             first, hosts, base_domain, config, host_rules,
-            url_col="clean_url", keep=("_p", "signature"), fill_parse=True)
+            url_col="clean_url", keep=("_p", "signature"))
         first = lazy.persist()
     else:
-        first = policy_gate(first, hosts, base_domain, config, host_rules,
-                            url_col="clean_url", keep=("_p", "signature"),
-                            fill_parse=True).persist()
+        first = policy_gate(first, hosts, base_domain, config,
+                            url_col="clean_url", keep=("_p", "signature")).persist()
     pre = first
 
     # packed lead bounds for the seq-assignment range buckets: _p order
     # IS (src_seq, link_idx) order, and sorting one long beats a
     # two-column comparator
-    p_bounds = None
-    if src_seq_bounds is not None:
-        p_bounds = (src_seq_bounds[0] << 28, ((src_seq_bounds[1] + 1) << 28) - 1)
+    p_bounds = (src_seq_bounds[0] << 28, ((src_seq_bounds[1] + 1) << 28) - 1)
 
     spark = candidates.sparkSession
     priors = pattern_counts.withColumnRenamed("cnt", "prior")
@@ -774,19 +693,6 @@ def schedule_wave(
         high core counts, where job/stage/task-launch scheduling — not
         data — dominates small waves."""
         sig_acc = F.sum(F.col("policy_ok").cast("long"))
-        if p_bounds is None:
-            sig_stat = (
-                fr.groupBy("signature")
-                .agg(sig_acc.alias("wave_acc"))
-                .join(priors, "signature", "left")
-                .fillna({"prior": 0})
-            )
-            hs = sig_stat.filter(F.col("prior") + F.col("wave_acc") >= T).select(
-                "signature", "prior"
-            )
-            n_null = (fr.filter(F.col("policy_ok").isNull()).count()
-                      if count_nulls else 0)
-            return hs, None, (not hs.isEmpty()), n_null
         n_buckets = default_seq_buckets(spark)
         width = max((p_bounds[1] - p_bounds[0]) // n_buckets + 1, 1)
         bucket = ((F.col("_p") - F.lit(p_bounds[0])) / F.lit(width)).cast("long")

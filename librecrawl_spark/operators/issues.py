@@ -1144,7 +1144,6 @@ def detect_all_issues(pages: DataFrame, links: DataFrame, *,
                       sitemap_urls: DataFrame | None = None,
                       duplication_threshold: float = 0.85,
                       enable_duplication_check: bool = True,
-                      duplicate_blocking: str = "auto",
                       exclusion_patterns: tuple[str, ...] = ()) -> DataFrame:
     """The full issue report — engine analogue of running the
     reference's ``detect_issues`` over every crawled result plus its
@@ -1175,9 +1174,7 @@ def detect_all_issues(pages: DataFrame, links: DataFrame, *,
         parts.append(unsafe_cross_origin_issues(pages_f).select(*core))
     if enable_duplication_check:
         parts.append(
-            duplicate_content_issues(
-                pages_f, duplication_threshold,
-                blocking=duplicate_blocking).select(*core))
+            duplicate_content_issues(pages_f, duplication_threshold).select(*core))
     out = parts[0]
     for part in parts[1:]:
         out = out.unionByName(part)
@@ -1190,18 +1187,8 @@ def detect_all_issues(pages: DataFrame, links: DataFrame, *,
 
 DUP_WEIGHTS = {"title": 0.35, "desc": 0.35, "h1": 0.20, "word_count": 0.10}
 
-# blocking="auto" switches J7 from the exact (lossless) length-band
-# join to the MinHash OR-band conjunct once the page count passes this:
-# below it the exact path's band-join fan-out is cheap and reference
-# parity is bit-exact; above it the extra band keys cut candidate
-# enumeration ~5-10x at a documented >98% recall for true pairs at the
-# 0.85 threshold (see dup_candidate_pairs). 10^7-page crawls land on
-# the scale path without anyone reading a docstring.
-AUTO_MINHASH_MIN_PAGES = 2_000_000
 
-
-def dup_candidate_pairs(pages: DataFrame, threshold: float = 0.85,
-                        approx_minhash: bool = False) -> DataFrame:
+def dup_candidate_pairs(pages: DataFrame, threshold: float = 0.85) -> DataFrame:
     """The lossless blocking stage of J7 on its own: (title-band ×
     desc-band) equi-join keys plus EXACT per-field bounds as join
     conjuncts (see duplicate_content_pairs for the proofs). Split out so
@@ -1224,13 +1211,7 @@ def dup_candidate_pairs(pages: DataFrame, threshold: float = 0.85,
     At threshold 0.85 these length cuts are provably the best LOSSLESS
     blocking available: the per-field similarity floor is only ~0.57,
     which admits 2.5x length spreads and any character reordering, so
-    content-based keys cannot be complete. For 10^7+ page crawls pass
-    ``approx_minhash=True`` to conjoin a title character-3-gram MinHash
-    OR-band key (r=2 rows per band, b=4 bands): candidate
-    enumeration drops ~5-10x; recall for a true pair with title-shingle
-    Jaccard J is 1-(1-J^2)^4 (>98% at J>=0.8, where 0.85-threshold
-    near-dup titles live) — measured, documented, and OFF by default so
-    the reference-parity path stays exact."""
+    content-based keys cannot be complete."""
     w = DUP_WEIGHTS
     need = (threshold - (1.0 - w["title"])) / w["title"]  # == the desc bound
     if need <= 0:
@@ -1257,27 +1238,6 @@ def dup_candidate_pairs(pages: DataFrame, threshold: float = 0.85,
     band = F.floor(F.log(float(base), F.greatest(F.length("t"), F.lit(1)).cast("double"))).cast("int")
     dband = F.floor(F.log(float(base), F.greatest(F.length("d"), F.lit(1)).cast("double"))).cast("int")
     d = d.withColumn("band", band).withColumn("dband", dband)
-    if approx_minhash:
-        # 8-perm char-3-gram MinHash over the title, banded r=2 -> 4 band
-        # keys; a pair is enumerated iff SOME band matches (OR-blocking
-        # via the exploded band_id join key)
-        sh = F.expr("transform(sequence(1, greatest(length(t) - 2, 1)),"
-                    " i -> substr(t, i, 3))")
-
-        # NB: the permutation lambda must be UNARY — a two-parameter
-        # lambda (incl. the `p=p` default-arg idiom) is interpreted by
-        # Spark's transform() as (element, index), which silently binds
-        # the array index over the permutation constant; the literal then
-        # stringifies a session-counter-named lambda variable and the
-        # "deterministic" hashes drift with session history (found as an
-        # order-dependent recall flake in the full pytest suite)
-        def _perm(p: int):
-            pref = f"{p}:"
-            return lambda s: F.md5(F.concat(F.lit(pref), s))
-
-        sigs = [F.array_min(F.transform(sh, _perm(p))) for p in range(8)]
-        bands_mh = [F.md5(F.concat(sigs[2 * k], sigs[2 * k + 1])) for k in range(4)]
-        d = d.withColumn("mh", F.array(*bands_mh))
     # a valid pair's bands differ by at most 1 on each key, but the
     # url_a<url_b pair order is independent of length order — probe all
     # neighbour combinations (duplicates removed below)
@@ -1287,9 +1247,6 @@ def dup_candidate_pairs(pages: DataFrame, threshold: float = 0.85,
         "dprobe", F.explode(F.array(F.col("dband") - 1, F.col("dband"), F.col("dband") + 1))
     )
     right = d.withColumnRenamed("band", "probe").withColumnRenamed("dband", "dprobe")
-    if approx_minhash:
-        left = left.select("*", F.posexplode("mh").alias("mh_id", "mh_val")).drop("mh")
-        right = right.select("*", F.posexplode("mh").alias("mh_id", "mh_val")).drop("mh")
 
     def feasible(fa, fb, bound):
         la, lb = F.length(fa), F.length(fb)
@@ -1304,9 +1261,6 @@ def dup_candidate_pairs(pages: DataFrame, threshold: float = 0.85,
     )
     if need_h > 0:
         cond = cond & feasible(F.col("a.h"), F.col("b.h"), need_h)
-    if approx_minhash:
-        cond = cond & (F.col("a.mh_id") == F.col("b.mh_id")) & (
-            F.col("a.mh_val") == F.col("b.mh_val"))
     return left.alias("a").join(right.alias("b"), cond).select(
         (F.col("a.fo") <= F.col("b.fo")).alias("a_first"),
         F.col("a.url").alias("url_a"), F.col("a.t").alias("t_a"),
@@ -1316,8 +1270,7 @@ def dup_candidate_pairs(pages: DataFrame, threshold: float = 0.85,
     ).dropDuplicates(["url_a", "url_b"])
 
 
-def duplicate_content_pairs(pages: DataFrame, threshold: float = 0.85,
-                            approx_minhash: bool = False) -> DataFrame:
+def duplicate_content_pairs(pages: DataFrame, threshold: float = 0.85) -> DataFrame:
     """J7 (issue_detector.py:1299-1431): weighted SequenceMatcher
     similarity over (title, meta_description, h1, word_count); pairs with
     score >= threshold are duplicates.
@@ -1333,7 +1286,7 @@ def duplicate_content_pairs(pages: DataFrame, threshold: float = 0.85,
     early exits (which only skip pairs that cannot reach the threshold).
     The per-pair percentage string is formatted Python-side so details
     match the reference's f-string byte-for-byte."""
-    pairs = dup_candidate_pairs(pages, threshold, approx_minhash=approx_minhash)
+    pairs = dup_candidate_pairs(pages, threshold)
     w = DUP_WEIGHTS
 
     def score_pairs(batches):
@@ -1384,33 +1337,9 @@ def duplicate_content_pairs(pages: DataFrame, threshold: float = 0.85,
     )
 
 
-def duplicate_content_issues(pages: DataFrame, threshold: float = 0.85,
-                             blocking: str = "auto") -> DataFrame:
-    """Two issue rows per duplicate pair (issue_detector.py:1404-1417).
-
-    ``blocking``: "exact" = lossless length-band join only (reference
-    parity, default below AUTO_MINHASH_MIN_PAGES); "minhash" = conjoin
-    the title MinHash OR-band key (scale path, ~5-10x fewer candidates,
-    >98% recall at the 0.85 threshold); "auto" = count pages and pick —
-    the count is one cheap driver action paid only by this whole-crawl
-    analysis call, never by the wave loop."""
-    if blocking == "auto":
-        n_pages = pages.count()
-        approx = n_pages >= AUTO_MINHASH_MIN_PAGES
-        if approx:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "duplicate-content check: %d pages >= %d — engaging the "
-                "MinHash OR-band blocking path (recall for a true pair "
-                "with title-shingle Jaccard J is 1-(1-J^2)^4, >98%% at "
-                "J>=0.8; pass blocking='exact' to force the lossless "
-                "band join)", n_pages, AUTO_MINHASH_MIN_PAGES)
-    elif blocking in ("exact", "minhash"):
-        approx = blocking == "minhash"
-    else:
-        raise ValueError(f"unknown duplicate blocking mode: {blocking!r}")
-    p = duplicate_content_pairs(pages, threshold, approx_minhash=approx)
+def duplicate_content_issues(pages: DataFrame, threshold: float = 0.85) -> DataFrame:
+    """Two issue rows per duplicate pair (issue_detector.py:1404-1417)."""
+    p = duplicate_content_pairs(pages, threshold)
     a = p.select(
         F.col("url_a").alias("url"),
         F.concat(F.lit("Content is "), F.col("pct"), F.lit("% similar to "),

@@ -86,14 +86,14 @@ def concat_chunk_packing(
     Physical strategy (scale): the naive plan is one global ordered
     window — a single-partition serialization wall at 10^9 docs. Instead
     the prefix sum is two-phase, the same shape as frontier.py's
-    ordered_seq_by_key: range-repartition on ``order_col`` (disjoint
+    add_global_seq: range-repartition on ``order_col`` (disjoint
     ordered buckets), aggregate one token-sum per bucket (tiny collect:
     one row per partition), broadcast the bucket prefix offsets back,
     and run the cumulative sum per-bucket in parallel.
 
     Returns ``(out, cache_handle)``; the caller unpersists the handle
-    once the result is materialized (same contract as
-    ordered_seq_by_key).
+    once the result is materialized (the contract of schedule_wave's
+    cache handle).
     """
     spark = df.sparkSession
     n_part = default_seq_buckets(spark)

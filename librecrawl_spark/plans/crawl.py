@@ -1,11 +1,20 @@
 """CrawlEngine — the per-wave driver loop (the engine's only imperative
 component; everything inside a wave is a declarative DataFrame plan).
 
+Bootstrap: the seed list, then the base host's sitemap page URLs,
+parsed once on the driver (``_bootstrap_urls``), become the first
+``pending`` rows (url, depth, seq).
+
 Spark lifecycle per wave (SURVEY.md §3 E1 equivalent):
 
     pending -> depth gate -> max_urls cut (seq order) -> politeness quota
-    -> salted repartition -> fetch join -> extract (Arrow) -> explode
-    links -> schedule_wave (dedup/trap/policy windows) -> next frontier
+    -> salted repartition -> fetch join -> size gate -> inline retries
+    -> extract (Arrow) -> explode links -> schedule_wave (dedup/trap/
+    policy windows) -> next frontier
+
+Retries: a 429 resolves inside its own wave (closed form of the
+reference's blocking loop, crawler.py:941-976), so the reference's FIFO
+fetch order holds for retried pages too.
 
 Ordering contract: the reference's concurrency-1 FIFO (deque popleft,
 crawler.py:757-795 + link_manager.py:253-258) equals processing in
@@ -52,14 +61,12 @@ class CrawlResult:
     # unique parsed sitemap page URLs (crawler.py:366) — the J3 input;
     # None when sitemap discovery was off or the crawl resumed
     sitemap_urls: DataFrame | None = None
-    # the crawl's config: issues() defaults its duplication knobs from
-    # here so a 10^7-page crawl lands on the J7 scale path without the
-    # caller re-stating config (None for hand-built results)
+    # the crawl's config: issues() defaults its duplication knobs and
+    # exclusion patterns from here (None for hand-built results)
     config: CrawlConfig | None = None
 
     def issues(self, *, duplication_threshold: float | None = None,
                enable_duplication_check: bool | None = None,
-               duplicate_blocking: str | None = None,
                exclusion_patterns: tuple[str, ...] | None = None) -> DataFrame:
         """The full issue report in one call — the engine analogue of
         the reference's /api/crawl_status issues list (main.py:968-1003):
@@ -73,8 +80,6 @@ class CrawlResult:
         if enable_duplication_check is None:
             enable_duplication_check = (cfg.enable_duplication_check
                                         if cfg else True)
-        if duplicate_blocking is None:
-            duplicate_blocking = getattr(cfg, "duplicate_blocking", "auto")                 if cfg else "auto"
         if exclusion_patterns is None:
             exclusion_patterns = (tuple(cfg.issue_exclusion_patterns)
                                   if cfg else ())
@@ -82,7 +87,6 @@ class CrawlResult:
             self.pages, self.links, sitemap_urls=self.sitemap_urls,
             duplication_threshold=duplication_threshold,
             enable_duplication_check=enable_duplication_check,
-            duplicate_blocking=duplicate_blocking,
             exclusion_patterns=tuple(exclusion_patterns),
         )
 
@@ -122,14 +126,14 @@ class CrawlEngine:
         self.max_waves = max_waves
         self.sitemap_bodies = sitemap_bodies or {}
         self._sitemap_locs_raw: list[str] | None = None
-        self._sitemap_urls_df = None
 
     def _bootstrap_urls(self) -> list[str]:
-        """Seed list + (optionally) the base host's sitemap page URLs in
-        document order, policy-checked — the engine side of
-        crawler.py:269,362-381. The sitemap fetch is seed-time bootstrap
-        (bounded by one sitemap), so the single host row is collected;
-        wave-time scheduling stays fully distributed."""
+        """The crawl's bootstrap: the seed list + (optionally) the base
+        host's sitemap page URLs in document order, policy-checked — the
+        engine side of crawler.py:269,362-381. Like the reference, the
+        sitemap tree is parsed once, on the driver (the base host's row
+        and the robots rows of the locs' hosts are collected); wave-time
+        scheduling stays fully distributed."""
         out = list(self.seed_urls)
         if not self.config.discover_sitemaps:
             return out
@@ -184,84 +188,17 @@ class CrawlEngine:
         return out
 
     # ------------------------------------------------------------------ state
-    # sitemaps above this body size (or any nested sitemapindex) bootstrap
-    # through the DISTRIBUTED path — a 5M-loc sitemap tree must never
-    # run a per-loc Python loop on the driver
-    BOOTSTRAP_DRIVER_MAX_BYTES = 512 * 1024
-
-    def _sitemap_bootstrap_df(self) -> DataFrame | None:
-        """Distributed sitemap bootstrap: (url, okey) of policy-passed
-        page URLs in recursive_locs' depth-first document order, or None
-        to route through the small-N driver loop (_bootstrap_urls).
-
-        Scale path for item crawler.py:269,362-381 at 5M-URL sitemaps:
-        parse (Arrow batches) -> policy_gate (the wave's native/hof/udf
-        split) -> ordered_seq_by_key; the driver never sees a URL."""
-        if not self.config.discover_sitemaps:
-            return None
-        rows = self.hosts.filter(F.col("host") == self.base_domain).select(
-            "sitemap_xml").collect()
-        if not rows or not rows[0]["sitemap_xml"]:
-            return None
-        body = rows[0]["sitemap_xml"]
-        if "<sitemapindex" not in body and len(body) <= self.BOOTSTRAP_DRIVER_MAX_BYTES:
-            return None  # small flat urlset: the driver loop is cheaper
-        from librecrawl_spark.sources.sitemap import discover_sitemap_page_urls_ordered
-
-        spark = self.spark
-        base_hosts = self.hosts.filter(F.col("host") == self.base_domain).select(
-            "host", "sitemap_xml")
-        body_lookup = None
-        if self.sitemap_bodies:
-            # nested-sitemap fetch stand-in; at real scale this is a
-            # (sitemap_url, body) table, not a driver dict
-            body_lookup = spark.createDataFrame(
-                list(self.sitemap_bodies.items()),
-                schema="sitemap_url string, sitemap_xml string",
-            )
-        pages = discover_sitemap_page_urls_ordered(base_hosts, body_lookup)
-        self._sitemap_urls_df = pages.select("url").distinct()
-        urls = pages.select("url", "okey").withColumn("host", FR.host_of(F.col("url")))
-        gated = FR.policy_gate(urls, self.hosts, self.base_domain, self.config,
-                               url_col="url", keep=("okey",))
-        return gated.filter("policy_ok").select("url", "okey")
-
     def _fresh_state(self) -> dict:
         spark = self.spark
-        sm = self._sitemap_bootstrap_df()
-        seed_rows, seed_seen = [], set()
-        seed_urls = self.seed_urls if sm is not None else self._bootstrap_urls()
-        for u in seed_urls:
-            if u not in seed_seen:
-                seed_seen.add(u)
-                seed_rows.append((u, 0, len(seed_rows), 0))
+        seed_urls = list(dict.fromkeys(self._bootstrap_urls()))
         pending = spark.createDataFrame(
-            [(u, d, s, w, 0, 0) for (u, d, s, w) in seed_rows],
-            schema="url string, depth int, seq long, wave int, "
-                   "retry_count int, ready_wave int",
+            [(u, 0, i) for i, u in enumerate(seed_urls)],
+            schema="url string, depth int, seq long",
         )
-        next_seq = len(seed_rows)
-        if sm is not None:
-            # distributed continuation of the seed list: dedup keep-first
-            # in document order (okey is prefix-free, so lexicographic
-            # min == first occurrence in the depth-first traversal), then
-            # contiguous seq after the explicit seeds
-            extra = (
-                sm.join(pending.select("url"), "url", "left_anti")
-                .groupBy("url").agg(F.min("okey").alias("okey"))
-            )
-            extra, seq_cache = FR.ordered_seq_by_key(extra, "okey", start=next_seq)
-            extra = extra.select(
-                "url", F.lit(0).alias("depth"), "seq", F.lit(0).alias("wave"),
-                F.lit(0).alias("retry_count"), F.lit(0).alias("ready_wave"),
-            )
-            pending = pending.unionByName(extra).persist()
-            next_seq = pending.count()
-            if seq_cache is not None:
-                seq_cache.unpersist()
+        next_seq = len(seed_urls)
         return {
             "pending": pending,
-            "seen": pending.select("url", "depth", "seq"),
+            "seen": pending,
             "counts": spark.createDataFrame([], schema="signature string, cnt long"),
             "traps": spark.createDataFrame(
                 [], schema="signature string, example_url string, hits long, first_wave int"
@@ -276,12 +213,10 @@ class CrawlEngine:
             name: self.tio.read(self.spark, name, ck["tables"][name])
             for name in STATE_TABLES
         }
-        # forward-compat: checkpoints written before retry support
-        for col, default in (("retry_count", 0), ("ready_wave", 0)):
-            if col not in st["pending"].columns:
-                st["pending"] = st["pending"].withColumn(col, F.lit(default))
-        # checkpoints written when seen carried an extra hash column
-        st["seen"] = st["seen"].select("url", "depth", "seq")
+        # checkpoints written when pending carried retry/wave columns or
+        # seen an extra hash column
+        for name in ("pending", "seen"):
+            st[name] = st[name].select("url", "depth", "seq")
         st.update(ck["state"])
         return st
 
@@ -374,23 +309,9 @@ class CrawlEngine:
             t0 = time.time()
             pending, seen, counts = st["pending"], st["seen"], st["counts"]
             wave = st["wave"]
-            eligible = pending.filter(
-                (F.col("depth") <= cfg.max_depth) & (F.col("ready_wave") <= wave)
-            )
+            eligible = pending.filter(F.col("depth") <= cfg.max_depth)
             n_eligible = eligible.count()
             if n_eligible == 0:
-                # requeue mode: rows backing off may only be ready in a
-                # future wave — advance simulated time instead of stopping
-                if cfg.retry_mode == "requeue":
-                    nxt = (
-                        pending.filter(
-                            (F.col("depth") <= cfg.max_depth) & (F.col("ready_wave") > wave)
-                        )
-                        .agg(F.min("ready_wave")).collect()[0][0]
-                    )
-                    if nxt is not None:
-                        st["wave"] = int(nxt)
-                        continue
                 st["pending"] = pending.limit(0)
                 if self.tio:
                     self._commit_state(
@@ -403,9 +324,7 @@ class CrawlEngine:
                 eligible.orderBy("seq").limit(fetch_n).agg(F.max("seq")).collect()[0][0]
             )
             fetch_set = eligible.filter(F.col("seq") <= cut_seq)
-            leftover = pending.filter(
-                (F.col("seq") > cut_seq) | (F.col("ready_wave") > wave)
-            )
+            leftover = pending.filter(F.col("seq") > cut_seq)
 
             if self.politeness:
                 fetch_set, deferred = FR.apply_politeness(
@@ -417,14 +336,8 @@ class CrawlEngine:
                 FR.salted_repartition(fetch_set, salt_buckets=cfg.host_salt_buckets),
                 fetch_map, self.documents,
             )
-            fetched = X.apply_size_gate(fetched, cfg.max_file_size)
-            if cfg.retry_mode == "requeue":
-                fetched, requeued = X.split_retries(
-                    fetched, cfg.retries, cfg.delay, wave, cfg.wave_seconds
-                )
-                leftover = leftover.unionByName(requeued)
-            else:
-                fetched = X.resolve_retries_inline(fetched, cfg.retries, cfg.delay)
+            fetched = X.resolve_retries_inline(
+                X.apply_size_gate(fetched, cfg.max_file_size), cfg.retries, cfg.delay)
             pages = X.extract_pages(
                 fetched, self.base_domain,
                 crawl_external=cfg.crawl_external, max_depth=cfg.max_depth,
@@ -481,15 +394,10 @@ class CrawlEngine:
             new_frontier, counts_delta, trap_hits, occ = FR.schedule_wave(
                 cands, seen, counts, self.hosts, self.base_domain, cfg, st["next_seq"],
                 seen_big=st["next_seq"] >= 1_500_000,
-                src_seq_bounds=(int(wave_lo), int(wave_hi)) if wave_lo is not None else None,
+                src_seq_bounds=(int(wave_lo), int(wave_hi)),
                 host_rules=host_rules,
             )
-            new_frontier = (
-                new_frontier.withColumn("wave", F.lit(wave + 1))
-                .withColumn("retry_count", F.lit(0))
-                .withColumn("ready_wave", F.lit(0))
-                .persist()
-            )
+            new_frontier = new_frontier.persist()
             n_new = new_frontier.count()
 
             st["counts"] = (
@@ -500,7 +408,7 @@ class CrawlEngine:
                 )
             )
             st["traps"] = self._merge_traps(st["traps"], trap_hits, wave)
-            st["seen"] = seen.unionByName(new_frontier.select("url", "depth", "seq"))
+            st["seen"] = seen.unionByName(new_frontier)
             # Once the crawl enters the shuffle-hash regime, maintain the
             # seen set HASH-PARTITIONED on the join key so every later
             # wave's anti-join finds both sides co-partitioned (the
@@ -605,9 +513,9 @@ class CrawlEngine:
             "resumed": resumed,
         }
         # J3 input: unique parsed sitemap URLs (crawler.py:366's
-        # list(set(...))) from whichever bootstrap path ran
-        sm_df = self._sitemap_urls_df
-        if sm_df is None and self._sitemap_locs_raw:
+        # list(set(...)))
+        sm_df = None
+        if self._sitemap_locs_raw:
             sm_df = self.spark.createDataFrame(
                 [(u,) for u in dict.fromkeys(self._sitemap_locs_raw)], "url string")
         return CrawlResult(pages_all, links_all, st["seen"], traps_out, lineage,

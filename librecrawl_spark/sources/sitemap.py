@@ -4,13 +4,17 @@ The reference probes well-known sitemap paths + robots ``Sitemap:``
 lines (sitemap_parser.py:15-66) and recursively parses sitemap indexes
 (:68-148). Here:
 
+- ``recursive_locs``: the crawl's sitemap bootstrap. Like the
+  reference, it parses the sitemap tree once, on one thread (the
+  driver), depth-first, page URLs in document order; the reference
+  oracle carries an independent transcription of the same parse.
 - ``sitemap_urls_from_robots``: native line-split + filter over the
   hosts table.
-- ``parse_sitemaps``: Arrow pandas UDF wrapping xml.etree per sitemap
-  body (XML parsing has no Spark builtin), exploding <loc> entries;
-  recursion over <sitemapindex> is an iterative join against a
-  (sitemap_url -> xml) body table, bounded at max_depth=10 like the
-  reference (:80).
+- ``parse_sitemaps`` / ``discover_sitemap_page_urls``: the unordered
+  table form. An Arrow pandas UDF wraps xml.etree per sitemap body (XML
+  parsing has no Spark builtin), exploding <loc> entries; recursion over
+  <sitemapindex> is an iterative join against a (sitemap_url -> xml)
+  body table, bounded at max_depth=10 like the reference (:80).
 """
 
 from __future__ import annotations
@@ -26,9 +30,8 @@ def recursive_locs(body: str | None, body_lookup: dict | None = None,
     sitemap_parser._parse_sitemap (sitemap_parser.py:68-148) exactly:
     depth-first, nested <sitemapindex> entries resolved through
     ``body_lookup`` (sitemap_url -> xml) BEFORE the document's own <url>
-    entries, recursion bounded at max_depth. Used by the engine's
-    seed-time bootstrap (bounded, like the reference's single-threaded
-    discovery pass) and by the test oracle."""
+    entries, recursion bounded at max_depth. The engine's only sitemap
+    bootstrap (CrawlEngine._bootstrap_urls) and the oracle's."""
     import xml.etree.ElementTree as ET
 
     if depth > max_depth or not body:
@@ -140,97 +143,3 @@ def discover_sitemap_page_urls(hosts: DataFrame,
         depth += 1
     return pages.dropDuplicates(["host", "url"])
 
-
-# --------------------------------------------------------------------------
-# order-preserving distributed discovery (S6 at scale)
-# --------------------------------------------------------------------------
-#
-# recursive_locs' depth-first order is: for each <sitemap> entry in
-# document order recurse FIRST, then the document's own <url> entries
-# (sitemap_parser.py:84-148). That order is reconstructed distributedly
-# with a lexicographic key: every parse emits fixed-width segments
-# prefix + ('0' nested | '1' own-url) + zfill(pos, 9), so sorting the
-# final page rows by key replays the driver recursion exactly.
-
-_POS_W = 9  # 10^9 locs per sitemap document
-
-
-def _parse_batch_pos(iterator):
-    import gzip
-    import xml.etree.ElementTree as ET
-
-    import pandas as pd
-
-    def parse_one(host, prefix, body):
-        rows = []
-        if body is None:
-            return rows
-        if isinstance(body, (bytes, bytearray)):
-            if bytes(body[:2]) == b"\x1f\x8b":
-                body = gzip.decompress(bytes(body))
-            body = body.decode("utf-8", "replace")
-        try:
-            root = ET.fromstring(body)
-        except ET.ParseError:
-            return rows
-        for elem in root.iter():
-            if "}" in elem.tag:
-                elem.tag = elem.tag.split("}")[1]
-        for i, sm in enumerate(root.findall(".//sitemap")):
-            loc = sm.find("loc")
-            if loc is not None and loc.text:
-                rows.append({"host": host, "kind": "index",
-                             "loc": loc.text.strip(),
-                             "okey": f"{prefix}0{i:0{_POS_W}d}"})
-        for i, u in enumerate(root.findall(".//url")):
-            loc = u.find("loc")
-            if loc is not None and loc.text:
-                rows.append({"host": host, "kind": "urlset",
-                             "loc": loc.text.strip(),
-                             "okey": f"{prefix}1{i:0{_POS_W}d}"})
-        return rows
-
-    for pdf in iterator:
-        out = []
-        for r in pdf.itertuples(index=False):
-            out.extend(parse_one(r.host, r.prefix, r.sitemap_xml))
-        yield pd.DataFrame(out) if out else pd.DataFrame(
-            columns=["host", "kind", "loc", "okey"]
-        )
-
-
-def _parse_sitemaps_pos(bodies: DataFrame) -> DataFrame:
-    """bodies(host, prefix, sitemap_xml) -> (host, kind, loc, okey)."""
-    return bodies.select("host", "prefix", "sitemap_xml").mapInPandas(
-        _parse_batch_pos, schema="host string, kind string, loc string, okey string"
-    )
-
-
-def discover_sitemap_page_urls_ordered(hosts: DataFrame,
-                                       body_lookup: DataFrame | None = None) -> DataFrame:
-    """Like discover_sitemap_page_urls but returns (host, url, okey) with
-    okey replaying recursive_locs' depth-first document order. Duplicate
-    URLs are NOT collapsed here — the caller dedups keep-first-by-okey
-    (matching the bootstrap's seed_seen semantics)."""
-    parsed = _parse_sitemaps_pos(
-        hosts.select("host", F.lit("").alias("prefix"), "sitemap_xml")
-    )
-    pages = parsed.filter(F.col("kind") == "urlset").select(
-        "host", F.col("loc").alias("url"), "okey")
-    nested = parsed.filter(F.col("kind") == "index").select(
-        "host", F.col("loc").alias("sitemap_url"), F.col("okey").alias("prefix")
-    )
-    depth = 1
-    while body_lookup is not None and depth < MAX_SITEMAP_DEPTH and not nested.isEmpty():
-        bodies = nested.join(body_lookup, "sitemap_url").select(
-            "host", "prefix", "sitemap_xml")
-        parsed = _parse_sitemaps_pos(bodies)
-        pages = pages.unionByName(
-            parsed.filter(F.col("kind") == "urlset").select(
-                "host", F.col("loc").alias("url"), "okey")
-        )
-        nested = parsed.filter(F.col("kind") == "index").select(
-            "host", F.col("loc").alias("sitemap_url"), F.col("okey").alias("prefix")
-        )
-        depth += 1
-    return pages

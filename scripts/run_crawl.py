@@ -79,12 +79,11 @@ def main() -> None:
 
     print(json.dumps({"stats": res.stats, "lineage": res.lineage}))
     if args.out:
-        from librecrawl_spark.operators import issues as I
         from librecrawl_spark.sources import exports as E
 
         res.pages.write.mode("overwrite").parquet(f"{args.out}/pages")
         res.links.write.mode("overwrite").parquet(f"{args.out}/links")
-        I.per_page_issues(res.pages).write.mode("overwrite").parquet(f"{args.out}/issues")
+        res.issues().write.mode("overwrite").parquet(f"{args.out}/issues")
         E.write_pages_csv(res.pages, f"{args.out}/pages_csv")
     spark.stop()
 

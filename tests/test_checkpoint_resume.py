@@ -69,6 +69,49 @@ def test_crash_after_append_before_checkpoint(spark, tmp_path):
     assert snap(resumed) == snap(full)
 
 
+def test_resume_from_wider_state_tables(spark, tmp_path):
+    """A checkpoint whose state tables carry columns the engine no
+    longer writes — pending with (wave, retry_count, ready_wave), seen
+    with url_hash — resumes to the uninterrupted crawl: the resume
+    projects both tables to (url, depth, seq)."""
+    from pyspark.sql import functions as F
+
+    site = generate_site(SITE)
+    full = mk_engine(spark, site).run()
+
+    ckdir = str(tmp_path / "ck_wide")
+    mk_engine(spark, site, checkpoint_dir=ckdir, max_waves=1).run()
+    tio = TableIO(ckdir)
+    ck = tio.load_checkpoint()
+    tables = dict(ck["tables"])
+    pending = tio.read(spark, "pending", tables["pending"])
+    assert pending.columns == ["url", "depth", "seq"]
+    assert pending.count() > 0
+    wide_pending = pending.select(
+        "url", "depth", "seq", F.lit(ck["state"]["wave"]).alias("wave"),
+        F.lit(0).alias("retry_count"), F.lit(0).alias("ready_wave"))
+    wide_seen = tio.read(spark, "seen", tables["seen"]).withColumn(
+        "url_hash", F.xxhash64("url"))
+    tables["pending"] = tio.commit("pending", wide_pending, mode="overwrite")
+    tables["seen"] = tio.commit("seen", wide_seen, mode="overwrite")
+    tio.checkpoint(ck["state"], tables)
+
+    resumed = mk_engine(spark, site, checkpoint_dir=ckdir).run()
+    assert resumed.stats["resumed"] is True
+
+    def seen_of(res):
+        return {(r["url"], r["seq"], r["depth"]) for r in res.seen.collect()}
+
+    def order_of(res):
+        return [(r["url"], r["depth"]) for r in
+                res.pages.orderBy("wave", "seq").select("url", "depth").collect()]
+
+    assert seen_of(resumed) == seen_of(full)
+    assert order_of(resumed) == order_of(full)
+    assert resumed.pages.count() == full.pages.count() == full.stats["crawled"]
+    assert resumed.stats["crawled"] == full.stats["crawled"]
+
+
 def test_fresh_run_ignores_stale_snapshots(spark, tmp_path):
     """A crash before the FIRST checkpoint leaves snapshots but no
     checkpoint.json; a fresh run over the same dir must start clean."""

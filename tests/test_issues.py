@@ -282,7 +282,7 @@ def test_duplicate_scores_follow_fetch_order(spark):
               word_count=300) for r in rows])
     want = sorted(_issue_key(i) for i in det.get_issues())
     got = sorted(_issue_key(r.asDict()) for r in
-                 I.duplicate_content_issues(pg, blocking="exact").collect())
+                 I.duplicate_content_issues(pg).collect())
     assert len(want) == 2 and got == want
 
 
@@ -561,64 +561,3 @@ def test_crawl_result_issue_surface(spark):
     for k in ("total", "valid", "errors", "redirects", "noindex",
               "non_canonical", "not_crawled"):
         assert health[k] == summary[k], (k, health, summary)
-
-
-def test_dup_approx_minhash_scale_path(pages):
-    """The opt-in MinHash-banded blocking (10^7+ page scale path) is a
-    strict subset of the exact path's verified pairs (the verify stage
-    is identical) and keeps every pair on this fixture — its titles sit
-    at shingle-Jaccard >= 0.8 where band recall is ~98.6% and the
-    md5-based minhash is deterministic."""
-    pg, _ = pages
-    exact = {(r["url_a"], r["url_b"])
-             for r in I.duplicate_content_pairs(pg).collect()}
-    approx = {(r["url_a"], r["url_b"])
-              for r in I.duplicate_content_pairs(pg, approx_minhash=True).collect()}
-    assert approx <= exact
-    if approx != exact:
-        # diagnostic dump: exact titles + band hashes of every page in a
-        # dropped pair, so a failure names WHICH input changed
-        urls = sorted({u for p in exact - approx for u in p})
-        sh = F.expr("transform(sequence(1, greatest(length(t) - 2, 1)),"
-                    " i -> substr(t, i, 3))")
-        mk = lambda pref: (lambda s: F.md5(F.concat(F.lit(pref), s)))  # noqa: E731
-        sigs = [F.array_min(F.transform(sh, mk(f"{p}:"))) for p in range(8)]
-        bands = [F.md5(F.concat(sigs[2 * k], sigs[2 * k + 1])) for k in range(4)]
-        rows = (pg.select("url", F.lower(F.trim(F.coalesce(
-                    "title", F.lit("")))).alias("t"))
-                .filter(F.col("url").isin(urls))
-                .withColumn("mh", F.array(*bands)).orderBy("url").collect())
-        for r in rows:
-            print(f"DROPPED {r['url']} t={r['t']!r} "
-                  f"mh={[v[:8] for v in r['mh']]}")
-    assert approx == exact, f"minhash band dropped {exact - approx}"
-
-
-def test_dup_blocking_auto_routes_by_page_count(pages, monkeypatch, caplog):
-    """blocking='auto' (the detect_all_issues default): below
-    AUTO_MINHASH_MIN_PAGES it is byte-identical to the exact path; with
-    the threshold patched below the fixture size it engages the MinHash
-    OR-band conjunct (plan-asserted via the band-key join condition) and
-    on this fixture still finds every pair."""
-    pg, _ = pages
-    exact = {(r["url"], r["details"])
-             for r in I.duplicate_content_issues(pg, blocking="exact").collect()}
-    auto = {(r["url"], r["details"])
-            for r in I.duplicate_content_issues(pg, blocking="auto").collect()}
-    assert auto == exact  # fixture is far below the auto threshold
-
-    monkeypatch.setattr(I, "AUTO_MINHASH_MIN_PAGES", 1)
-    routed = I.duplicate_content_pairs(pg, approx_minhash=True)
-    plan = routed._jdf.queryExecution().optimizedPlan().toString()
-    assert "mh_val" in plan  # the band-key equi-conjunct is in the join
-    import logging
-    with caplog.at_level(logging.WARNING, logger=I.__name__):
-        auto_hi = {(r["url"], r["details"])
-                   for r in I.duplicate_content_issues(pg, blocking="auto").collect()}
-    assert any("MinHash OR-band" in r.message for r in caplog.records)
-    assert auto_hi <= exact
-    assert auto_hi == exact  # >=0.8 title-Jaccard fixture: full recall
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        I.duplicate_content_issues(pg, blocking="nope")

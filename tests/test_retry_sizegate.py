@@ -63,26 +63,6 @@ def test_backoff_honors_retry_after_cap(inline):
             assert p["backoff_total"] == 3.0 * p["retry_count"]
 
 
-def test_requeue_mode_same_outcome_later_wave(spark):
-    cfg_rq = CrawlConfig(max_depth=4, max_urls=80, discover_sitemaps=False,
-                         retry_mode="requeue")
-    oracle, engine = run_both(spark, cfg_rq)
-    rows = {r["url"]: r for r in engine.pages.collect()}
-    # same page set, same final statuses and retry counts as the reference loop
-    assert set(rows) == {p["url"] for p in oracle["pages"]}
-    for p in oracle["pages"]:
-        r = rows[p["url"]]
-        assert r["status_code"] == p["status_code"], p["url"]
-        assert r["retry_count"] == p["retry_count"], p["url"]
-    # retried rows must actually have moved to a later wave than wave 0 peers
-    retried = [r for r in rows.values() if r["retry_count"] > 0]
-    assert retried
-    for r in retried:
-        first_wave = min(x["wave"] for x in rows.values()
-                         if x["depth"] == r["depth"] and x["retry_count"] == 0)
-        assert r["wave"] > first_wave, r["url"]
-
-
 def test_max_file_size_gate_matches_oracle(spark):
     cfg_sz = CrawlConfig(max_depth=4, max_urls=80, discover_sitemaps=False,
                          max_file_size=3000)
