@@ -19,6 +19,10 @@ Scale notes
   aggregate so it probes one row per URL; past the broadcast threshold
   it is a shuffle-hash join against the already hash-partitioned
   candidates (``anti_join_seen``).
+- the policy callback has one implementation, the exact Arrow UDF
+  (``policy_gate`` over ``policy_predicate``), run on the deduped
+  survivors only: one evaluation per URL, the same Spark jobs per wave
+  whatever the URLs look like.
 - global sequence assignment never single-partitions: range-bucket by
   the order key, count per bucket, broadcast prefix offsets, rank
   within each bucket in parallel (``add_global_seq``).
@@ -101,12 +105,17 @@ def add_global_seq(df: DataFrame, order_cols: list[str], start: int, *,
 # policy (robots + scope + extension + patterns) — Arrow UDF
 # --------------------------------------------------------------------------
 
-def make_policy_udf(base_domain: str, config: CrawlConfig):
-    """Vectorized policy gate. Exact ``_should_crawl_url`` semantics
-    (crawler.py:1425-1492) including robots (RobotFileParser per distinct
-    robots.txt body, cached per batch; unreadable => allow,
-    crawler.py:1543-1546). One Arrow batch = thousands of URLs per
-    Python invocation."""
+def policy_predicate(base_domain: str, config: CrawlConfig):
+    """``(url, robots_txt) -> bool``: ``urls.should_crawl`` (exact
+    ``_should_crawl_url``, crawler.py:1425-1492) under ``config``, with
+    robots decided by a RobotFileParser per distinct robots.txt body,
+    cached for the predicate's lifetime. A missing robots.txt (None)
+    allows (crawler.py:1543-1546). Shared by the policy UDF and the
+    driver-side bootstrap."""
+    import urllib.robotparser
+
+    from librecrawl_spark.functions import urls as U
+
     cfg = dict(
         crawl_external=config.crawl_external,
         crawl_subdomains=config.crawl_subdomains,
@@ -117,66 +126,61 @@ def make_policy_udf(base_domain: str, config: CrawlConfig):
     )
     respect_robots = config.respect_robots
     user_agent = config.user_agent
+    parsers: dict = {}
+
+    def allows(txt):
+        if txt is None:
+            return lambda u: True
+        rp = parsers.get(txt)
+        if rp is None:
+            rp = urllib.robotparser.RobotFileParser()
+            rp.parse(txt.splitlines())
+            parsers[txt] = rp
+        return lambda u: rp.can_fetch(user_agent, u)
+
+    def ok(url: str, robots_txt: str | None) -> bool:
+        return U.should_crawl(
+            url, base_domain,
+            robots_allows=allows(robots_txt) if respect_robots else None, **cfg)
+
+    return ok
+
+
+def make_policy_udf(base_domain: str, config: CrawlConfig):
+    """Vectorized policy gate: ``policy_predicate`` per row, one
+    predicate (and so one robots parser cache) per Arrow batch of
+    thousands of URLs."""
 
     @F.pandas_udf(BooleanType())
     def policy_ok(url: pd.Series, robots_txt: pd.Series) -> pd.Series:
-        import urllib.robotparser
-
-        from librecrawl_spark.functions import urls as U
-
-        parsers: dict = {}
-
-        def robots_for(txt):
-            if txt is None:
-                return None  # no robots.txt => allow
-            rp = parsers.get(txt)
-            if rp is None:
-                rp = urllib.robotparser.RobotFileParser()
-                rp.parse(txt.splitlines())
-                parsers[txt] = rp
-            return rp
-
-        out = []
-        for u, txt in zip(url, robots_txt):
-            allows = None
-            if respect_robots:
-                rp = robots_for(txt)
-                allows = (lambda x, rp=rp: rp.can_fetch(user_agent, x)) if rp else (lambda x: True)
-            out.append(U.should_crawl(u, base_domain, robots_allows=allows, **cfg))
-        return pd.Series(out, dtype=bool)
+        ok = policy_predicate(base_domain, config)
+        return pd.Series([ok(u, txt) for u, txt in zip(url, robots_txt)], dtype=bool)
 
     return policy_ok
 
-
-# --------------------------------------------------------------------------
-# native policy fast path (JVM-side robots + scope + extension)
-# --------------------------------------------------------------------------
 
 RULES_SCHEMA = ("host string, rules array<struct<prefix:string,allow:boolean>>, "
                 "allow_all boolean, disallow_all boolean, simple boolean, "
                 "rule1_prefix string, rule1_allow boolean, n_rules int")
 
 # characters urllib.parse.quote never escapes (letters, digits, '_.-~')
-# plus '/' (quote's default safe) — a URL suffix made only of these is a
-# fixed point of the can_fetch normalization (unquote+urlparse+quote)
+# plus '/' (quote's default safe)
 _QUOTE_SAFE = set("abcdefghijklmnopqrstuvwxyz"
                   "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789_.-~/")
-# eligibility used to be the regex ^https?://[^/%]+(/[quote-safe]*)?$;
-# _native_policy_parts now evaluates the same predicate with
-# startswith/translate string ops (codegen-friendly, ~3x cheaper)
 
 
 def compile_robots_rules(hosts: DataFrame, user_agent: str) -> DataFrame:
-    """One-time Python pass over the HOSTS table (tiny next to the
-    frontier): parse each robots.txt with urllib's RobotFileParser and
-    extract the ordered (prefix, allow) rule list of the entry that
-    applies to ``user_agent`` (first matching entry, else the '*'
-    default — exactly can_fetch's selection). The rule paths are stored
-    verbatim as urllib quotes them, so native prefix matching reproduces
-    RuleLine.applies_to bit-for-bit (note: urllib quotes 'Disallow: *'
-    to '%2A', so its match-all special case is dead code — verbatim
-    prefixes are exact). ``simple`` marks rule sets whose prefixes are
-    all quote-safe characters: only those are natively evaluable."""
+    """Per-host robots rules as data: parse each robots.txt with urllib's
+    RobotFileParser and extract the ordered (prefix, allow) rule list of
+    the entry that applies to ``user_agent`` (first matching entry, else
+    the '*' default — exactly can_fetch's selection), stored verbatim as
+    urllib quotes them. ``simple`` marks rule sets whose prefixes are
+    all quote-safe characters.
+
+    The engine does not call this: the policy UDF parses robots itself.
+    The only caller is perfbench's ``wave_bulk`` set-up, which also
+    passes the result to ``schedule_wave(host_rules=)``; both go in the
+    next change to that set-up."""
 
     def run(batches):
         import urllib.robotparser
@@ -211,9 +215,6 @@ def compile_robots_rules(hosts: DataFrame, user_agent: str) -> DataFrame:
                              "allow_all": bool(rp.allow_all),
                              "disallow_all": bool(rp.disallow_all),
                              "simple": simple,
-                             # single-rule fast path: robots_ok evaluates as
-                             # one startswith in whole-stage codegen (the
-                             # array-lambda match below is interpreted-only)
                              "rule1_prefix": rules[0]["prefix"] if rules else None,
                              "rule1_allow": rules[0]["allow"] if rules else None,
                              "n_rules": len(rules)})
@@ -224,77 +225,10 @@ def compile_robots_rules(hosts: DataFrame, user_agent: str) -> DataFrame:
     return hosts.select("host", "robots_txt").mapInPandas(run, schema=RULES_SCHEMA)
 
 
-def _strip_www_once(c):
-    """replace('www.', '', 1) — first occurrence anywhere, natively."""
-    i = F.instr(c, "www.")
-    return F.when(
-        i > 0,
-        F.concat(F.substring(c, F.lit(1), i - 1),
-                 F.substring(c, i + 4, F.length(c))),
-    ).otherwise(c)
-
-
-def _url_parts(url_col):
-    """(host, tail) via pure string ops — no regex in the hot path.
-    host = chars between '://' and the first following '/'; tail = that
-    '/' onward ('' when absent). Only consumed where ``eligible`` has
-    already verified the http(s) scheme, so the instr offsets are valid."""
-    after = url_col.substr(F.instr(url_col, "://") + F.lit(3), F.length(url_col))
-    slash = F.instr(after, "/")
-    host = F.when(slash > 0, after.substr(F.lit(1), slash - 1)).otherwise(after)
-    tail = F.when(slash > 0, after.substr(slash, F.length(after))).otherwise(F.lit(""))
-    return host, tail
-
-
-# characters a netloc may carry for the codegen parse to be
-# urlparse-exact: alnum, dot, dash (hosts), ':' (port), '@'/'_'/'~'
-# (userinfo). Everything else — '?' or '#' before the first '/' (which
-# would end urlparse's netloc early), '%', brackets (urlsplit's
-# bracketed-host validation can raise), space/tab/CR/LF (urlsplit
-# strips or deletes them), non-ASCII (3.11's NFKC netloc check) —
-# routes the row to the exact-Python residue.
-_HOST_SAFE = ("abcdefghijklmnopqrstuvwxyz"
-              "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789.-:@_~")
-
-
-def parse_url_native(url_col):
-    """(parseable, netloc, signature) as pure column expressions —
-    ``urlparse(url).netloc`` (spandoc.frontier_candidates' host field)
-    and C3 ``urls.url_signature`` (link_manager.py:27-41) re-derived
-    from the URL so schedule_wave's keep-first aggregate never carries
-    the strings (a string agg buffer forces SortAggregate; min over the
-    packed long hash-aggregates, measured 2.1x at the 16M wave).
-
-    The gate is regex-free (startswith + translate-delete, same trick
-    as the policy's ``eligible``): lowercase http(s) scheme, netloc
-    chars in _HOST_SAFE, path chars in _SAFE_STR. For gated rows the
-    slices are urlparse-exact because parsing is pure string slicing
-    and no '?', '#' or ';' can appear (so query/fragment/params
-    splitting is vacuous and path == tail), and the path is ASCII so
-    Java [0-9] == Python \\d for the signature's digit runs. Rows
-    outside the gate get NULLs and take the exact-Python residue
-    (make_parse_url_udf), mirroring the policy gate's eligible/udf
-    split — the two short regexp_replaces below run only for the
-    signature value itself."""
-    host_col, tail = _url_parts(url_col)
-    scheme_ok = url_col.startswith("http://") | url_col.startswith("https://")
-    parseable = (
-        scheme_ok
-        & (F.translate(host_col, _HOST_SAFE, "") == "")
-        & (F.translate(tail, _SAFE_STR, "") == "")
-    )
-    sig = F.regexp_replace(tail, "[0-9]+", "\\\\d+")
-    sig = F.regexp_replace(
-        sig,
-        "[a-f0-9]{8}-[a-f0-9]{4}-[a-f0-9]{4}-[a-f0-9]{4}-[a-f0-9]{12}",
-        "\\\\uuid",
-    )
-    return parseable, host_col, sig
-
-
 def make_parse_url_udf():
-    """Exact-Python (host, signature) for the rows parse_url_native
-    gated out — urlparse().netloc + urls.url_signature verbatim. In the
+    """(host, signature) of a URL — ``urlparse(url).netloc``
+    (spandoc.frontier_candidates' host field) and C3
+    ``urls.url_signature`` (link_manager.py:27-41) verbatim. In the
     engine every candidate URL already survived urlparse inside the
     extraction pass, so the netloc except-arm ('' like urlsplit's empty
     authority) is reachable only from synthetic inputs."""
@@ -315,110 +249,6 @@ def make_parse_url_udf():
         return pd.DataFrame({"host": hosts, "signature": sigs})
 
     return parse
-
-
-_SAFE_STR = ("abcdefghijklmnopqrstuvwxyz"
-             "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789_.-~/")
-
-
-def _native_policy_parts(url_col, base_domain: str, config: CrawlConfig):
-    """Shared pieces: (eligible, m, scope_ok, ext_ok, robots-default
-    chain builder). See native_policy_exprs for the contract."""
-    host_col, tail = _url_parts(url_col)
-    m = F.when(tail == "", F.lit("/")).otherwise(tail)
-
-    # equivalent to rlike('^https?://[^/%]+(/[quote-safe]*)?$') but in
-    # whole-stage codegen: startswith + translate-delete instead of a
-    # per-row java.util.regex match (measured ~3x cheaper on the wave)
-    scheme_ok = url_col.startswith("http://") | url_col.startswith("https://")
-    eligible = (
-        scheme_ok
-        & (F.length(host_col) > 0)
-        & ~host_col.contains("%")
-        & (F.translate(tail, _SAFE_STR, "") == "")
-        & F.coalesce("simple", F.lit(True))
-    )
-
-    base_www = base_domain.replace("www.", "", 1)
-    is_internal = _strip_www_once(host_col) == F.lit(base_www)
-    is_sub = host_col.endswith("." + base_domain.replace("www.", ""))
-    scope_ok = (
-        F.when(is_internal, F.lit(True))
-        .when(is_sub, F.lit(config.crawl_subdomains))
-        .otherwise(F.lit(config.crawl_external))
-    )
-
-    p = F.lower(m)  # eligible URLs have no params/query/fragment
-    # split('.')[-1] quirk natively: substring_index after the last dot
-    ext = F.substring_index(p, ".", -1)
-    ext_ok = F.when(~p.contains("."), F.lit(True)).otherwise(
-        ~ext.isin(*config.exclude_extensions)
-        if not config.include_extensions
-        else (~ext.isin(*config.exclude_extensions)
-              & ext.isin(*config.include_extensions))
-    )
-    if not config.exclude_extensions and not config.include_extensions:
-        ext_ok = F.lit(True)
-    return eligible, m, scope_ok, ext_ok
-
-
-def _robots_chain(first_rule):
-    return (
-        F.when(F.coalesce("disallow_all", F.lit(False)), F.lit(False))
-        .when(F.coalesce("allow_all", F.lit(False)), F.lit(True))
-        .otherwise(F.coalesce(first_rule, F.lit(True)))
-    )
-
-
-def native_policy_exprs(url_col, base_domain: str, config: CrawlConfig):
-    """(eligible, m, policy_ok) column expressions reproducing
-    urls.should_crawl exactly for the native-eligible subset:
-
-    - eligible: the URL's post-host suffix is all quote-safe characters
-      (can_fetch's unquote/quote normalization is then the identity, and
-      urlparse params/query/fragment splitting is vacuous) AND the
-      host's compiled rule prefixes are ``simple``. Everything else
-      falls back to the Python UDF — exactness first.
-    - policy_ok: scope (www-insensitive host compare / subdomain /
-      external), robots (ordered first-prefix-match over the compiled
-      rules, default allow; missing robots => allow), extension
-      include/exclude with the reference's split('.')[-1] quirk.
-
-    Requires joined columns: rules, allow_all, disallow_all, simple, and
-    the caller must bind ``m`` as column ``_m_`` (the rules lambda reads
-    it by name). Pattern filters (fnmatch/regex) are NOT natively
-    evaluated — callers must use the UDF path when configured
-    (Python-regex fidelity)."""
-    eligible, m, scope_ok, ext_ok = _native_policy_parts(url_col, base_domain, config)
-    if config.respect_robots:
-        first_rule = F.expr(
-            "try_element_at(filter(rules, r -> startswith(_m_, r.prefix)), 1).allow"
-        )
-        robots_ok = _robots_chain(first_rule)
-    else:
-        robots_ok = F.lit(True)
-    return eligible, m, (scope_ok & robots_ok & ext_ok)
-
-
-def native_policy_exprs_fast(url_col, base_domain: str, config: CrawlConfig):
-    """Single-rule variant of native_policy_exprs: robots matching is one
-    column-level startswith against the compiled ``rule1_prefix``, so the
-    whole policy stays inside whole-stage codegen (the array-lambda rule
-    walk above is interpreted-only and measurably dominates the wave).
-    Valid ONLY for rows with n_rules <= 1 — schedule_wave routes multi-
-    rule hosts to the general expression. Requires joined columns:
-    rule1_prefix, rule1_allow, allow_all, disallow_all, simple."""
-    eligible, m, scope_ok, ext_ok = _native_policy_parts(url_col, base_domain, config)
-    if config.respect_robots:
-        r1 = F.when(m.startswith(F.col("rule1_prefix")), F.col("rule1_allow"))
-        robots_ok = _robots_chain(r1)
-    else:
-        robots_ok = F.lit(True)
-    return eligible, m, (scope_ok & robots_ok & ext_ok)
-
-
-def _can_use_native_policy(config: CrawlConfig) -> bool:
-    return not config.include_patterns and not config.exclude_patterns
 
 
 # --------------------------------------------------------------------------
@@ -447,89 +277,25 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame,
 # wave scheduling: dedup -> trap -> policy -> new frontier
 # --------------------------------------------------------------------------
 
-def policy_gate_lazy(df: DataFrame, hosts: DataFrame, base_domain: str,
-                     config: CrawlConfig, host_rules: DataFrame | None = None,
-                     *, url_col: str = "clean_url",
-                     keep: tuple[str, ...] = ()) -> tuple[DataFrame, DataFrame]:
-    """Native policy in ONE pass + a deferred UDF residue.
-
-    Returns ``(lazy, udf_part)``:
-
-    - ``lazy``: (url_col, *keep, policy_ok) for EVERY input row, where
-      policy_ok is the native verdict for quote-safe/simple-rule rows and
-      NULL for rows that need the Python policy UDF (non-http scheme,
-      quoted chars, complex robots prefixes). Single scan; the CaseWhen
-      keeps single-rule rows on the codegen'd fast expression and only
-      multi-rule rows pay the interpreted array-lambda walk.
-    - ``udf_part``: the exact UDF verdicts for the NULL rows, same slim
-      schema, derived from the same join lineage (``policy_gate`` over
-      the residue). Callers evaluate it ONLY when the lazy frame
-      actually contains NULLs (schedule_wave piggybacks that count on
-      its probe action) — steady-state waves of quote-safe URLs never
-      pay a second reduce-side pass for the residue.
-
-    Requires ``_can_use_native_policy(config)``."""
-    assert _can_use_native_policy(config)
-    slim = (url_col, *keep, "policy_ok")
-    if host_rules is None:
-        host_rules = compile_robots_rules(hosts, config.user_agent)
-    j = df.join(
-        F.broadcast(host_rules.select(
-            "host", "rules", "allow_all", "disallow_all", "simple",
-            "rule1_prefix", "rule1_allow", "n_rules")),
-        "host", "left",
-    )
-    eligible, m, fast_ok = native_policy_exprs_fast(
-        F.col(url_col), base_domain, config
-    )
-    _, _, hof_ok = native_policy_exprs(F.col(url_col), base_domain, config)
-    # df's host/signature came from parse_url_native and are NULL
-    # outside its gate — those rows must take the exact residue (a
-    # NULL host would otherwise fall through the robots chain's
-    # missing-host allow-default even when the real host has rules)
-    eligible = eligible & F.col("host").isNotNull()
-    single = (F.coalesce("n_rules", F.lit(0)) <= 1) if config.respect_robots \
-        else F.lit(True)
-    # NULL-as-"needs udf" is sound: the native verdict itself is never
-    # NULL (scope/ext are literal-closed whens, the robots chain
-    # coalesces missing-host rule columns to the allow default)
-    lazy = (
-        j.withColumn("_m_", m)
-        .withColumn(
-            "policy_ok",
-            F.when(eligible, F.when(single, fast_ok).otherwise(hof_ok)),
-        )
-        .select(*slim)
-    )
-    udf_part = policy_gate(j.filter(~eligible), hosts, base_domain, config,
-                           url_col=url_col, keep=keep)
-    return lazy, udf_part
-
-
 def policy_gate(df: DataFrame, hosts: DataFrame, base_domain: str,
                 config: CrawlConfig, *, url_col: str = "clean_url",
                 keep: tuple[str, ...] = ()) -> DataFrame:
     """Append ``policy_ok`` (robots + scope + extension + patterns,
-    crawler.py:1425-1492) from the exact Arrow policy UDF, row by row.
+    crawler.py:1425-1492) from the exact Arrow policy UDF, row by row —
+    the frontier's only policy path, under every config.
 
-    Two callers: schedule_wave when include/exclude patterns are
-    configured (the native expressions do not evaluate fnmatch/regex
-    patterns), and policy_gate_lazy's residue. ``df`` carries
-    ``url_col`` plus the ``host`` (and, when kept, ``signature``) that
-    parse_url_native derived — NULL outside its gate, so the exact
-    Python parse completes them first (the host drives the robots
-    lookup). The output projects (url_col, *keep, policy_ok)."""
+    schedule_wave calls it on the deduped survivors, so each URL is
+    evaluated once. ``host`` (which drives the robots lookup) and
+    ``signature`` come from one Python parse of ``url_col``
+    (``make_parse_url_udf``); ``keep`` may name ``signature``. The
+    output projects (url_col, *keep, policy_ok)."""
     pu = make_parse_url_udf()(F.col(url_col))
-    df = df.withColumn("_pu", pu).withColumn(
-        "host", F.coalesce(F.col("host"), F.col("_pu.host"))
-    )
-    if "signature" in keep:
-        df = df.withColumn(
-            "signature", F.coalesce(F.col("signature"), F.col("_pu.signature"))
-        )
     policy_udf = make_policy_udf(base_domain, config)
     return (
-        df.drop("_pu")
+        df.withColumn("_pu", pu)
+        .select("*", F.col("_pu.host").alias("host"),
+                F.col("_pu.signature").alias("signature"))
+        .drop("_pu")
         .join(F.broadcast(hosts.select("host", "robots_txt")), "host", "left")
         .withColumn("policy_ok", policy_udf(F.col(url_col), F.col("robots_txt")))
         .select(url_col, *keep, "policy_ok")
@@ -554,6 +320,11 @@ def schedule_wave(
 
     ``src_seq_bounds``: the (min, max) seq of the wave's fetched pages —
     the range buckets of the seq assignment are cut from it.
+
+    ``host_rules`` is accepted and unused: the policy UDF reads robots
+    from ``hosts``. perfbench's ``wave_bulk`` is the only caller that
+    passes it (with ``compile_robots_rules``' output); both go in the
+    next change to that workload's set-up.
 
     Exact-semantics derivation (link_manager.py:83-118, concurrency-1):
     within a wave, candidates are processed in (src_seq, link_idx) order.
@@ -629,45 +400,19 @@ def schedule_wave(
     # anti-join because occ_hot inner-joins `first` on clean_url and seen
     # URLs are absent from `first`.
     first = anti_join_seen(first, seen, big=seen_big)
-    # signature/host re-derived on the deduped survivors (one eval per
-    # URL, codegen); rows outside the exact-native gate carry NULLs and
-    # are completed by the policy residue (their policy_ok is NULL too,
-    # so the probe's null count routes them to policy_gate's parse)
-    _par, _netloc, _sig = parse_url_native(F.col("clean_url"))
-    first = first.select(
-        "clean_url", "_p",
-        F.when(_par, _sig).alias("signature"),
-        F.when(_par, _netloc).alias("host"),
-    )
     unpack = dict(
         src_seq=F.shiftright(F.col("_p"), 28).cast("long"),
         link_idx=F.shiftright(F.col("_p"), 8).bitwiseAND(F.lit((1 << 20) - 1)).cast("int"),
         depth=F.col("_p").bitwiseAND(F.lit(0xFF)).cast("int"),
     )
 
-    # 2. policy gate on deduped rows (URL-pure => one evaluation per URL).
-    # Native configs take the LAZY gate: ONE scan produces the verdict
-    # for every quote-safe/simple-rule row and NULL for the (usually
-    # empty) residue that needs the exact Python policy. The NULL count
-    # piggybacks on the probe action below, so a steady-state wave never
-    # materializes the UDF branch at all — no second reduce-side pass
-    # over the dedup shuffle, no Python worker spin-up. Only when a wave
-    # actually carries quoted/odd URLs does it pay one extra pass to fold
-    # the UDF verdicts in (and re-probe, since wave_acc/bucket counts
-    # must be computed over the completed verdicts).
+    # 2. policy gate on deduped rows (URL-pure => one evaluation per URL);
+    # it also re-derives signature/host from the surviving keys.
     # The ONLY cache this wave pins is the slim post-policy projection
-    # (url, packed order key, signature, policy_ok) — the fat
-    # robots_txt/rules columns never hit storage.
-    lazy_udf = None
-    if _can_use_native_policy(config):
-        lazy, lazy_udf = policy_gate_lazy(
-            first, hosts, base_domain, config, host_rules,
-            url_col="clean_url", keep=("_p", "signature"))
-        first = lazy.persist()
-    else:
-        first = policy_gate(first, hosts, base_domain, config,
-                            url_col="clean_url", keep=("_p", "signature")).persist()
-    pre = first
+    # (url, packed order key, signature, policy_ok) — the fat robots_txt
+    # column never hits storage.
+    first = policy_gate(first, hosts, base_domain, config,
+                        url_col="clean_url", keep=("_p", "signature")).persist()
 
     # packed lead bounds for the seq-assignment range buckets: _p order
     # IS (src_seq, link_idx) order, and sorting one long beats a
@@ -677,16 +422,16 @@ def schedule_wave(
     spark = candidates.sparkSession
     priors = pattern_counts.withColumnRenamed("cnt", "prior")
 
-    def _probe(fr, count_nulls):
+    def _probe(fr):
         """3. hot/cold signature split — combined probe: ONE action over
         ONE pass of `fr` returns the threshold-crossing signatures AND
         (optimistically, assuming none) the per-bucket row counts the
-        seq assignment needs AND the lazy-policy NULL count — the same
-        job also materializes the `fr` cache. A GROUPING SETS aggregate
-        ((signature), (_bkt)) folds what used to be a three-branch
-        union (each branch re-scanning the cache, each shuffling
-        separately, each an AQE query-stage tree of its own) into a
-        single shuffle: the map side emits two partial-agg rows per
+        seq assignment needs — the same job also materializes the `fr`
+        cache, so each wave runs the policy UDF once, whatever its URLs
+        look like. A GROUPING SETS aggregate ((signature), (_bkt))
+        folds what used to be a three-branch union (each branch
+        re-scanning the cache, each shuffling separately, each an AQE
+        query-stage tree of its own) into a single shuffle: the map side emits two partial-agg rows per
         input row, combined to #signatures + #buckets rows before the
         exchange, and only bucket rows plus threshold-crossers survive
         to the collect. This halves the wave's per-job fixed cost at
@@ -704,7 +449,6 @@ def schedule_wave(
             .agg(
                 F.grouping_id().alias("gid"),
                 sig_acc.alias("acc"),
-                F.sum(F.col("policy_ok").isNull().cast("long")).alias("nulls"),
             )
         )
         # bucket rows always survive; signature rows only when they
@@ -722,22 +466,12 @@ def schedule_wave(
         hot_rows = [(r["signature"], r["prior"] or 0) for r in rows if r["gid"] == 1]
         bkts = {int(r["_bkt"]): r["acc"]
                 for r in rows if r["gid"] == 2 and r["acc"]}
-        n_null = (sum(r["nulls"] for r in rows if r["gid"] == 2)
-                  if count_nulls else 0)
         hot = bool(hot_rows)
         hs = spark.createDataFrame(hot_rows or [],
                                    "signature string, prior long").coalesce(1)
-        return hs, bkts, hot, n_null
+        return hs, bkts, hot
 
-    hot_sigs, bkt_counts, has_hot, n_null = _probe(first, lazy_udf is not None)
-    if n_null:
-        # rare wave: some URLs need the exact Python policy — fold the
-        # UDF verdicts in and re-probe over the completed verdicts
-        exact = (first.filter(F.col("policy_ok").isNotNull())
-                 .unionByName(lazy_udf).persist())
-        first.unpersist()
-        first = pre = exact
-        hot_sigs, bkt_counts, has_hot, _ = _probe(first, False)
+    hot_sigs, bkt_counts, has_hot = _probe(first)
 
     cold_accepted = (
         (first.join(hot_sigs, "signature", "left_anti") if has_hot else first)
@@ -756,7 +490,7 @@ def schedule_wave(
         trap_hits = spark.createDataFrame(
             [], schema="signature string, hits long, example_url string"
         )
-        return new_frontier, counts_delta, trap_hits, _CacheHandles([pre, accepted])
+        return new_frontier, counts_delta, trap_hits, _CacheHandles([first, accepted])
 
     occ = occ.persist()
 
@@ -828,7 +562,7 @@ def schedule_wave(
             F.min_by(F.col("clean_url"), F.struct("src_seq", "link_idx")).alias("example_url"),
         )
     )
-    return new_frontier, counts_delta, trap_hits, _CacheHandles([occ, pre, accepted])
+    return new_frontier, counts_delta, trap_hits, _CacheHandles([occ, first, accepted])
 
 
 class _CacheHandles:
@@ -852,7 +586,9 @@ def host_of(url_col):
     scheme guard is kept belt-and-braces: a stray non-http URL (e.g.
     ftp://h0.example/x) must yield '' — not the real host — or it would
     consume that host's politeness quota. Still pure codegen, no regex."""
-    host, _ = _url_parts(url_col)
+    after = url_col.substr(F.instr(url_col, "://") + F.lit(3), F.length(url_col))
+    slash = F.instr(after, "/")
+    host = F.when(slash > 0, after.substr(F.lit(1), slash - 1)).otherwise(after)
     return F.when(
         url_col.startswith("http://") | url_col.startswith("https://"), host
     ).otherwise(F.lit(""))

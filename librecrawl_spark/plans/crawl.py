@@ -137,9 +137,6 @@ class CrawlEngine:
         out = list(self.seed_urls)
         if not self.config.discover_sitemaps:
             return out
-        import urllib.robotparser
-
-        from librecrawl_spark.functions import urls as U
         from librecrawl_spark.sources.sitemap import recursive_locs
 
         rows = self.hosts.filter(F.col("host") == self.base_domain).select(
@@ -153,38 +150,14 @@ class CrawlEngine:
         locs = recursive_locs(rows[0]["sitemap_xml"], self.sitemap_bodies)
         self._sitemap_locs_raw = list(locs)
 
-        cfg = self.config
         loc_hosts = {urlparse(u).netloc for u in locs}
         robots_by_host = {
             r["host"]: r["robots_txt"]
             for r in self.hosts.filter(F.col("host").isin(*loc_hosts))
             .select("host", "robots_txt").collect()
         } if loc_hosts else {}
-        parsers: dict = {}
-
-        def allows(u):
-            h = urlparse(u).netloc
-            txt = robots_by_host.get(h)
-            if txt is None:
-                return True  # unreadable robots => allow (crawler.py:1543-1546)
-            if h not in parsers:
-                rp = urllib.robotparser.RobotFileParser()
-                rp.parse(txt.splitlines())
-                parsers[h] = rp
-            return parsers[h].can_fetch(cfg.user_agent, u)
-
-        for u in locs:
-            if U.should_crawl(
-                u, self.base_domain,
-                crawl_external=cfg.crawl_external,
-                crawl_subdomains=cfg.crawl_subdomains,
-                include_extensions=tuple(cfg.include_extensions),
-                exclude_extensions=tuple(cfg.exclude_extensions),
-                include_patterns=tuple(cfg.include_patterns),
-                exclude_patterns=tuple(cfg.exclude_patterns),
-                robots_allows=allows if cfg.respect_robots else None,
-            ):
-                out.append(u)
+        ok = FR.policy_predicate(self.base_domain, self.config)
+        out += [u for u in locs if ok(u, robots_by_host.get(urlparse(u).netloc))]
         return out
 
     # ------------------------------------------------------------------ state
@@ -276,13 +249,6 @@ class CrawlEngine:
 
         fetch_map = X.resolve_redirects(X.http_meta(self.documents)).persist()
         fetch_map.count()
-
-        # robots rules compile once per crawl (hosts table is static);
-        # every wave's native policy fast path reuses the broadcast
-        host_rules = None
-        if FR._can_use_native_policy(cfg):
-            host_rules = FR.compile_robots_rules(self.hosts, cfg.user_agent).persist()
-            host_rules.count()
 
         ck = self.tio.load_checkpoint() if self.tio else None
         if self.tio:
@@ -395,7 +361,6 @@ class CrawlEngine:
                 cands, seen, counts, self.hosts, self.base_domain, cfg, st["next_seq"],
                 seen_big=st["next_seq"] >= 1_500_000,
                 src_seq_bounds=(int(wave_lo), int(wave_hi)),
-                host_rules=host_rules,
             )
             new_frontier = new_frontier.persist()
             n_new = new_frontier.count()
