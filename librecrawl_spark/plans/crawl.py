@@ -7,7 +7,8 @@ parsed once on the driver (``_bootstrap_urls``), become the first
 
 Spark lifecycle per wave (SURVEY.md §3 E1 equivalent):
 
-    pending -> depth gate -> max_urls cut (seq order) -> politeness quota
+    pending -> depth gate -> max_urls cut (seq order) -> politeness cut
+    (the wave ends just before the first row over its host's quota)
     -> salted repartition -> fetch join -> size gate -> inline retries
     -> extract (Arrow) -> explode links -> schedule_wave (dedup/trap/
     policy windows) -> next frontier
@@ -293,9 +294,15 @@ class CrawlEngine:
             leftover = pending.filter(F.col("seq") > cut_seq)
 
             if self.politeness:
-                fetch_set, deferred = FR.apply_politeness(
+                # end the wave just before the first over-quota row, so
+                # waves stay contiguous seq ranges (the first row always
+                # has host rank 1, so a wave fetches at least one page)
+                _, deferred = FR.apply_politeness(
                     fetch_set, self.hosts, cfg.wave_seconds)
-                leftover = leftover.unionByName(deferred)
+                over = deferred.agg(F.min("seq")).collect()[0][0]
+                if over is not None:
+                    fetch_set = fetch_set.filter(F.col("seq") < over)
+                    leftover = pending.filter(F.col("seq") >= over)
 
             fetch_set = fetch_set.withColumn("wave", F.lit(wave))
             fetched = X.join_fetch(

@@ -26,6 +26,8 @@ import os
 import time
 import uuid
 
+from pyspark.sql.types import StructType
+
 
 class TableIO:
     def __init__(self, root: str):
@@ -190,11 +192,11 @@ class TableIO:
             raise FileNotFoundError(f"table {name} has no snapshots under {self.root}")
         sid = snaps[-1] if snapshot_id is None else snapshot_id
         m = self._manifest(name, sid)
+        schema = StructType.fromJson(json.loads(m["schema"]))
         if not m["files"]:
-            from pyspark.sql.types import StructType
-
-            return spark.createDataFrame([], StructType.fromJson(json.loads(m["schema"])))
-        return spark.read.parquet(*m["files"])
+            return spark.createDataFrame([], schema)
+        # the manifest's schema spares Spark a schema-inference job
+        return spark.read.schema(schema).parquet(*m["files"])
 
     # --- crawl-level checkpoint (atomic multi-table pin) -------------------
     def checkpoint(self, state: dict, table_snapshots: dict[str, int]) -> None:

@@ -152,6 +152,23 @@ def test_tableio_empty_commit(spark, tmp_path):
     assert out.columns == ["id", "v"]
 
 
+def test_tableio_read_runs_no_job(spark, tmp_path):
+    """The manifest stores the schema, so a read infers nothing: no
+    Spark job runs until the caller acts on the DataFrame."""
+    tio = TableIO(str(tmp_path / "r"))
+    df = spark.createDataFrame([(1, "a", [1.5])], "id long, v string, xs array<double>")
+    tio.commit("t", df)
+    sc = spark.sparkContext
+    sc.setJobGroup("tableio-read", "TableIO.read")
+    try:
+        out = tio.read(spark, "t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("tableio-read")) == []
+    assert out.schema == df.schema
+    assert out.collect() == df.collect()
+
+
 def test_tableio_expire_snapshots_vacuums_unreferenced(spark, tmp_path):
     import os
 

@@ -11,12 +11,13 @@ from librecrawl_spark.oracle.refcrawl import ReferenceCrawlOracle
 from librecrawl_spark.plans.crawl import CrawlEngine
 
 
-def run_both(spark, site_cfg, cfg):
+def run_both(spark, site_cfg, cfg, **engine_kw):
     site = generate_site(site_cfg)
     seeds = [s["url"] for s in site.seeds]
     oracle = ReferenceCrawlOracle(site.documents, site.hosts, site.base_url, cfg).run(seeds)
     docs, hosts, _ = site_to_spark(spark, site)
-    engine = CrawlEngine(spark, docs, hosts, site.base_url, cfg, seed_urls=seeds).run()
+    engine = CrawlEngine(spark, docs, hosts, site.base_url, cfg, seed_urls=seeds,
+                         **engine_kw).run()
     return oracle, engine
 
 
@@ -152,6 +153,22 @@ class TestExternalMode:
         assert got == oracle["fetch_order"]
         hosts = {u.split("/")[2] for u, _ in got}
         assert len(hosts) > 1
+
+
+def test_politeness_keeps_reference_fetch_order(spark):
+    """A politeness cut ends the wave before the first over-quota row,
+    so waves stay contiguous seq ranges and the fetch order, seen seqs
+    and page count equal the reference's blocking token bucket at
+    concurrency 1 (site1.example has crawl-delay 2)."""
+    cfg = CrawlConfig(max_depth=3, max_urls=60, discover_sitemaps=False,
+                      crawl_external=True, wave_seconds=2.0)
+    oracle, engine = run_both(spark, SMALL, cfg, politeness=True)
+    got = [(r["url"], r["depth"]) for r in
+           engine.pages.orderBy("wave", "seq").select("url", "depth").collect()]
+    assert got == oracle["fetch_order"]
+    got_seen = {(r["url"], r["seq"], r["depth"]) for r in engine.seen.collect()}
+    assert got_seen == {(u, i, d) for i, (u, d) in enumerate(oracle["seen"])}
+    assert engine.stats["crawled"] == oracle["stats"]["crawled"] == len(got)
 
 
 class TestSitemapBootstrap:

@@ -1,5 +1,5 @@
 """Unit tests for the operator library: dedup, similarity, text,
-multimodal, sitemap, lint, exports, incremental reads."""
+sitemap, lint, exports, incremental reads."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -364,486 +364,6 @@ class TestText:
                     mx * (len(bg) - 1) / tok_chars, 6)
 
 
-class TestMultimodal:
-    def test_image_features_deterministic(self, spark):
-        from librecrawl_spark.operators.multimodal import image_features, synthetic_media
-
-        m = synthetic_media(spark, 12)
-        a = sorted((r["media_id"], r["phash"]) for r in image_features(m).collect())
-        b = sorted((r["media_id"], r["phash"]) for r in image_features(m).collect())
-        assert a == b and len(a) == 8  # 2/3 of 12 are images
-
-    def test_real_decode_raises(self, spark):
-        from librecrawl_spark.operators.multimodal import image_features, synthetic_media
-
-        m = synthetic_media(spark, 3)
-        with pytest.raises(Exception):
-            image_features(m, fake=False).collect()
-
-    def test_header_parse_pure(self):
-        from librecrawl_spark.operators.multimodal import (
-            make_test_jpeg_header, make_test_png, parse_image_header)
-
-        assert parse_image_header(make_test_png(7, 11)) == ("image/png", 7, 11)
-        assert parse_image_header(make_test_jpeg_header(640, 480)) == ("image/jpeg", 640, 480)
-        gif = b"GIF89a" + (13).to_bytes(2, "little") + (9).to_bytes(2, "little") + b"\x00" * 4
-        assert parse_image_header(gif) == ("image/gif", 13, 9)
-        assert parse_image_header(b"not an image") is None
-        assert parse_image_header(b"") is None
-
-    def test_webp_header_parse_pure(self):
-        from librecrawl_spark.operators.multimodal import (
-            make_test_webp_vp8l, parse_image_header)
-
-        assert parse_image_header(make_test_webp_vp8l(320, 200)) == ("image/webp", 320, 200)
-        assert parse_image_header(make_test_webp_vp8l(1, 1)) == ("image/webp", 1, 1)
-        assert parse_image_header(make_test_webp_vp8l(16383, 16383)) \
-            == ("image/webp", 16383, 16383)
-        # VP8X extended header: 24-bit LE canvas dims minus one
-        vp8x = (b"RIFF" + (22).to_bytes(4, "little") + b"WEBP"
-                + b"VP8X" + (10).to_bytes(4, "little")
-                + b"\x00" * 4 + (639).to_bytes(3, "little") + (479).to_bytes(3, "little"))
-        assert parse_image_header(vp8x) == ("image/webp", 640, 480)
-        # RIFF but not WEBP falls through
-        assert parse_image_header(b"RIFF\x00\x00\x00\x00WAVEfmt " + b"\x00" * 20) is None
-
-    def test_image_features_real_dimensions(self, spark):
-        """Real container bytes in the fixture -> real width/height from
-        the header parser (not the fake decoder's hash dims)."""
-        from librecrawl_spark.operators.multimodal import image_features, synthetic_media
-
-        m = synthetic_media(spark, 12)
-        meta = {r["media_id"]: (r["meta"]["width"], r["meta"]["height"])
-                for r in m.filter("kind = 'image'").collect()}
-        out = {r["media_id"]: (r["width"], r["height"])
-               for r in image_features(m).collect()}
-        assert out == meta
-
-
-    def test_png_pixel_decode_all_filters_roundtrip(self):
-        """decode_png is a REAL decoder: every PNG filter type
-        (None/Sub/Up/Average/Paeth) round-trips a random RGB image to
-        the exact Rec.601 luma grid."""
-        import random
-        import struct
-        import zlib
-
-        from librecrawl_spark.operators.multimodal import decode_png
-
-        def enc(pixel_rows, filt, ctype=2):
-            nch = {0: 1, 2: 3, 6: 4}[ctype]
-            w, h = len(pixel_rows[0]), len(pixel_rows)
-
-            def chunk(typ, data):
-                return (struct.pack(">I", len(data)) + typ + data
-                        + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF))
-
-            raw, prev = b"", bytes(w * nch)
-            for row in pixel_rows:
-                line = bytes(v for px in row for v in px)
-                out = bytearray(line)
-                if filt == 1:
-                    for i in range(len(line) - 1, nch - 1, -1):
-                        out[i] = (line[i] - line[i - nch]) & 0xFF
-                elif filt == 2:
-                    for i in range(len(line)):
-                        out[i] = (line[i] - prev[i]) & 0xFF
-                elif filt == 3:
-                    for i in range(len(line)):
-                        a = line[i - nch] if i >= nch else 0
-                        out[i] = (line[i] - ((a + prev[i]) >> 1)) & 0xFF
-                elif filt == 4:
-                    for i in range(len(line)):
-                        a = line[i - nch] if i >= nch else 0
-                        b, c = prev[i], (prev[i - nch] if i >= nch else 0)
-                        p = a + b - c
-                        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                        pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                        out[i] = (line[i] - pr) & 0xFF
-                raw += bytes([filt]) + bytes(out)
-                prev = line
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-            return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
-
-        random.seed(5)
-        px = [[(random.randrange(256), random.randrange(256), random.randrange(256))
-               for _ in range(13)] for _ in range(9)]
-        want = [[round(0.299 * r + 0.587 * g + 0.114 * b) for (r, g, b) in row]
-                for row in px]
-        for filt in range(5):
-            assert decode_png(enc(px, filt)) == want, filt
-        # RGBA: alpha ignored
-        pxa = [[(r, g, b, 17) for (r, g, b) in row] for row in px]
-        assert decode_png(enc(pxa, 4, ctype=6)) == want
-        # grayscale
-        gray = [[(v,) for v in row] for row in want]
-        assert decode_png(enc(gray, 2, ctype=0)) == want
-        # not-a-png / truncated -> None, never raises
-        assert decode_png(b"\xff\xd8jpeg") is None
-        assert decode_png(enc(px, 0)[:40]) is None
-
-    def test_png_real_features_analytic_oracles(self):
-        """dHash + mean_luma on analytically-known images: a strictly
-        left-to-right-brightening gradient hashes to ALL-ONES (every
-        adjacent grid pair increases), a top-to-bottom gradient to
-        ALL-ZEROS (no horizontal change), both with mean_luma exactly
-        0.5; a solid-color PNG hashes to all-zeros with the Rec.601
-        luma of its color."""
-        import struct
-        import zlib
-
-        from librecrawl_spark.operators.multimodal import (
-            make_test_png, real_image_features)
-
-        def enc_rgb(pixel_rows):
-            w, h = len(pixel_rows[0]), len(pixel_rows)
-
-            def chunk(typ, data):
-                return (struct.pack(">I", len(data)) + typ + data
-                        + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF))
-
-            raw = b"".join(bytes([0]) + bytes(v for px in row for v in px)
-                           for row in pixel_rows)
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-            return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
-
-        grad_h = [[((x * 255) // 15,) * 3 for x in range(16)] for _ in range(16)]
-        grad_v = [[((y * 255) // 15,) * 3 for _ in range(16)] for y in range(16)]
-        fh = real_image_features(enc_rgb(grad_h))
-        fv = real_image_features(enc_rgb(grad_v))
-        assert fh["phash"] == "f" * 16 and fh["mean_luma"] == 0.5
-        assert fv["phash"] == "0" * 16 and fv["mean_luma"] == 0.5
-
-        f = real_image_features(make_test_png(20, 10, rgb=(200, 30, 30)))
-        luma = round(0.299 * 200 + 0.587 * 30 + 0.114 * 30)
-        assert f == {"width": 20, "height": 10, "phash": "0" * 16,
-                     "mean_luma": round(luma / 255.0, 6)}
-
-    def test_image_features_real_for_png_fake_for_jpeg(self, spark):
-        """The mapInPandas pipeline serves REAL pixel features for PNG
-        payloads (the fixture's solid-red PNGs -> Rec.601 luma, zero
-        dHash) and the deterministic fake for codec-needing formats."""
-        from librecrawl_spark.operators.multimodal import (
-            image_features, synthetic_media)
-
-        m = synthetic_media(spark, 12)
-        mimes = {r["media_id"]: r["meta"]["mime"]
-                 for r in m.filter("kind = 'image'").collect()}
-        luma = round(round(0.299 * 200 + 0.587 * 30 + 0.114 * 30) / 255.0, 6)
-        for r in image_features(m).collect():
-            if mimes[r["media_id"]] == "image/png":
-                assert r["phash"] == "0" * 16 and r["mean_luma"] == luma
-            else:
-                assert len(r["phash"]) == 16  # fake path, deterministic
-
-    def test_audio_header_parse_pure(self):
-        from librecrawl_spark.operators.multimodal import (
-            make_test_wav, parse_audio_header)
-
-        assert parse_audio_header(make_test_wav(8000, 1, 800)) == ("audio/wav", 8000, 1, 100)
-        assert parse_audio_header(make_test_wav(44100, 2, 4410)) == ("audio/wav", 44100, 2, 100)
-        # FLAC STREAMINFO: sr(20) ch(3) bps(5) total(36) packed big-endian
-        packed = (22050 << 44) | ((2 - 1) << 41) | ((16 - 1) << 36) | 22050
-        streaminfo = b"\x00" * 10 + packed.to_bytes(8, "big") + b"\x00" * 16
-        flac = b"fLaC" + b"\x80" + (34).to_bytes(3, "big") + streaminfo
-        assert parse_audio_header(flac) == ("audio/flac", 22050, 2, 1000)
-        assert parse_audio_header(b"RIFFxxxxJUNK") is None
-
-    def test_mp3_header_parse_pure(self):
-        from librecrawl_spark.operators.multimodal import (
-            make_test_mp3, parse_audio_header)
-
-        # bare CBR stream: 10 frames of 417 bytes at 128kbps/44.1k mono
-        assert parse_audio_header(make_test_mp3(44100, 128, 1, 10)) \
-            == ("audio/mpeg", 44100, 1, 260)
-        # ID3v2 tag skipped via syncsafe size; stereo; 64kbps/32k
-        assert parse_audio_header(make_test_mp3(32000, 64, 2, 25,
-                                                id3=b"TALB test album")) \
-            == ("audio/mpeg", 32000, 2, 900)
-        # ID3 tag with no valid frame after it
-        assert parse_audio_header(b"ID3\x04\x00\x00\x00\x00\x00\x01X") is None
-        # free-format bitrate index and reserved sample-rate index rejected
-        assert parse_audio_header(bytes([0xFF, 0xFA, 0x0C, 0xC0])) is None
-        assert parse_audio_header(b"") is None
-
-    def test_audio_features_real_rates(self, spark):
-        from librecrawl_spark.operators.multimodal import (
-            audio_features, synthetic_audio)
-
-        m = synthetic_audio(spark, 9)
-        out = {r["media_id"]: (r["mime"], r["sample_rate"], r["channels"], r["duration_ms"])
-               for r in audio_features(m).collect()}
-        want = {f"a{i}": ("audio/wav", (8000, 16000, 44100)[i % 3], 1 + i % 2,
-                          int(((8000, 16000, 44100)[i % 3] // 10 + i) * 1000
-                              / (8000, 16000, 44100)[i % 3]))
-                for i in range(9)}
-        assert out == want
-
-    def test_gif_lzw_roundtrip_pure(self):
-        """_gif_lzw_encode/_gif_lzw_decode are REAL appendix-F LZW:
-        deterministic fuzz roundtrip across palette sizes, including
-        streams long enough to grow the code width and overflow the
-        4096-entry dict (clear-code reset path)."""
-        import random
-
-        from librecrawl_spark.operators.multimodal import (
-            _gif_lzw_decode, _gif_lzw_encode)
-
-        rnd = random.Random(7)
-        for ncolors in (2, 4, 16, 256):
-            mcs = max(2, (ncolors - 1).bit_length())
-            for n in (1, 17, 4095, 20000):
-                idx = [rnd.randrange(ncolors) for _ in range(n)]
-                assert _gif_lzw_decode(
-                    _gif_lzw_encode(idx, mcs), mcs, n) == idx, (ncolors, n)
-        assert _gif_lzw_decode(b"\xff\xff\xff", 2, 10) is None  # corrupt
-
-    def test_gif_pixel_decode_real(self):
-        """decode_gif resolves palette pixels through real LZW: a
-        checkerboard roundtrips exactly, interlaced storage order is
-        restored, a local color table overrides the global one, and a
-        solid color yields its Rec.601 luma with an all-zero dHash."""
-        from librecrawl_spark.operators.multimodal import (
-            decode_gif, make_test_gif, parse_image_header,
-            real_image_features)
-
-        pal = [(0, 0, 0), (255, 255, 255)]
-        logical = [[(x + y) % 2 for x in range(8)] for y in range(6)]
-        g = make_test_gif(8, 6, pal, [v for r in logical for v in r])
-        assert parse_image_header(g) == ("image/gif", 8, 6)
-        assert decode_gif(g) == [[255 * v for v in r] for r in logical]
-        # interlaced: store rows in pass order (h=6 -> 0 | 4 | 2 | 1,3,5)
-        storage = [logical[i] for i in (0, 4, 2, 1, 3, 5)]
-        gi = make_test_gif(8, 6, pal, [v for r in storage for v in r],
-                           interlace=True)
-        assert decode_gif(gi) == [[255 * v for v in r] for r in logical]
-        f = real_image_features(g)
-        assert (f["width"], f["height"], f["mean_luma"]) == (8, 6, 0.5)
-        solid = make_test_gif(5, 4, [(10, 200, 30)], [0] * 20)
-        fs = real_image_features(solid)
-        luma = round(0.299 * 10 + 0.587 * 200 + 0.114 * 30)
-        assert fs["phash"] == "0" * 16
-        assert fs["mean_luma"] == round(luma / 255.0, 6)
-        assert decode_gif(b"GIF89a" + b"\x00" * 4) is None
-        assert decode_gif(b"\x89PNG\r\n\x1a\n") is None
-
-    def test_image_features_real_for_gif(self, spark):
-        """The mapInPandas pipeline serves REAL pixel features for GIF
-        payloads too (decode_gif), not the content-hash fake."""
-        from librecrawl_spark.operators.multimodal import (
-            MEDIA_SCHEMA, image_features, make_test_gif)
-
-        g = make_test_gif(5, 4, [(10, 200, 30)], [0] * 20)
-        m = spark.createDataFrame(
-            [("g0", "image", bytearray(g), ("image/gif", 5, 4, 0))],
-            schema=MEDIA_SCHEMA)
-        [r] = image_features(m).collect()
-        luma = round(0.299 * 10 + 0.587 * 200 + 0.114 * 30)
-        assert (r["width"], r["height"]) == (5, 4)
-        assert r["phash"] == "0" * 16
-        assert r["mean_luma"] == round(luma / 255.0, 6)
-
-    def test_wav_pcm_decode_pure(self):
-        """decode_wav_pcm is a REAL sample decoder — WAV is raw PCM
-        behind struct reads. 16-bit roundtrip, 8-bit unsigned bias,
-        stereo interleave, and compressed-format rejection."""
-        from librecrawl_spark.operators.multimodal import (
-            decode_wav_pcm, make_test_wav)
-        import struct as st
-
-        rate, ch, s = decode_wav_pcm(
-            make_test_wav(8000, 1, samples=[0, 16384, -16384, -32768]))
-        assert (rate, ch) == (8000, 1)
-        assert s == [0.0, 0.5, -0.5, -1.0]
-        # stereo: each frame value repeated per channel, interleaved
-        _, ch2, s2 = decode_wav_pcm(
-            make_test_wav(44100, 2, samples=[100, -100]))
-        assert ch2 == 2 and s2 == [100 / 32768.0] * 2 + [-100 / 32768.0] * 2
-        # 8-bit PCM is unsigned with a 128 bias
-        fmt = st.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-        body = (b"WAVE" + b"fmt " + st.pack("<I", len(fmt)) + fmt
-                + b"data" + st.pack("<I", 3) + bytes([128, 255, 0]))
-        pad = b"\x00"  # odd-size data chunk is word-aligned
-        wav8 = b"RIFF" + st.pack("<I", len(body) + 1) + body + pad
-        assert decode_wav_pcm(wav8) == (8000, 1, [0.0, 127 / 128.0, -1.0])
-        # non-PCM format tag (2 = ADPCM) is honestly not covered
-        fmt_adpcm = st.pack("<HHIIHH", 2, 1, 8000, 4000, 1, 4)
-        body = (b"WAVE" + b"fmt " + st.pack("<I", len(fmt_adpcm)) + fmt_adpcm
-                + b"data" + st.pack("<I", 4) + b"\x00" * 4)
-        assert decode_wav_pcm(b"RIFF" + st.pack("<I", len(body)) + body) is None
-        assert decode_wav_pcm(b"fLaC" + b"\x00" * 40) is None
-
-    def test_real_audio_features_analytic(self):
-        """Signal features from known waveforms: a full-scale square
-        wave's RMS == peak == 32767/32768 with a crossing every period
-        boundary; silence is all zeros; a half-scale constant has RMS =
-        peak = 0.5 and no crossings."""
-        from librecrawl_spark.operators.multimodal import (
-            make_test_wav, real_audio_features)
-
-        sq = [32767, 32767, -32767, -32767] * 25
-        f = real_audio_features(make_test_wav(8000, 1, samples=sq))
-        assert f["loudness"] == f["peak"] == round(32767 / 32768, 6)
-        # 50 sign flips over 99 gaps
-        assert f["zcr"] == round(49 / 99, 6)
-        f0 = real_audio_features(make_test_wav(8000, 2, samples=[0] * 64))
-        assert f0 == {"loudness": 0.0, "peak": 0.0, "zcr": 0.0}
-        fh = real_audio_features(make_test_wav(8000, 1, samples=[16384] * 10))
-        assert fh == {"loudness": 0.5, "peak": 0.5, "zcr": 0.0}
-        assert real_audio_features(b"\xff\xd8not audio") is None
-
-    def test_audio_features_real_for_wav(self, spark):
-        """The mapInPandas pipeline serves REAL signal features for WAV
-        payloads: the fixture's sawtooth RMS/peak/zcr computed
-        independently here must match the pipeline's output."""
-        import math
-
-        from librecrawl_spark.operators.multimodal import (
-            audio_features, synthetic_audio)
-
-        m = synthetic_audio(spark, 4)
-        out = {r["media_id"]: (r["loudness"], r["peak"], r["zcr"])
-               for r in audio_features(m).collect()}
-        for i in range(4):
-            rate = (8000, 16000, 44100)[i % 3]
-            vals = [((j * 257) % 32768 - 16384) / 32768.0
-                    for j in range(rate // 10 + i)]
-            rms = round(math.sqrt(sum(v * v for v in vals) / len(vals)), 6)
-            peak = round(max(abs(v) for v in vals), 6)
-            cross, prev = 0, 1 if vals[0] >= 0 else -1
-            for v in vals[1:]:
-                sgn = prev if v == 0 else (1 if v > 0 else -1)
-                if sgn != prev:
-                    cross += 1
-                prev = sgn
-            zcr = round(cross / (len(vals) - 1), 6)
-            assert out[f"a{i}"] == (rms, peak, zcr), i
-
-    def test_flac_decode_roundtrip_pure(self):
-        """decode_flac_pcm is a REAL bitstream decoder (RFC 9639):
-        verbatim/constant/fixed(1-4) subframes, multi-frame streams,
-        all three stereo decorrelations, 8-bit depth, and CRC-8/CRC-16
-        rejection — all against the in-repo stdlib encoder."""
-        import random
-
-        from librecrawl_spark.operators.multimodal import (
-            decode_flac_pcm, make_test_flac)
-
-        s = [0, 16384, -16384, -32768, 123, -1]
-        assert decode_flac_pcm(make_test_flac(8000, 16, samples=s)) \
-            == (8000, 1, [v / 32768.0 for v in s])
-        rate, ch, cs = decode_flac_pcm(
-            make_test_flac(8000, 16, samples=[-5000] * 100))
-        assert (rate, ch) == (8000, 1) and cs == [-5000 / 32768.0] * 100
-        ramp = list(range(-500, 500))
-        assert decode_flac_pcm(
-            make_test_flac(16000, 16, samples=ramp, fixed_order=1)) \
-            == (16000, 1, [v / 32768.0 for v in ramp])
-        rnd = random.Random(3)
-        sig = [rnd.randrange(-20000, 20000) for _ in range(1000)]
-        for o in (1, 2, 3, 4):
-            assert decode_flac_pcm(
-                make_test_flac(44100, 16, samples=sig, fixed_order=o)) \
-                == (44100, 1, [v / 32768.0 for v in sig]), f"fixed{o}"
-        left = [rnd.randrange(-30000, 30000) for _ in range(700)]
-        right = [rnd.randrange(-30000, 30000) for _ in range(700)]
-        want = [v / 32768.0 for pair in zip(left, right) for v in pair]
-        # multi-frame (block_size splits) + every stereo storage mode
-        assert decode_flac_pcm(make_test_flac(
-            22050, 16, channel_samples=[left, right], block_size=256)) \
-            == (22050, 2, want)
-        for mode in ("left_side", "right_side", "mid_side"):
-            assert decode_flac_pcm(make_test_flac(
-                22050, 16, channel_samples=[left, right],
-                stereo_mode=mode)) == (22050, 2, want), mode
-        s8 = [-128, 127, 0, 64]
-        assert decode_flac_pcm(make_test_flac(8000, 8, samples=s8)) \
-            == (8000, 1, [v / 128.0 for v in s8])
-        # rejection: non-FLAC, truncated, flipped frame CRC-16, flipped
-        # header byte (CRC-8)
-        assert decode_flac_pcm(b"RIFF" * 4) is None
-        assert decode_flac_pcm(b"fLaC" + b"\x00" * 10) is None
-        good = bytearray(make_test_flac(8000, 16, samples=s))
-        bad = bytearray(good)
-        bad[-1] ^= 0xFF
-        assert decode_flac_pcm(bytes(bad)) is None
-        bad2 = bytearray(good)
-        bad2[46] ^= 0x01
-        assert decode_flac_pcm(bytes(bad2)) is None
-
-    def test_flac_lpc_wasted_bits_escape_pure(self):
-        """Handcrafted subframe/residual bitstreams exercise the
-        decoder paths the fixture encoder never emits: LPC prediction,
-        wasted-bits shift, Rice method 1 (5-bit params), and escaped
-        (raw) residual partitions."""
-        from librecrawl_spark.operators.multimodal import (
-            _BitReader, _BitWriter, _flac_residual, _flac_subframe)
-
-        # LPC order 1, coef=2, shift=1 -> pred = (2*prev)>>1 = prev:
-        # identical to fixed-1, so a ramp has all-zero residuals
-        bw = _BitWriter()
-        bw.write(0, 1), bw.write(32, 6), bw.write(0, 1)  # lpc order 1
-        bw.write(7, 16)                                  # warmup sample
-        bw.write(3, 4)                                   # precision-1 -> 4
-        bw.write(1, 5)                                   # shift
-        bw.write(2, 4)                                   # coefficient
-        bw.write(0, 2), bw.write(0, 4), bw.write(0, 4)   # rice m0 po0 p0
-        for _ in range(9):
-            bw.write(1, 1)                               # zigzag(0)
-        bw.align()
-        assert _flac_subframe(_BitReader(bw.getvalue()), 10, 16) == [7] * 10
-        # wasted bits: constant 3 with k=2 wasted -> stored at bps-2,
-        # decoded value shifted back up: 3<<2 = 12
-        bw = _BitWriter()
-        bw.write(0, 1), bw.write(0, 6)
-        bw.write(1, 1), bw.write(0, 1), bw.write(1, 1)   # flag + unary(1)
-        bw.write(3, 14)                                  # bps 16 - 2
-        bw.align()
-        assert _flac_subframe(_BitReader(bw.getvalue()), 4, 16) == [12] * 4
-        # rice method 1 (5-bit params) and escape partition (raw 6-bit)
-        bw = _BitWriter()
-        bw.write(1, 2), bw.write(1, 4)                   # method 1, po=1
-        bw.write(31, 5), bw.write(6, 5)                  # escape, raw 6
-        for v in (-5, 30):
-            bw.write(v, 6)
-        bw.write(2, 5)                                   # param 2
-        for v in (3, -3):                                # zigzag 6, 5
-            u = (v << 1) ^ (-1 if v < 0 else 0)
-            q = u >> 2
-            for _ in range(q):
-                bw.write(0, 1)
-            bw.write(1, 1), bw.write(u, 2)
-        bw.align()
-        assert _flac_residual(_BitReader(bw.getvalue()), 4, 0) \
-            == [-5, 30, 3, -3]
-
-    def test_audio_features_real_for_flac(self, spark):
-        """The mapInPandas pipeline serves REAL signal features for
-        FLAC payloads (decode_flac_pcm), matching the WAV pipeline's
-        output for the same samples — and the header row (rate/
-        channels/duration) comes from STREAMINFO."""
-        from librecrawl_spark.operators.multimodal import (
-            MEDIA_SCHEMA, audio_features, make_test_flac, make_test_wav)
-
-        sq = [32767, 32767, -32767, -32767] * 25
-        rows = [
-            ("f0", "audio", bytearray(make_test_flac(8000, 16, samples=sq)),
-             ("audio/flac", 0, 0, 0)),
-            ("w0", "audio", bytearray(make_test_wav(8000, 1, samples=sq)),
-             ("audio/wav", 0, 0, 0)),
-        ]
-        m = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-        out = {r["media_id"]: r.asDict() for r in audio_features(m).collect()}
-        f, w = out["f0"], out["w0"]
-        assert f["mime"] == "audio/flac" and w["mime"] == "audio/wav"
-        assert (f["sample_rate"], f["channels"]) == (8000, 1)
-        assert f["duration_ms"] == w["duration_ms"] == 12
-        for k in ("loudness", "peak", "zcr"):
-            assert f[k] == w[k], k
-
-
 class TestSitemap:
     def test_parse_urlset(self, spark):
         from librecrawl_spark.sources.sitemap import parse_sitemaps
@@ -1027,38 +547,6 @@ class TestWinnowing:
         assert out["tiny"] == (0, "")
         assert out["five"][0] == 1
         assert out["seven"][0] == 1  # min over 3 grams, window > doc
-
-
-class TestVideoHeader:
-    def test_mp4_header_parse_pure(self):
-        from librecrawl_spark.operators.multimodal import (
-            make_test_mp4, parse_mp4_header)
-
-        assert parse_mp4_header(make_test_mp4(3000, 1000, version=0)) \
-            == ("video/mp4", 1000, 3000)
-        assert parse_mp4_header(make_test_mp4(7500, 90000, version=1)) \
-            == ("video/mp4", 90000, 7500)
-        assert parse_mp4_header(make_test_mp4(0, 600)) == ("video/mp4", 600, 0)
-        assert parse_mp4_header(b"not an mp4 file!") is None
-        assert parse_mp4_header(b"") is None
-        # truncated moov: size field points past the buffer -> None
-        broken = make_test_mp4(3000, 1000)[:-10]
-        assert parse_mp4_header(broken) is None
-
-    def test_sample_frames_uses_real_mvhd_duration(self, spark):
-        """The frame schedule must come from the payload's mvhd box —
-        the fixture's meta.duration_ms is deliberately 0."""
-        from librecrawl_spark.operators.multimodal import (
-            sample_frames, synthetic_media)
-
-        m = synthetic_media(spark, 12)
-        frames = sample_frames(m, every_ms=1000)
-        per_vid = {r["media_id"]: r["n"] for r in
-                   frames.groupBy("media_id").count()
-                   .withColumnRenamed("count", "n").collect()}
-        # videos are i % 3 == 0 -> m0, m3, m6, m9 with durations
-        # 3000 + i*100 ms -> 3000, 3300, 3600, 3900 -> 3, 4, 4, 4 frames
-        assert per_vid == {"m0": 3, "m3": 4, "m6": 4, "m9": 4}
 
 
 class TestPageColumns:

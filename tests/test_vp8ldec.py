@@ -1,7 +1,7 @@
 """WebP-lossless (VP8L) decoder tests — roundtrips against the
 in-repo stdlib encoder plus handcrafted bitstreams for the paths the
-fixture encoder never emits. Mirrors tests/test_jpegdec.py's pattern:
-the decoder is REAL (no codec library anywhere)."""
+fixture encoder never emits. The decoder is REAL (no codec library
+anywhere)."""
 
 import random
 
@@ -229,25 +229,6 @@ class TestVp8lDecode:
         bad[21] ^= 0x40                  # corrupt the size header:
         # the widened image runs the literal stream dry -> EOF -> None
         assert decode_webp_lossless(bytes(bad)) is None
-
-    def test_pipeline_real_for_webp_lossless(self, spark):
-        """image_features serves REAL pixel features for VP8L payloads:
-        a solid color's mean_luma is its Rec.601 luma with an all-zero
-        dHash, and the header row agrees with parse_image_header."""
-        from librecrawl_spark.operators.multimodal import (
-            MEDIA_SCHEMA, image_features, parse_image_header)
-        from librecrawl_spark.operators.vp8ldec import make_test_webp_lossless
-
-        solid = make_test_webp_lossless([[(10, 200, 30)] * 12] * 8)
-        assert parse_image_header(solid) == ("image/webp", 12, 8)
-        m = spark.createDataFrame(
-            [("w0", "image", bytearray(solid), ("image/webp", 12, 8, 0))],
-            schema=MEDIA_SCHEMA)
-        [r] = image_features(m).collect()
-        luma = round(0.299 * 10 + 0.587 * 200 + 0.114 * 30)
-        assert (r["width"], r["height"]) == (12, 8)
-        assert r["phash"] == "0" * 16
-        assert r["mean_luma"] == round(luma / 255.0, 6)
 
 
 if __name__ == "__main__":
