@@ -1228,51 +1228,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                      F.round(p[2], 6).alias("p99"),
                      F.count("*").alias("n")))
 
-    def t_asof_join(spark, sf):
-        """As-of join (operators/temporal.py:asof_join): each purchase
-        event matched to the user's latest view at-or-before it. Spark
-        has no ASOF built-in; the operator is union-tag + one key
-        exchange + running last-non-null — sort-merge-join shape, O(1)
-        per-key state, no per-row Python. DuckDB's native ASOF JOIN is
-        the oracle. Right side pre-deduped to max event_id per
-        (user, ts) so ties are deterministic in both engines; gap is an
-        exact integer microsecond difference (no float hazard)."""
-        from librecrawl_spark.operators.temporal import asof_join
-        e = _t(spark, sf, "events")
-        purchases = (e.filter(F.col("event_type") == "purchase")
-                     .select(F.col("event_id").alias("purchase_id"),
-                             "user_id", "ts"))
-        views = (e.filter(F.col("event_type") == "view")
-                 .groupBy("user_id", "ts")
-                 .agg(F.max("event_id").alias("view_id")))
-        out = asof_join(purchases, views, on="user_id", ts_col="ts",
-                        payload_cols=["view_id"])
-        return (out.filter(F.col("view_id").isNotNull())
-                .select("purchase_id", "user_id", "view_id",
-                        F.col("asof_gap_us").alias("gap_us")))
-
-    def t_range_join(spark, sf):
-        """Bucketed range join (operators/temporal.py:range_join_by_bucket):
-        every event of the same user inside the 600s half-open window
-        after each error event. Intervals explode into the <=2 time
-        buckets they overlap; points live in exactly one bucket, so the
-        equi-join on (user, bucket) + residual range filter yields each
-        qualifying pair exactly once — no BroadcastNestedLoopJoin, no
-        dedup. Oracle is the plain inequality join."""
-        from librecrawl_spark.operators.temporal import range_join_by_bucket
-        e = _t(spark, sf, "events")
-        windows = (e.filter(F.col("event_type") == "error")
-                   .select(F.col("event_id").alias("error_id"), "user_id",
-                           F.col("ts").alias("start_ts"),
-                           (F.col("ts") + F.expr("INTERVAL 600 SECONDS"))
-                           .alias("end_ts")))
-        points = e.select("event_id", "user_id", "ts", "event_type")
-        out = range_join_by_bucket(points, windows, on="user_id",
-                                   point_ts="ts", start_col="start_ts",
-                                   end_col="end_ts", bucket_us=600_000_000)
-        return (out.filter(F.col("event_id") != F.col("error_id"))
-                .select("error_id", "event_id", "event_type"))
-
     def q4_late_orders(spark, sf):
         """TPC-H Q4 shape: EXISTS decorrelated to a LEFT SEMI join with a
         non-equi conjunct (a lineitem shipped >60 days after the order
@@ -1726,25 +1681,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             targets={"en": 0.4, "de": 0.2, "fr": 0.2, "es": 0.2},
         )
 
-    def graph_pagerank(spark, sf):
-        """PageRank (operators/graph.py) over a deterministic synthetic
-        link graph derived from doc_ids (2-3 out-links per doc via
-        affine maps mod N; every 17th doc is a dangling sink). 3 power
-        iterations, damping 0.85, round-8 per round — the oracle
-        replays the identical unrolled iterations in SQL."""
-        from librecrawl_spark.operators.graph import pagerank
-
-        d = _t(spark, sf, "documents").select("doc_id")
-        n = d.count()
-        i = F.col("doc_id")
-        e1 = d.select(i.alias("src"), ((i * 7 + 1) % n).alias("dst"))
-        e2 = d.select(i.alias("src"), ((i * 13 + 3) % n).alias("dst"))
-        e3 = (d.filter(i % 5 != 0)
-              .select(i.alias("src"), ((i * 3 + 11) % n).alias("dst")))
-        edges = (e1.unionByName(e2).unionByName(e3)
-                 .filter(F.col("src") % 17 != 0))
-        return pagerank(edges, iters=3)
-
     def pipe_kmeans(spark, sf):
         """Deterministic k-means codebook training (2 Lloyd iterations,
         k=4, seeded on the 4 smallest vec_ids) — the quantizer-training
@@ -1797,50 +1733,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.length("text").cast("long").alias("n_chars"),
         )
         return changelog_compact(log)
-
-    def graph_degrees(spark, sf):
-        """Log2-binned in/out-degree histogram (graph.degree_histogram)
-        over the same deterministic affine-map link graph
-        graph_pagerank uses — the power-law / hub diagnostic."""
-        from librecrawl_spark.operators.graph import degree_histogram
-
-        d = _t(spark, sf, "documents").select("doc_id")
-        n = d.count()
-        i = F.col("doc_id")
-        e1 = d.select(i.alias("src"), ((i * 7 + 1) % n).alias("dst"))
-        e2 = d.select(i.alias("src"), ((i * 13 + 3) % n).alias("dst"))
-        e3 = (d.filter(i % 5 != 0)
-              .select(i.alias("src"), ((i * 3 + 11) % n).alias("dst")))
-        edges = (e1.unionByName(e2).unionByName(e3)
-                 .filter(F.col("src") % 17 != 0))
-        return degree_histogram(edges)
-
-    def t_recrawl_priority(spark, sf):
-        """Freshness-driven recrawl priority (recrawl.recrawl_priority):
-        Cho & Garcia-Molina change-rate estimate per page from fetch
-        observations, times hours since last fetch. Observations come
-        from events: page = user, changed = click/purchase rows. One
-        hash aggregate on the key; all time math in exact integer
-        microseconds so the DuckDB twin feeds ln identical operands."""
-        from librecrawl_spark.operators.recrawl import recrawl_priority
-
-        e = _t(spark, sf, "events").select(
-            F.col("user_id").alias("url"), "ts",
-            F.col("event_type").isin("click", "purchase").alias("changed"))
-        return (recrawl_priority(e, as_of="2024-03-01 00:00:00")
-                .withColumnRenamed("key", "page"))
-
-    def p2_budget_alloc(spark, sf):
-        """Host crawl-budget split (recrawl.crawl_budget_allocation):
-        1000 pages across sources proportional to corpus bytes, 90-page
-        cap, largest-remainder rounding with host-name tie-break — the
-        per-run politeness planner upstream of p1's quota window."""
-        from librecrawl_spark.operators.recrawl import crawl_budget_allocation
-
-        hs = (_t(spark, sf, "documents")
-              .groupBy(F.col("source").alias("host"))
-              .agg(F.sum("n_chars").alias("score")))
-        return crawl_budget_allocation(hs, budget=1000, cap=90)
 
     def kw_cannibalization(spark, sf):
         """Keyword cannibalization report (keywords.
@@ -1909,25 +1801,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return kmv_distinct(_t(spark, sf, "lineitem"), "l_orderkey", k=512)
 
-    def graph_bfs_dist(spark, sf):
-        """Multi-source BFS link distance (operators/graph.py:
-        bfs_distances, max 4 hops) over the same synthetic doc_id link
-        graph the pagerank pair uses; seeds = every 97th doc. The
-        oracle is a DuckDB recursive CTE with a min(dist) rollup."""
-        from librecrawl_spark.operators.graph import bfs_distances
-
-        d = _t(spark, sf, "documents").select("doc_id")
-        n = d.count()
-        i = F.col("doc_id")
-        e1 = d.select(i.alias("src"), ((i * 7 + 1) % n).alias("dst"))
-        e2 = d.select(i.alias("src"), ((i * 13 + 3) % n).alias("dst"))
-        e3 = (d.filter(i % 5 != 0)
-              .select(i.alias("src"), ((i * 3 + 11) % n).alias("dst")))
-        edges = (e1.unionByName(e2).unionByName(e3)
-                 .filter(F.col("src") % 17 != 0))
-        seeds = d.filter(i % 97 == 0).select(i.alias("node"))
-        return bfs_distances(edges, seeds, max_hops=4)
-
     def dedup_containment(spark, sf):
         """Ordered shingle-containment pairs (dedup.py:containment_pairs,
         t=0.8): the asymmetric near-dup detector for short-doc-inside-
@@ -1984,24 +1857,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return priority_sample(_t(spark, sf, "documents"),
                                "doc_id", "n_chars", 50)
 
-    def graph_hits(spark, sf):
-        """HITS hubs & authorities (operators/graph.py:hits, 2
-        L1-normalized iterations, round-8 per round) over the same
-        synthetic doc_id link graph as pagerank; the oracle replays
-        both unrolled iterations in SQL."""
-        from librecrawl_spark.operators.graph import hits
-
-        d = _t(spark, sf, "documents").select("doc_id")
-        n = d.count()
-        i = F.col("doc_id")
-        e1 = d.select(i.alias("src"), ((i * 7 + 1) % n).alias("dst"))
-        e2 = d.select(i.alias("src"), ((i * 13 + 3) % n).alias("dst"))
-        e3 = (d.filter(i % 5 != 0)
-              .select(i.alias("src"), ((i * 3 + 11) % n).alias("dst")))
-        edges = (e1.unionByName(e2).unionByName(e3)
-                 .filter(F.col("src") % 17 != 0))
-        return hits(edges, iters=2)
-
     def text_unigram_lm(spark, sf):
         """Self-trained unigram LM fluency score per document
         (operators/text.py:unigram_logprob) — the cheap KenLM-style
@@ -2023,8 +1878,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "w2_homepage": w2_homepage,
         "events_hopping_window": events_hopping_window,
         "w7_percentiles": w7_percentiles,
-        "t_asof_join": t_asof_join,
-        "t_range_join": t_range_join,
         "dedup_clusters": dedup_clusters,
         "q4_late_orders": q4_late_orders,
         "q13_custdist": q13_custdist,
@@ -2055,19 +1908,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pipe_tfidf": pipe_tfidf,
         "pipe_quality_gate": pipe_quality_gate,
         "inc_changelog_compact": inc_changelog_compact,
-        "graph_degrees": graph_degrees,
-        "graph_pagerank": graph_pagerank,
         "inc_snapshot_diff": inc_snapshot_diff,
         "pipe_domain_mix": pipe_domain_mix,
-        "t_recrawl_priority": t_recrawl_priority,
-        "p2_budget_alloc": p2_budget_alloc,
         "kw_cannibalization": kw_cannibalization,
         "kw_page_keywords": kw_page_keywords,
         "sk_kmv_distinct": sk_kmv_distinct,
-        "graph_bfs_dist": graph_bfs_dist,
         "text_unigram_lm": text_unigram_lm,
         "dedup_containment": dedup_containment,
-        "graph_hits": graph_hits,
         "sk_kmv_by_group": sk_kmv_by_group,
         "pipe_priority_sample": pipe_priority_sample,
         "dedup_minhash_inc": dedup_minhash_inc,
@@ -3499,28 +3346,6 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n
             FROM events GROUP BY event_type
         """,
-        "t_asof_join": """
-            WITH l AS (SELECT event_id AS purchase_id, user_id, ts
-                       FROM events WHERE event_type = 'purchase'),
-                 r AS (SELECT user_id, ts, max(event_id) AS view_id
-                       FROM events WHERE event_type = 'view'
-                       GROUP BY user_id, ts)
-            SELECT l.purchase_id, l.user_id, r.view_id,
-                   epoch_us(l.ts) - epoch_us(r.ts) AS gap_us
-            FROM l ASOF JOIN r
-              ON l.user_id = r.user_id AND l.ts >= r.ts
-        """,
-        "t_range_join": """
-            WITH w AS (SELECT event_id AS error_id, user_id,
-                              ts AS start_ts,
-                              ts + INTERVAL 600 SECOND AS end_ts
-                       FROM events WHERE event_type = 'error')
-            SELECT w.error_id, e.event_id, e.event_type
-            FROM w JOIN events e
-              ON e.user_id = w.user_id
-             AND e.ts >= w.start_ts AND e.ts < w.end_ts
-             AND e.event_id <> w.error_id
-        """,
         "q4_late_orders": """
             SELECT o_orderpriority, count(*) AS order_count
             FROM orders
@@ -3799,51 +3624,6 @@ def oracle_sql() -> dict[str, str]:
                    6) AS keep_rate
             FROM per, tot
         """,
-        "graph_pagerank": """
-            WITH n AS (SELECT CAST(count(*) AS DOUBLE) AS nn,
-                              count(*) AS ni FROM documents),
-            e AS (
-              SELECT doc_id AS s, (doc_id * 7 + 1) % ni AS d
-              FROM documents, n WHERE doc_id % 17 <> 0
-              UNION ALL
-              SELECT doc_id, (doc_id * 13 + 3) % ni
-              FROM documents, n WHERE doc_id % 17 <> 0
-              UNION ALL
-              SELECT doc_id, (doc_id * 3 + 11) % ni
-              FROM documents, n WHERE doc_id % 17 <> 0 AND doc_id % 5 <> 0),
-            nodes AS (SELECT DISTINCT node FROM (
-              SELECT s AS node FROM e UNION ALL SELECT d FROM e)),
-            deg AS (SELECT s, count(*) AS deg FROM e GROUP BY s),
-            r0 AS (SELECT node, round(1.0 / nn, 8) AS pr FROM nodes, n),
-            d0 AS (SELECT coalesce(sum(pr), 0) AS dm
-                   FROM r0 LEFT JOIN deg ON node = s WHERE deg IS NULL),
-            c0 AS (SELECT e.d AS node, sum(r0.pr / deg.deg) AS cin
-                   FROM e JOIN r0 ON e.s = r0.node JOIN deg ON e.s = deg.s
-                   GROUP BY e.d),
-            r1 AS (SELECT nodes.node,
-                          round((1 - 0.85) / nn
-                                + 0.85 * (coalesce(cin, 0) + dm / nn), 8) AS pr
-                   FROM nodes LEFT JOIN c0 USING (node), d0, n),
-            d1 AS (SELECT coalesce(sum(pr), 0) AS dm
-                   FROM r1 LEFT JOIN deg ON node = s WHERE deg IS NULL),
-            c1 AS (SELECT e.d AS node, sum(r1.pr / deg.deg) AS cin
-                   FROM e JOIN r1 ON e.s = r1.node JOIN deg ON e.s = deg.s
-                   GROUP BY e.d),
-            r2 AS (SELECT nodes.node,
-                          round((1 - 0.85) / nn
-                                + 0.85 * (coalesce(cin, 0) + dm / nn), 8) AS pr
-                   FROM nodes LEFT JOIN c1 USING (node), d1, n),
-            d2 AS (SELECT coalesce(sum(pr), 0) AS dm
-                   FROM r2 LEFT JOIN deg ON node = s WHERE deg IS NULL),
-            c2 AS (SELECT e.d AS node, sum(r2.pr / deg.deg) AS cin
-                   FROM e JOIN r2 ON e.s = r2.node JOIN deg ON e.s = deg.s
-                   GROUP BY e.d),
-            r3 AS (SELECT nodes.node,
-                          round((1 - 0.85) / nn
-                                + 0.85 * (coalesce(cin, 0) + dm / nn), 8) AS pr
-                   FROM nodes LEFT JOIN c2 USING (node), d2, n)
-            SELECT node, pr FROM r3
-        """,
         "pipe_kmeans": """
             WITH data AS (
               SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -3946,79 +3726,6 @@ def oracle_sql() -> dict[str, str]:
               FROM log)
             SELECT url, wave, content_hash, n_chars
             FROM r WHERE rn = 1 AND op = 'upsert'
-        """,
-        "graph_degrees": """
-            WITH d AS (SELECT doc_id FROM documents),
-            n AS (SELECT count(*) AS c FROM d),
-            edges AS (
-              SELECT doc_id AS src, (doc_id * 7 + 1) % (SELECT c FROM n) AS dst
-              FROM d
-              UNION ALL
-              SELECT doc_id, (doc_id * 13 + 3) % (SELECT c FROM n) FROM d
-              UNION ALL
-              SELECT doc_id, (doc_id * 3 + 11) % (SELECT c FROM n)
-              FROM d WHERE doc_id % 5 <> 0),
-            e AS (SELECT * FROM edges WHERE src % 17 <> 0),
-            outd AS (SELECT src AS node, count(*) AS degree FROM e GROUP BY 1),
-            ind AS (SELECT dst AS node, count(*) AS degree FROM e GROUP BY 1)
-            SELECT 'out' AS direction, CAST(floor(log2(degree)) AS INT) AS bucket,
-                   count(*) AS n_nodes, min(degree) AS min_degree,
-                   max(degree) AS max_degree
-            FROM outd GROUP BY 2
-            UNION ALL
-            SELECT 'in', CAST(floor(log2(degree)) AS INT), count(*),
-                   min(degree), max(degree)
-            FROM ind GROUP BY 2
-        """,
-        "t_recrawl_priority": """
-            WITH g AS (
-              SELECT user_id AS page, count(*) AS n_obs,
-                     CAST(sum(CASE WHEN event_type IN ('click', 'purchase')
-                              THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-                     min(epoch_us(ts)) AS t0, max(epoch_us(ts)) AS t1
-              FROM events GROUP BY user_id
-              HAVING count(*) >= 2),
-            m AS (
-              SELECT page, n_obs, n_changed,
-                     CAST(t1 - t0 AS DOUBLE)
-                       / CAST(n_obs - 1 AS DOUBLE) / 3.6e9 AS ibar_h,
-                     CAST(epoch_us(TIMESTAMP '2024-03-01 00:00:00') - t1
-                          AS DOUBLE) / 3.6e9 AS age_h
-              FROM g)
-            SELECT page, n_obs, n_changed,
-                   round(abs(-ln((n_obs - n_changed + 0.5) / (n_obs + 0.5))
-                         / ibar_h), 6) AS lambda_per_hour,
-                   round(age_h, 6) AS age_hours,
-                   round(abs(-ln((n_obs - n_changed + 0.5) / (n_obs + 0.5))
-                         / ibar_h) * age_h, 6) AS priority
-            FROM m
-        """,
-        "p2_budget_alloc": """
-            WITH hs AS (
-              SELECT source AS host, CAST(sum(n_chars) AS BIGINT) AS score
-              FROM documents GROUP BY source),
-            tot AS (SELECT CAST(sum(score) AS DOUBLE) AS t FROM hs),
-            d AS (
-              SELECT host, score,
-                     least(CAST(90 AS BIGINT),
-                           CAST(floor(1000.0 * score / t) AS BIGINT)) AS base,
-                     1000.0 * score / t
-                       - floor(1000.0 * score / t) AS frac,
-                     CAST(90 AS BIGINT)
-                       - least(CAST(90 AS BIGINT),
-                                CAST(floor(1000.0 * score / t) AS BIGINT))
-                       AS headroom
-              FROM hs, tot),
-            r AS (
-              SELECT *, 1000 - sum(base) OVER () AS leftover,
-                     row_number() OVER (
-                       ORDER BY CASE WHEN headroom > 0 THEN frac
-                                     ELSE -1.0 END DESC, host ASC) AS rk
-              FROM d)
-            SELECT host, score,
-                   base + CASE WHEN headroom > 0 AND rk <= leftover
-                               THEN 1 ELSE 0 END AS allocated
-            FROM r
         """,
         "kw_cannibalization": """
             WITH tk AS (
@@ -4255,28 +3962,6 @@ def oracle_sql() -> dict[str, str]:
                          4) AS est_distinct
             FROM kmin
         """,
-        "graph_bfs_dist": """
-            WITH RECURSIVE
-            docs AS (SELECT doc_id FROM documents),
-            nn AS (SELECT count(*) AS n FROM docs),
-            edges AS (
-              SELECT DISTINCT src, dst FROM (
-                SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst
-                FROM docs, nn
-                UNION ALL
-                SELECT doc_id, (doc_id * 13 + 3) % nn.n FROM docs, nn
-                UNION ALL
-                SELECT doc_id, (doc_id * 3 + 11) % nn.n FROM docs, nn
-                WHERE doc_id % 5 <> 0)
-              WHERE src % 17 <> 0),
-            walk(node, dist) AS (
-              SELECT doc_id, 0 FROM docs WHERE doc_id % 97 = 0
-              UNION
-              SELECT e.dst, w.dist + 1
-              FROM walk w JOIN edges e ON e.src = w.node
-              WHERE w.dist < 4)
-            SELECT node, min(dist) AS dist FROM walk GROUP BY node
-        """,
         "text_unigram_lm": """
             WITH words AS (
               SELECT doc_id,
@@ -4324,55 +4009,6 @@ def oracle_sql() -> dict[str, str]:
             JOIN nz sb ON sb.doc_id = cand.doc_outer
             WHERE round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
                         / len(sa.sh), 6) >= 0.8
-        """,
-        "graph_hits": """
-            WITH docs AS (SELECT doc_id FROM documents),
-            nn AS (SELECT count(*) AS n FROM docs),
-            edges AS (
-              SELECT src, dst FROM (
-                SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst
-                FROM docs, nn
-                UNION ALL
-                SELECT doc_id, (doc_id * 13 + 3) % nn.n FROM docs, nn
-                UNION ALL
-                SELECT doc_id, (doc_id * 3 + 11) % nn.n FROM docs, nn
-                WHERE doc_id % 5 <> 0)
-              WHERE src % 17 <> 0),
-            nodes AS (
-              SELECT DISTINCT node FROM (
-                SELECT src AS node FROM edges
-                UNION ALL SELECT dst FROM edges)),
-            nv AS (SELECT count(*) AS c FROM nodes),
-            h0 AS (SELECT node, round(1.0 / nv.c, 8) AS hub
-                   FROM nodes, nv),
-            a1r AS (SELECT e.dst AS node, sum(h0.hub) AS raw
-                    FROM edges e JOIN h0 ON h0.node = e.src
-                    GROUP BY e.dst),
-            a1t AS (SELECT sum(raw) AS t FROM a1r),
-            a1 AS (SELECT n.node,
-                          round(coalesce(r.raw, 0) / t.t, 8) AS authority
-                   FROM nodes n LEFT JOIN a1r r ON r.node = n.node, a1t t),
-            h1r AS (SELECT e.src AS node, sum(a1.authority) AS raw
-                    FROM edges e JOIN a1 ON a1.node = e.dst
-                    GROUP BY e.src),
-            h1t AS (SELECT sum(raw) AS t FROM h1r),
-            h1 AS (SELECT n.node, round(coalesce(r.raw, 0) / t.t, 8) AS hub
-                   FROM nodes n LEFT JOIN h1r r ON r.node = n.node, h1t t),
-            a2r AS (SELECT e.dst AS node, sum(h1.hub) AS raw
-                    FROM edges e JOIN h1 ON h1.node = e.src
-                    GROUP BY e.dst),
-            a2t AS (SELECT sum(raw) AS t FROM a2r),
-            a2 AS (SELECT n.node,
-                          round(coalesce(r.raw, 0) / t.t, 8) AS authority
-                   FROM nodes n LEFT JOIN a2r r ON r.node = n.node, a2t t),
-            h2r AS (SELECT e.src AS node, sum(a2.authority) AS raw
-                    FROM edges e JOIN a2 ON a2.node = e.dst
-                    GROUP BY e.src),
-            h2t AS (SELECT sum(raw) AS t FROM h2r),
-            h2 AS (SELECT n.node, round(coalesce(r.raw, 0) / t.t, 8) AS hub
-                   FROM nodes n LEFT JOIN h2r r ON r.node = n.node, h2t t)
-            SELECT h2.node, h2.hub, a2.authority
-            FROM h2 JOIN a2 USING (node)
         """,
         "sk_kmv_by_group": """
             WITH d AS (

@@ -51,7 +51,6 @@ def default_seq_buckets(spark) -> int:
 
 def add_global_seq(df: DataFrame, order_cols: list[str], start: int, *,
                    lead_bounds: tuple[int, int],
-                   out_col: str = "seq",
                    bucket_counts: dict[int, int] | None = None) -> DataFrame:
     """Assign a contiguous global sequence ``start, start+1, ...`` in
     ``order_cols`` order without ever collapsing to one partition.
@@ -80,7 +79,7 @@ def add_global_seq(df: DataFrame, order_cols: list[str], start: int, *,
     else:
         counts = {r["_bkt"]: r["count"] for r in b.groupBy("_bkt").count().collect()}
     if not counts:
-        return df.withColumn(out_col, F.lit(start).cast("long"))
+        return df.withColumn("seq", F.lit(start).cast("long"))
     offsets, acc = {}, start
     for k in sorted(counts):
         offsets[k] = acc
@@ -96,7 +95,7 @@ def add_global_seq(df: DataFrame, order_cols: list[str], start: int, *,
     w = Window.partitionBy("_bkt").orderBy(*order_cols)
     return (
         b.join(odf, "_bkt")
-        .withColumn(out_col, (F.col("_off") + F.row_number().over(w) - 1).cast("long"))
+        .withColumn("seq", (F.col("_off") + F.row_number().over(w) - 1).cast("long"))
         .drop("_bkt", "_off")
     )
 
@@ -596,8 +595,8 @@ def host_of(url_col):
 
 def apply_politeness(eligible: DataFrame, hosts: DataFrame,
                      wave_seconds: float,
-                     seq_bounds: tuple[int, int] | None = None,
-                     host_col: str | None = None) -> tuple[DataFrame, DataFrame]:
+                     seq_bounds: tuple[int, int] | None = None
+                     ) -> tuple[DataFrame, DataFrame]:
     """Per-host per-wave fetch quota: a host with crawl-delay d gets
     floor(wave_seconds/d) fetch slots this wave (>=1); overflow rows are
     deferred to the next wave preserving their seq (FIFO within host).
@@ -610,12 +609,9 @@ def apply_politeness(eligible: DataFrame, hosts: DataFrame,
     never serializes; each rate-limited host's rows sort in one task.
 
     ``seq_bounds`` is accepted and unused: perfbench's wave workload
-    passes the wave's seq range. ``host_col``: name of a precomputed
-    host column to use instead of re-deriving it from the URL (it stays
-    in the output columns)."""
+    passes the wave's seq range."""
     cols = list(eligible.columns)
-    e = eligible.withColumn(
-        "_h", F.col(host_col) if host_col else host_of(F.col("url")))
+    e = eligible.withColumn("_h", host_of(F.col("url")))
     e = e.join(
         F.broadcast(hosts.select(F.col("host").alias("_h"), "crawl_delay")),
         "_h", "left",
@@ -636,16 +632,10 @@ def apply_politeness(eligible: DataFrame, hosts: DataFrame,
     return selected, deferred
 
 
-def salted_repartition(df: DataFrame, url_col: str = "url",
-                       num_partitions: int | None = None,
-                       salt_buckets: int = 16) -> DataFrame:
+def salted_repartition(df: DataFrame, salt_buckets: int = 16) -> DataFrame:
     """Spread hot hosts across ``salt_buckets`` partitions while keeping
     host affinity for cold hosts: partition key = xxhash64(host, salt)
     with salt = xxhash64(url) % salt_buckets. Breaks hot-domain skew in
     the fetch/extract stage (north_rule; SURVEY.md §4)."""
-    host = host_of(F.col(url_col))
-    salt = F.pmod(F.xxhash64(F.col(url_col)), F.lit(salt_buckets))
-    key = F.xxhash64(host, salt)
-    if num_partitions:
-        return df.repartition(num_partitions, key)
-    return df.repartition(key)
+    salt = F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
+    return df.repartition(F.xxhash64(host_of(F.col("url")), salt))

@@ -41,6 +41,27 @@ class TableIO:
     def _snapdir(self, name: str) -> str:
         return os.path.join(self._tdir(name), "_snapshots")
 
+    def _manifest_path(self, name: str, snapshot_id: int) -> str:
+        return os.path.join(self._snapdir(name), f"v{snapshot_id:06d}.json")
+
+    # --- writes: data files first, then the manifest that lists them ------
+    def _write_files(self, name: str, df) -> list[str]:
+        """Write ``df`` into a fresh ``data/<id>`` directory of table
+        ``name``; returns its parquet files, sorted."""
+        files_dir = os.path.join(self._tdir(name), "data", uuid.uuid4().hex[:12])
+        df.write.mode("overwrite").parquet(files_dir)
+        return sorted(os.path.join(files_dir, f) for f in os.listdir(files_dir)
+                      if f.endswith(".parquet"))
+
+    @staticmethod
+    def _publish(path: str, doc: dict, tmp_prefix: str) -> None:
+        """Atomically replace ``path`` with ``doc`` as JSON: a reader sees
+        either the old file or the whole new one, never a torn write."""
+        tmp = os.path.join(os.path.dirname(path), f"{tmp_prefix}{uuid.uuid4().hex}")
+        with open(tmp, "w") as fh:
+            json.dump(doc, fh)
+        os.replace(tmp, path)
+
     # --- snapshots ----------------------------------------------------------
     def snapshots(self, name: str) -> list[int]:
         d = self._snapdir(name)
@@ -51,7 +72,7 @@ class TableIO:
         )
 
     def _manifest(self, name: str, snapshot_id: int) -> dict:
-        with open(os.path.join(self._snapdir(name), f"v{snapshot_id:06d}.json")) as fh:
+        with open(self._manifest_path(name, snapshot_id)) as fh:
             return json.load(fh)
 
     def commit(self, name: str, df, mode: str = "append") -> int:
@@ -59,15 +80,8 @@ class TableIO:
         ``mode``: append (new files + previous snapshot's files) or
         overwrite (new files only)."""
         assert mode in ("append", "overwrite")
-        tdir = self._tdir(name)
         os.makedirs(self._snapdir(name), exist_ok=True)
-        files_dir = os.path.join(tdir, "data", uuid.uuid4().hex[:12])
-        df.write.mode("overwrite").parquet(files_dir)
-        new_files = [
-            os.path.join(files_dir, f)
-            for f in os.listdir(files_dir)
-            if f.endswith(".parquet")
-        ]
+        new_files = self._write_files(name, df)
         snaps = self.snapshots(name)
         prev_files = self._manifest(name, snaps[-1])["files"] if (snaps and mode == "append") else []
         sid = (snaps[-1] + 1) if snaps else 0
@@ -76,13 +90,10 @@ class TableIO:
             "parent": snaps[-1] if snaps else None,
             "mode": mode,
             "ts": time.time(),
-            "files": prev_files + sorted(new_files),
+            "files": prev_files + new_files,
             "schema": df.schema.json(),
         }
-        tmp = os.path.join(self._snapdir(name), f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(self._snapdir(name), f"v{sid:06d}.json"))
+        self._publish(self._manifest_path(name, sid), manifest, ".tmp-")
         return sid
 
     def gc_to(self, name: str, snapshot_id: int | None) -> int:
@@ -97,7 +108,7 @@ class TableIO:
         removed = 0
         for sid in self.snapshots(name):
             if snapshot_id is None or sid > snapshot_id:
-                os.remove(os.path.join(self._snapdir(name), f"v{sid:06d}.json"))
+                os.remove(self._manifest_path(name, sid))
                 removed += 1
         return removed
 
@@ -127,25 +138,18 @@ class TableIO:
             return snaps[-1]
         small_set = set(small)
         keep = [p for p in m["files"] if p not in small_set]
-        tdir = self._tdir(name)
-        files_dir = os.path.join(tdir, "data", uuid.uuid4().hex[:12])
-        (spark.read.parquet(*small).coalesce(max(1, target_files))
-         .write.mode("overwrite").parquet(files_dir))
-        new_files = [os.path.join(files_dir, f) for f in os.listdir(files_dir)
-                     if f.endswith(".parquet")]
+        new_files = self._write_files(
+            name, spark.read.parquet(*small).coalesce(max(1, target_files)))
         sid = snaps[-1] + 1
         manifest = {
             "snapshot_id": sid,
             "parent": snaps[-1],
             "mode": "compact",
             "ts": time.time(),
-            "files": sorted(keep) + sorted(new_files),
+            "files": sorted(keep) + new_files,
             "schema": m["schema"],
         }
-        tmp = os.path.join(self._snapdir(name), f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(self._snapdir(name), f"v{sid:06d}.json"))
+        self._publish(self._manifest_path(name, sid), manifest, ".tmp-")
         return sid
 
     def expire_snapshots(self, name: str, keep_last: int = 1) -> tuple[int, int]:
@@ -164,8 +168,7 @@ class TableIO:
         removed = 0
         for sid in snaps:
             if sid not in keep:
-                os.remove(os.path.join(self._snapdir(name),
-                                       f"v{sid:06d}.json"))
+                os.remove(self._manifest_path(name, sid))
                 removed += 1
         # Compare realpaths: manifests store paths as spelled at commit
         # time, which may differ from this session's root spelling
@@ -201,10 +204,7 @@ class TableIO:
     # --- crawl-level checkpoint (atomic multi-table pin) -------------------
     def checkpoint(self, state: dict, table_snapshots: dict[str, int]) -> None:
         ck = {"state": state, "tables": table_snapshots, "ts": time.time()}
-        tmp = os.path.join(self.root, f".ck-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(ck, fh)
-        os.replace(tmp, os.path.join(self.root, "checkpoint.json"))
+        self._publish(os.path.join(self.root, "checkpoint.json"), ck, ".ck-")
 
     def load_checkpoint(self) -> dict | None:
         p = os.path.join(self.root, "checkpoint.json")

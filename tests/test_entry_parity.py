@@ -44,7 +44,7 @@ ORACLES = entry_mod.oracle_sql()
 
 
 def test_every_query_has_oracle():
-    assert set(ORACLES) <= set(QUERIES)
+    assert set(ORACLES) == set(QUERIES)
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))

@@ -80,12 +80,3 @@ def test_politeness_budget_floor_is_one(spark):
     assert [r["seq"] for r in sel.collect()] == [0]
     assert sorted(r["seq"] for r in dfr.collect()) == [1, 2, 3]
 
-
-def test_politeness_host_col_passthrough(spark, politeness_fixture):
-    frontier, hosts = politeness_fixture
-    want_sel, _ = _naive_politeness(frontier, hosts, 10.0)
-    pre = frontier.withColumn(
-        "hc", F.regexp_extract("url", r"^https?://([^/]*)", 1))
-    sel, dfr = apply_politeness(pre, hosts, 10.0, host_col="hc")
-    assert {r["seq"] for r in sel.collect()} == want_sel
-    assert set(sel.columns) == {"url", "depth", "seq", "hc"}

@@ -1,8 +1,8 @@
-"""Unit tests for the round-4 additions: KMV distinct sketch
-(operators/sketch.py), multi-source BFS link distance
-(operators/graph.py:bfs_distances), and the unigram-LM fluency score
-(operators/text.py:unigram_logprob) — each against an independent
-pure-Python transcription."""
+"""Unit tests for the KMV distinct sketch (operators/sketch.py), the
+unigram-LM fluency score (operators/text.py:unigram_logprob), shingle
+containment and incremental MinHash (operators/dedup.py) and priority
+sampling (operators/pipeline.py:priority_sample) — each against an
+independent pure-Python transcription."""
 
 import hashlib
 import math
@@ -50,61 +50,6 @@ class TestKmvDistinct:
         row = self._run(spark, vals, k=512)
         # rel. error ~ 1/sqrt(510) ≈ 4.4%; allow 5 sigma
         assert abs(row["est_distinct"] - 5000) / 5000 < 0.25
-
-
-def _py_bfs(edges, seeds, max_hops):
-    adj = {}
-    for s, d in set(edges):
-        adj.setdefault(s, set()).add(d)
-    dist = {v: 0 for v in seeds}
-    frontier = set(seeds)
-    for hop in range(1, max_hops + 1):
-        nxt = set()
-        for u in frontier:
-            for v in adj.get(u, ()):
-                if v not in dist:
-                    nxt.add(v)
-        for v in nxt:
-            dist[v] = hop
-        frontier = nxt
-    return dist
-
-
-class TestBfsDistances:
-    EDGES = [
-        (0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (5, 6),   # chain
-        (2, 0),                                           # cycle back
-        (1, 1),                                           # self loop
-        (7, 8), (8, 7),                                   # detached 2-cycle
-        (0, 2), (0, 2),                                   # parallel edges
-    ]
-
-    def _spark_bfs(self, spark, edges, seeds, max_hops):
-        from librecrawl_spark.operators.graph import bfs_distances
-
-        e = spark.createDataFrame(edges, schema="src long, dst long")
-        s = spark.createDataFrame([(x,) for x in seeds], schema="node long")
-        out = bfs_distances(e, s, max_hops=max_hops)
-        return {r["node"]: r["dist"] for r in out.collect()}
-
-    def test_single_seed_matches_python(self, spark):
-        got = self._spark_bfs(spark, self.EDGES, [0], 4)
-        assert got == _py_bfs(self.EDGES, [0], 4)
-        # shortcut edge (0,2) puts 5 exactly at the hop bound; 6 is out
-        assert got[5] == 4 and 6 not in got
-        # detached component unreached
-        assert 7 not in got and 8 not in got
-
-    def test_multi_seed_takes_minimum(self, spark):
-        got = self._spark_bfs(spark, self.EDGES, [0, 4], 4)
-        assert got == _py_bfs(self.EDGES, [0, 4], 4)
-        assert got[5] == 1 and got[4] == 0
-        # 3 is reachable from seed 0 at hop 2 via the (0,2) shortcut
-        assert got[3] == 2
-
-    def test_seed_not_in_graph(self, spark):
-        got = self._spark_bfs(spark, self.EDGES, [99], 3)
-        assert got == {99: 0}
 
 
 def _py_unigram(docs):
@@ -211,60 +156,6 @@ class TestContainmentPairs:
         jp = ngram_jaccard_pairs(df, threshold=0.8).collect()
         assert any(r["doc_inner"] == 2 and r["doc_outer"] == 1 for r in cp)
         assert jp == []  # symmetric Jaccard can't see the embedding
-
-
-def _py_hits(edges, iters=2, r=8):
-    nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
-    n = len(nodes)
-    h = {v: round(1.0 / n, r) for v in nodes}
-    a = {}
-    for _ in range(iters):
-        araw = {}
-        for s, d in edges:
-            araw[d] = araw.get(d, 0.0) + h[s]
-        t = sum(araw.values())
-        a = {v: round(araw.get(v, 0.0) / t, r) for v in nodes}
-        hraw = {}
-        for s, d in edges:
-            hraw[s] = hraw.get(s, 0.0) + a[d]
-        t2 = sum(hraw.values())
-        h = {v: round(hraw.get(v, 0.0) / t2, r) for v in nodes}
-    return {v: (h[v], a[v]) for v in nodes}
-
-
-class TestHits:
-    EDGES = [
-        (0, 3), (1, 3), (2, 3),      # 3 is the authority
-        (0, 4), (1, 4),
-        (5, 0),                      # 5 points at a hub
-        (6, 3), (6, 4), (6, 0),     # 6 is the strongest hub
-        (6, 3),                      # parallel edge counts twice
-    ]
-
-    def test_matches_python_transcription(self, spark):
-        from librecrawl_spark.operators.graph import hits
-
-        e = spark.createDataFrame(self.EDGES, schema="src long, dst long")
-        got = {r["node"]: (r["hub"], r["authority"])
-               for r in hits(e, iters=2).collect()}
-        want = _py_hits(self.EDGES)
-        assert set(got) == set(want)
-        for v in want:
-            assert abs(got[v][0] - want[v][0]) <= 1e-8, (v, got[v], want[v])
-            assert abs(got[v][1] - want[v][1]) <= 1e-8, (v, got[v], want[v])
-
-    def test_roles_are_separated(self, spark):
-        from librecrawl_spark.operators.graph import hits
-
-        e = spark.createDataFrame(self.EDGES, schema="src long, dst long")
-        got = {r["node"]: r for r in hits(e, iters=2).collect()}
-        # 3 is the top authority; 6 the top hub; sink 3 has hub 0
-        assert max(got, key=lambda v: got[v]["authority"]) == 3
-        assert max(got, key=lambda v: got[v]["hub"]) == 6
-        assert got[3]["hub"] == 0.0 and got[6]["authority"] == 0.0
-        # L1 normalization: each score family sums to ~1
-        assert abs(sum(r["hub"] for r in got.values()) - 1.0) < 1e-6
-        assert abs(sum(r["authority"] for r in got.values()) - 1.0) < 1e-6
 
 
 class TestKmvDistinctBy:
