@@ -1734,6 +1734,33 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return changelog_compact(log)
 
+    def t_recrawl_priority(spark, sf):
+        """Freshness-driven recrawl priority (recrawl.recrawl_priority):
+        Cho & Garcia-Molina change-rate estimate per page from fetch
+        observations, times hours since last fetch. Observations come
+        from events: page = user, changed = click/purchase rows. One
+        hash aggregate on the key; all time math in exact integer
+        microseconds so the DuckDB twin feeds ln identical operands."""
+        from librecrawl_spark.operators.recrawl import recrawl_priority
+
+        e = _t(spark, sf, "events").select(
+            F.col("user_id").alias("url"), "ts",
+            F.col("event_type").isin("click", "purchase").alias("changed"))
+        return (recrawl_priority(e, as_of="2024-03-01 00:00:00")
+                .withColumnRenamed("key", "page"))
+
+    def p2_budget_alloc(spark, sf):
+        """Host crawl-budget split (recrawl.crawl_budget_allocation):
+        1000 pages across sources proportional to corpus bytes, 90-page
+        cap, largest-remainder rounding with host-name tie-break — the
+        per-run politeness planner upstream of p1's quota window."""
+        from librecrawl_spark.operators.recrawl import crawl_budget_allocation
+
+        hs = (_t(spark, sf, "documents")
+              .groupBy(F.col("source").alias("host"))
+              .agg(F.sum("n_chars").alias("score")))
+        return crawl_budget_allocation(hs, budget=1000, cap=90)
+
     def kw_cannibalization(spark, sf):
         """Keyword cannibalization report (keywords.
         keyword_cannibalization — cannibalization.py:604-860 rules) over
@@ -1910,6 +1937,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "inc_changelog_compact": inc_changelog_compact,
         "inc_snapshot_diff": inc_snapshot_diff,
         "pipe_domain_mix": pipe_domain_mix,
+        "t_recrawl_priority": t_recrawl_priority,
+        "p2_budget_alloc": p2_budget_alloc,
         "kw_cannibalization": kw_cannibalization,
         "kw_page_keywords": kw_page_keywords,
         "sk_kmv_distinct": sk_kmv_distinct,
@@ -3726,6 +3755,56 @@ def oracle_sql() -> dict[str, str]:
               FROM log)
             SELECT url, wave, content_hash, n_chars
             FROM r WHERE rn = 1 AND op = 'upsert'
+        """,
+        "t_recrawl_priority": """
+            WITH g AS (
+              SELECT user_id AS page, count(*) AS n_obs,
+                     CAST(sum(CASE WHEN event_type IN ('click', 'purchase')
+                              THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
+                     min(epoch_us(ts)) AS t0, max(epoch_us(ts)) AS t1
+              FROM events GROUP BY user_id
+              HAVING count(*) >= 2),
+            m AS (
+              SELECT page, n_obs, n_changed,
+                     CAST(t1 - t0 AS DOUBLE)
+                       / CAST(n_obs - 1 AS DOUBLE) / 3.6e9 AS ibar_h,
+                     CAST(epoch_us(TIMESTAMP '2024-03-01 00:00:00') - t1
+                          AS DOUBLE) / 3.6e9 AS age_h
+              FROM g)
+            SELECT page, n_obs, n_changed,
+                   round(abs(-ln((n_obs - n_changed + 0.5) / (n_obs + 0.5))
+                         / ibar_h), 6) AS lambda_per_hour,
+                   round(age_h, 6) AS age_hours,
+                   round(abs(-ln((n_obs - n_changed + 0.5) / (n_obs + 0.5))
+                         / ibar_h) * age_h, 6) AS priority
+            FROM m
+        """,
+        "p2_budget_alloc": """
+            WITH hs AS (
+              SELECT source AS host, CAST(sum(n_chars) AS BIGINT) AS score
+              FROM documents GROUP BY source),
+            tot AS (SELECT CAST(sum(score) AS DOUBLE) AS t FROM hs),
+            d AS (
+              SELECT host, score,
+                     least(CAST(90 AS BIGINT),
+                           CAST(floor(1000.0 * score / t) AS BIGINT)) AS base,
+                     1000.0 * score / t
+                       - floor(1000.0 * score / t) AS frac,
+                     CAST(90 AS BIGINT)
+                       - least(CAST(90 AS BIGINT),
+                                CAST(floor(1000.0 * score / t) AS BIGINT))
+                       AS headroom
+              FROM hs, tot),
+            r AS (
+              SELECT *, 1000 - sum(base) OVER () AS leftover,
+                     row_number() OVER (
+                       ORDER BY CASE WHEN headroom > 0 THEN frac
+                                     ELSE -1.0 END DESC, host ASC) AS rk
+              FROM d)
+            SELECT host, score,
+                   base + CASE WHEN headroom > 0 AND rk <= leftover
+                               THEN 1 ELSE 0 END AS allocated
+            FROM r
         """,
         "kw_cannibalization": """
             WITH tk AS (
