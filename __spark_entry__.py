@@ -38,6 +38,22 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _as_pages(df: DataFrame) -> DataFrame:
+    """``df`` widened to the issue operators' pages contract, the
+    extractor's PAGE_SCHEMA without links/candidates: every column it
+    does not build is NULL."""
+    from pyspark.sql.types import StructType
+
+    from librecrawl_spark.operators.extract import PAGE_SCHEMA
+
+    return df.select(*[
+        F.col(f.name) if f.name in df.columns
+        else F.lit(None).cast(f.dataType).alias(f.name)
+        for f in StructType.fromDDL(PAGE_SCHEMA).fields
+        if f.name not in ("links", "candidates")
+    ])
+
+
 # ---------------------------------------------------------------------------
 # entry — flagship: one frontier-scheduling wave over sf0.001
 # ---------------------------------------------------------------------------
@@ -741,18 +757,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .when(F.col("l_linenumber") % 3 == 2, F.lit("#f"))
             .otherwise(F.lit(""))
         )
+        # (l_orderkey, l_linenumber) repeats in this table: equal link
+        # orders tie-break on target URL, as the examples' struct sort does
         links = li.select(
+            F.lit(0).alias("src_wave"), F.col("l_orderkey").cast("long").alias("src_seq"),
+            F.col("l_linenumber").cast("int").alias("pos"),
             F.concat(F.lit("https://g.example/o"), F.col("l_orderkey").cast("string")).alias("source_url"),
             F.concat(F.lit("https://g.example/p"), F.col("l_partkey").cast("string"), suffix).alias("target_url"),
             F.lit(True).alias("is_internal"),
         )
         part = _t(spark, sf, "part")
-        pages = part.select(
+        pages = _as_pages(part.select(
             F.concat(F.lit("https://g.example/p"), F.col("p_partkey").cast("string")).alias("url"),
+            F.lit(0).alias("wave"), F.col("p_partkey").cast("long").alias("seq"),
             F.when(F.col("p_partkey") % 10 == 3, F.lit(301))
             .when(F.col("p_partkey") % 10 == 7, F.lit(308))
             .otherwise(F.lit(200)).alias("status_code"),
-        )
+        ))
         out = links_to_redirects(pages, links)
         return out.select(
             "url", "type", "category", "issue", "details", "n_links_to_redirects",
@@ -770,10 +791,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         tgt2 = mk(i + 3)
         en = F.struct(F.lit("en").alias("lang"), tgt1.alias("url"))
         de = F.struct(F.lit("de").alias("lang"), tgt2.alias("url"))
-        pages = d.select(
-            url.alias("url"),
+        pages = _as_pages(d.select(
+            url.alias("url"), F.lit(0).alias("wave"), i.cast("long").alias("seq"),
+            F.lit(200).alias("status_code"),
             F.when(i % 5 == 0, F.array(en, de)).otherwise(F.array(en)).alias("hreflang"),
-        )
+        ))
         return hreflang_reciprocity(pages).select(
             "url", "type", "category", "issue", "details", "hreflang_target", "lang"
         )
@@ -785,6 +807,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         i = F.col("doc_id")
         pages = d.select(
             F.concat(F.lit("https://c.example/"), i.cast("string")).alias("url"),
+            F.lit(0).alias("wave"), i.cast("long").alias("seq"),
             F.expr("concat('Title ', substr(text, 1, 10 + cast(doc_id % 40 AS int)))").alias("title"),
             F.expr("concat('Desc ', substr(text, 20, 30))").alias("meta_description"),
             F.expr("substr(text, 5, 12)").alias("h1"),
@@ -894,11 +917,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .otherwise(F.lit("12"))                  # pattern fail
         )
         url = F.concat(F.lit("https://l.example/"), i.cast("string"))
-        pages = d.select(
-            url.alias("url"),
+        pages = _as_pages(d.select(
+            url.alias("url"), F.lit(0).alias("wave"), i.cast("long").alias("seq"),
+            F.lit(200).alias("status_code"),
             F.array(F.struct(code.alias("lang"),
                              F.concat(url, F.lit("-alt")).alias("url"))).alias("hreflang"),
-        )
+        ))
         return hreflang_invalid_codes(pages).select(
             "url", "type", "category", "issue", "details", "lang", "target"
         )
@@ -921,13 +945,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .when(k % 7 == 4, F.lit(0))
             .otherwise(F.lit(200))
         )
-        pages = part.filter(k % 3 == 0).select(
-            url.alias("url"),
+        pages = _as_pages(part.filter(k % 3 == 0).select(
+            url.alias("url"), F.lit(0).alias("wave"), k.cast("long").alias("seq"),
             status.alias("status_code"),
             F.when(k % 11 == 3, F.lit("noindex")).otherwise(F.lit("")).alias("robots"),
             F.when(k % 13 == 2, F.lit("https://s.example/"))
             .otherwise(F.lit("")).alias("canonical_url"),
-        )
+        ))
         return sitemap_issue_rows(sm, pages)
 
     def s2_size_gate(spark, sf):
@@ -984,13 +1008,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .when(k % 7 == 2, F.lit(301))
             .otherwise(F.lit(200))
         )
-        pages = part.filter(k % 3 == 0).select(
-            url.alias("url"),
+        pages = _as_pages(part.filter(k % 3 == 0).select(
+            url.alias("url"), F.lit(0).alias("wave"), k.cast("long").alias("seq"),
             status.alias("status_code"),
             F.when(k % 11 == 3, F.lit("noindex")).otherwise(F.lit("")).alias("robots"),
             F.when(k % 13 == 2, F.lit("https://s.example/"))
             .otherwise(F.lit("")).alias("canonical_url"),
-        )
+        ))
         return sitemap_health(sm, pages)
 
     def c14_backoff_math(spark, sf):
@@ -2689,7 +2713,8 @@ def oracle_sql() -> dict[str, str]:
             WITH links AS (
               SELECT 'https://g.example/o' || CAST(l_orderkey AS VARCHAR) AS source_url,
                      'https://g.example/p' || CAST(l_partkey AS VARCHAR) ||
-                     CASE CAST(l_linenumber % 3 AS INT) WHEN 1 THEN '/' WHEN 2 THEN '#f' ELSE '' END AS target_url
+                     CASE CAST(l_linenumber % 3 AS INT) WHEN 1 THEN '/' WHEN 2 THEN '#f' ELSE '' END AS target_url,
+                     l_linenumber AS pos
               FROM lineitem
             ),
             pages AS (
@@ -2703,18 +2728,18 @@ def oracle_sql() -> dict[str, str]:
               FROM pages WHERE status >= 300 AND status < 400
             ),
             l2 AS (
-              SELECT source_url, target_url,
+              SELECT source_url, target_url, pos,
                      regexp_replace(regexp_replace(lower(target_url), '#.*$', ''), '/+$', '') AS _t
               FROM links
             ),
-            j AS (SELECT l2.source_url, l2.target_url, r.status AS tstat
+            j AS (SELECT l2.source_url, l2.target_url, l2.pos, r.status AS tstat
                   FROM l2 JOIN redirecting r USING (_t))
             SELECT source_url AS url, 'warning' AS type, 'Links' AS category,
                    'Links: Internal Links to Redirects' AS issue,
                    CAST(count(*) AS VARCHAR) || ' internal links point to redirecting URLs: ' ||
                    array_to_string(list_slice(
                      list(target_url || ' (' || CAST(tstat AS VARCHAR) || ')'
-                          ORDER BY target_url, tstat), 1, 3), ', ') ||
+                          ORDER BY pos, target_url, tstat), 1, 3), ', ') ||
                    CASE WHEN count(*) > 3
                         THEN ', and ' || CAST(count(*) - 3 AS VARCHAR) || ' more'
                         ELSE '' END AS details,

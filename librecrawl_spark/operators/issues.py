@@ -1,10 +1,21 @@
 """Issue detection — the engine analogue of
 /root/reference/src/core/issue_detector.py (1981 LoC).
 
+Input contract: ``pages`` is what ``CrawlEngine`` produces, the
+extractor's ``PAGE_SCHEMA`` without ``links``/``candidates``, with fetch
+order in ``(wave, seq)``; ``links`` is the engine's link table, the
+``LINK_STRUCT`` columns plus collection order in ``(src_wave, src_seq,
+pos)``. Every detector reads those columns as they are; none checks
+whether a column exists.
+
 Per-page checks compile to ONE select of `when`-expressions building an
 array of issue structs, then a single explode — the whole per-page pass
-is JVM-side whole-stage codegen, no Python. Whole-crawl checks (J3-J7)
-are separate DataFrame jobs.
+is JVM-side whole-stage codegen, no Python. The features several checks
+share (liveness, page type, title/description lengths, robots flags)
+are projected once before it. The whole-crawl checks J3-J6 read one
+shared frame, the last crawl result per normalized URL
+(``_last_by_url``); built identically in each detector, its exchange
+runs once in the report's single union query and is reused elsewhere.
 
 Issue row shape matches the reference (issue_detector.py:116-121):
 (url, type in {error,warning,info}, category, issue, details).
@@ -189,22 +200,26 @@ def per_page_issues(pages: DataFrame) -> DataFrame:
     h1 = F.coalesce(F.col("h1"), F.lit(""))
     status = F.coalesce(F.col("status_code"), F.lit(0))
     wc = F.coalesce(F.col("word_count"), F.lit(0))
-    arch = is_archive_or_utility(url)
-    ptype = classify_page_type(url)
     robots = F.lower(F.coalesce(F.col("robots"), F.lit("")))
-    xrobots = (
-        F.lower(F.coalesce(F.col("x_robots_tag"), F.lit("")))
-        if "x_robots_tag" in pages.columns else F.lit("")
-    )
-    # issue_detector.py:879-886 — meta tag / X-Robots-Tag header sources
-    meta_noindex = robots.contains("noindex")
-    hdr_noindex = xrobots.contains("noindex")
-    meta_nofollow = robots.contains("nofollow")
-    hdr_nofollow = xrobots.contains("nofollow")
+    xrobots = F.lower(F.coalesce(F.col("x_robots_tag"), F.lit("")))
+    # the features many checks read, projected once: each is computed
+    # (and planned) once per row instead of inlined into every check
+    features = {
+        "live": status != 0,
+        "arch": is_archive_or_utility(url),
+        "ptype": classify_page_type(url),
+        "tlen": F.length(title),
+        "dlen": F.length(desc),
+        # issue_detector.py:879-886 — meta tag / X-Robots-Tag header sources
+        "meta_noindex": robots.contains("noindex"),
+        "hdr_noindex": xrobots.contains("noindex"),
+        "meta_nofollow": robots.contains("nofollow"),
+        "hdr_nofollow": xrobots.contains("nofollow"),
+    }
+    pages = pages.select("*", *[e.alias(f"_{k}") for k, e in features.items()])
+    (live, arch, ptype, tlen, dlen, meta_noindex, hdr_noindex, meta_nofollow,
+     hdr_nofollow) = (F.col(f"_{k}") for k in features)
     noindex = meta_noindex | hdr_noindex
-    tlen = F.length(title)
-    dlen = F.length(desc)
-    live = status != 0
 
     checks = [
         # connection failure (issue_detector.py:30-39); everything else
@@ -264,40 +279,38 @@ def per_page_issues(pages: DataFrame) -> DataFrame:
     ]
 
     # heading structure (issue_detector.py:273-308): first-heading-not-H1
-    # plus one Non-Sequential row per level skip — array-valued checks
-    multi: list[Column] = []
-    if "headings_structure" in pages.columns:
-        hs = F.coalesce(F.col("headings_structure"),
-                        F.expr("array()").cast("array<struct<level:int, text:string>>"))
-        first_level = F.get(hs, 0)["level"]
-        first_bad = live & (F.size(hs) > 0) & (first_level > 1)
-        checks.append(_mk(
-            first_bad,
-            F.when(arch, "info").otherwise("warning"), "SEO",
-            F.when(arch, F.concat(F.lit("H"), _s(first_level),
-                                  F.lit(" appears before H1 (Archive/Utility)")))
-            .otherwise(F.concat(F.lit("H"), _s(first_level),
-                                F.lit(" appears before H1"))),
-            F.concat(F.lit("The first heading is an H"), _s(first_level),
-                     F.lit(", should be H1."))))
-        skip_idx = F.when(
-            live & (F.size(hs) >= 2),
-            F.filter(
-                F.sequence(F.lit(2), F.size(hs)),
-                lambda k: (F.get(hs, k - 1)["level"] > F.get(hs, k - 2)["level"] + 1)
-                & (F.get(hs, k - 2)["level"] > 0),
-            ),
-        ).otherwise(F.expr("array()").cast("array<int>"))
-        multi.append(F.transform(
-            skip_idx,
-            lambda k: _istruct(
-                "warning", "SEO",
-                F.concat(F.lit("H"), _s(F.get(hs, k - 1)["level"]),
-                         F.lit(": Non-Sequential")),
-                F.concat(F.lit("Heading structure skips from H"),
-                         _s(F.get(hs, k - 2)["level"]), F.lit(" to H"),
-                         _s(F.get(hs, k - 1)["level"]))),
-        ))
+    # plus one Non-Sequential row per level skip (an array-valued check)
+    hs = F.coalesce(F.col("headings_structure"),
+                    F.expr("array()").cast("array<struct<level:int, text:string>>"))
+    first_level = F.get(hs, 0)["level"]
+    first_bad = live & (F.size(hs) > 0) & (first_level > 1)
+    checks.append(_mk(
+        first_bad,
+        F.when(arch, "info").otherwise("warning"), "SEO",
+        F.when(arch, F.concat(F.lit("H"), _s(first_level),
+                              F.lit(" appears before H1 (Archive/Utility)")))
+        .otherwise(F.concat(F.lit("H"), _s(first_level),
+                            F.lit(" appears before H1"))),
+        F.concat(F.lit("The first heading is an H"), _s(first_level),
+                 F.lit(", should be H1."))))
+    skip_idx = F.when(
+        live & (F.size(hs) >= 2),
+        F.filter(
+            F.sequence(F.lit(2), F.size(hs)),
+            lambda k: (F.get(hs, k - 1)["level"] > F.get(hs, k - 2)["level"] + 1)
+            & (F.get(hs, k - 2)["level"] > 0),
+        ),
+    ).otherwise(F.expr("array()").cast("array<int>"))
+    non_sequential = F.transform(
+        skip_idx,
+        lambda k: _istruct(
+            "warning", "SEO",
+            F.concat(F.lit("H"), _s(F.get(hs, k - 1)["level"]),
+                     F.lit(": Non-Sequential")),
+            F.concat(F.lit("Heading structure skips from H"),
+                     _s(F.get(hs, k - 2)["level"]), F.lit(" to H"),
+                     _s(F.get(hs, k - 1)["level"]))),
+    )
 
     # duplicate H2 + boilerplate allow-list (issue_detector.py:310-351):
     # duplicates in first-occurrence order (Counter iteration order)
@@ -432,12 +445,11 @@ def per_page_issues(pages: DataFrame) -> DataFrame:
 
     # accessibility + images (issue_detector.py:610-651, A4): lang
     # attribute, missing alt, missing width/height — category 'Images'
-    if "lang" in pages.columns:
-        checks.append(_mk(
-            live & (F.length(F.coalesce(F.col("lang"), F.lit(""))) == 0),
-            "info", "Accessibility", "Missing Language Attribute",
-            "Template issue: HTML tag missing lang attribute "
-            "(accessibility best practice)"))
+    checks.append(_mk(
+        live & (F.length(F.coalesce(F.col("lang"), F.lit(""))) == 0),
+        "info", "Accessibility", "Missing Language Attribute",
+        "Template issue: HTML tag missing lang attribute "
+        "(accessibility best practice)"))
     imgs = F.coalesce(F.col("images"), F.expr(
         "cast(array() as array<struct<src:string, alt:string,"
         " width:string, height:string>>)"))
@@ -506,8 +518,7 @@ def per_page_issues(pages: DataFrame) -> DataFrame:
     ]
 
     # performance (issue_detector.py:849-871)
-    rt = (F.coalesce(F.col("response_time"), F.lit(0.0))
-          if "response_time" in pages.columns else F.lit(0.0))
+    rt = F.coalesce(F.col("response_time"), F.lit(0.0))
     psize = F.coalesce(F.col("size"), F.lit(0))
     checks += [
         _mk(live & (rt > 3000), "error", "Performance", "Slow Response Time",
@@ -521,52 +532,46 @@ def per_page_issues(pages: DataFrame) -> DataFrame:
 
     # links (issue_detector.py:1081-1151) — per-page aggregations over the
     # links_data array via higher-order filters: no explode, no shuffle
-    has_ld = "links_data" in pages.columns
-    ld = (F.coalesce(
+    ld = F.coalesce(
         F.col("links_data"),
         F.expr("cast(array() as array<struct<href:string, absolute_url:string,"
                " text:string, rel:array<string>, target:string,"
                " is_internal:boolean>>)"),
-    ) if has_ld else F.expr(
-        "cast(array() as array<struct<href:string, absolute_url:string,"
-        " text:string, rel:array<string>, target:string, is_internal:boolean>>)"))
+    )
     ext_out = F.coalesce(F.col("external_links"), F.lit(0))
     checks.append(_mk(
         live & (ext_out > 50), "info", "Links",
         "Links: Pages With High External Outlinks",
         F.concat(F.lit("Page has "), _s(ext_out), F.lit(" external links"))))
-    if has_ld:
-        ltext = lambda l: F.trim(F.lower(F.coalesce(l["text"], F.lit(""))))
-        n_nofollow = F.size(F.filter(
-            ld, lambda l: l["is_internal"] & F.array_contains(l["rel"], "nofollow")))
-        # reference counts ALL empty-text links despite the "Internal" in
-        # the issue name (issue_detector.py:1114-1117); the stored
-        # links_data has no aria-label key, so that guard half is
-        # vacuously true. Text is lowered+stripped first (:1104).
-        n_empty = F.size(F.filter(ld, lambda l: ltext(l) == ""))
-        generic = F.array(*[F.lit(g) for g in
-                            ("click here", "read more", "more", "here",
-                             "link", "this", "go")])
-        n_generic = F.size(F.filter(
-            ld, lambda l: l["is_internal"] & F.array_contains(generic, ltext(l))))
-        checks += [
-            _mk(live & (n_nofollow > 0), "info", "Links",
-                "Links: Internal Nofollow Outlinks",
-                F.concat(_s(n_nofollow),
-                         F.lit(" internal links are marked nofollow"))),
-            _mk(live & (n_empty > 0), "warning", "Links",
-                "Links: Internal Outlinks With No Anchor Text",
-                F.concat(_s(n_empty), F.lit(" links have no anchor text"))),
-            _mk(live & (n_generic > 0), "warning", "Links",
-                "Links: Non-Descriptive Anchor Text",
-                F.concat(_s(n_generic),
-                         F.lit(' links use generic text like "click here"'))),
-        ]
+    ltext = lambda l: F.trim(F.lower(F.coalesce(l["text"], F.lit(""))))
+    n_nofollow = F.size(F.filter(
+        ld, lambda l: l["is_internal"] & F.array_contains(l["rel"], "nofollow")))
+    # reference counts ALL empty-text links despite the "Internal" in
+    # the issue name (issue_detector.py:1114-1117); the stored
+    # links_data has no aria-label key, so that guard half is
+    # vacuously true. Text is lowered+stripped first (:1104).
+    n_empty = F.size(F.filter(ld, lambda l: ltext(l) == ""))
+    generic = F.array(*[F.lit(g) for g in
+                        ("click here", "read more", "more", "here",
+                         "link", "this", "go")])
+    n_generic = F.size(F.filter(
+        ld, lambda l: l["is_internal"] & F.array_contains(generic, ltext(l))))
+    checks += [
+        _mk(live & (n_nofollow > 0), "info", "Links",
+            "Links: Internal Nofollow Outlinks",
+            F.concat(_s(n_nofollow),
+                     F.lit(" internal links are marked nofollow"))),
+        _mk(live & (n_empty > 0), "warning", "Links",
+            "Links: Internal Outlinks With No Anchor Text",
+            F.concat(_s(n_empty), F.lit(" links have no anchor text"))),
+        _mk(live & (n_generic > 0), "warning", "Links",
+            "Links: Non-Descriptive Anchor Text",
+            F.concat(_s(n_generic),
+                     F.lit(' links use generic text like "click here"'))),
+    ]
 
     # security, per-page part (issue_detector.py:1250-1297): mixed
-    # content + protocol-relative resources on https pages. The image
-    # half runs regardless of links_data presence (the reference checks
-    # images alone); the links href half needs the links_data column.
+    # content + protocol-relative resources on https pages
     mixed = F.transform(
         F.filter(imgs, lambda i: F.coalesce(i["src"], F.lit("")).startswith("http://")),
         lambda i: F.concat(F.lit("Image: "), i["src"]),
@@ -579,11 +584,9 @@ def per_page_issues(pages: DataFrame) -> DataFrame:
                F.concat(F.lit(", and "), _s(n_mixed - 5),
                         F.lit(" more"))).otherwise(F.lit("")),
     )
-    n_proto_rel = F.size(F.filter(
-        imgs, lambda i: F.coalesce(i["src"], F.lit("")).startswith("//")))
-    if has_ld:
-        n_proto_rel = n_proto_rel + F.size(F.filter(
-            ld, lambda l: F.coalesce(l["href"], F.lit("")).startswith("//")))
+    n_proto_rel = (
+        F.size(F.filter(imgs, lambda i: F.coalesce(i["src"], F.lit("")).startswith("//")))
+        + F.size(F.filter(ld, lambda l: F.coalesce(l["href"], F.lit("")).startswith("//"))))
     is_https = url.startswith("https://")
     checks += [
         _mk(live & is_https & (n_mixed > 0), "error", "Security",
@@ -598,39 +601,38 @@ def per_page_issues(pages: DataFrame) -> DataFrame:
     # structured data (issue_detector.py:675-847) — the schema analysis
     # (recursive @type walk, FAQ count, org/website flags) runs once in
     # the extraction pass; here the checks stay pure column expressions.
-    if "schema_types" in pages.columns:
-        no_data = (F.size("json_ld") == 0) & (F.size("schema_org") == 0)
-        types_has = lambda t: F.array_contains("schema_types", t)
-        checks += [
-            # reference early-returns after this check, so every other
-            # structured check is conditioned on NOT no_data
-            _mk(live & no_data, "warning", "Structured Data", "No Structured Data",
-                "Page has no JSON-LD or Schema.org markup"),
-            _mk(
-                live & ~no_data & (ptype == "important")
-                & ~F.col("has_organization") & ~F.col("has_website")
-                & ~types_has("Article") & ~types_has("BlogPosting") & ~types_has("Product"),
-                "info", "Structured Data", "Schema: Missing Organization/WebSite",
-                "Consider adding Organization or WebSite schema for brand visibility"),
-            _mk(live & ~no_data & types_has("FAQPage") & (F.col("faq_count") == 0),
-                "warning", "Structured Data", "Schema: FAQPage has no questions",
-                "FAQPage schema found but no Question items detected"),
-            _mk(live & ~no_data & types_has("FAQPage")
-                & (F.col("faq_count") > 0) & (F.col("faq_count") < 3),
-                "info", "Structured Data", "Schema: FAQPage has few questions",
-                F.concat(F.lit("Only "), _s(F.col("faq_count")),
-                         F.lit(" FAQ items found (3+ recommended)"))),
-            _mk(
-                live & ~no_data
-                & (types_has("Article") | types_has("BlogPosting") | types_has("NewsArticle"))
-                & ~F.col("article_fields_ok"),
-                "warning", "Structured Data", "Schema: Article missing required fields",
-                "Article schema should have headline and datePublished"),
-        ]
+    no_data = (F.size("json_ld") == 0) & (F.size("schema_org") == 0)
+    types_has = lambda t: F.array_contains("schema_types", t)
+    checks += [
+        # reference early-returns after this check, so every other
+        # structured check is conditioned on NOT no_data
+        _mk(live & no_data, "warning", "Structured Data", "No Structured Data",
+            "Page has no JSON-LD or Schema.org markup"),
+        _mk(
+            live & ~no_data & (ptype == "important")
+            & ~F.col("has_organization") & ~F.col("has_website")
+            & ~types_has("Article") & ~types_has("BlogPosting") & ~types_has("Product"),
+            "info", "Structured Data", "Schema: Missing Organization/WebSite",
+            "Consider adding Organization or WebSite schema for brand visibility"),
+        _mk(live & ~no_data & types_has("FAQPage") & (F.col("faq_count") == 0),
+            "warning", "Structured Data", "Schema: FAQPage has no questions",
+            "FAQPage schema found but no Question items detected"),
+        _mk(live & ~no_data & types_has("FAQPage")
+            & (F.col("faq_count") > 0) & (F.col("faq_count") < 3),
+            "info", "Structured Data", "Schema: FAQPage has few questions",
+            F.concat(F.lit("Only "), _s(F.col("faq_count")),
+                     F.lit(" FAQ items found (3+ recommended)"))),
+        _mk(
+            live & ~no_data
+            & (types_has("Article") | types_has("BlogPosting") | types_has("NewsArticle"))
+            & ~F.col("article_fields_ok"),
+            "warning", "Structured Data", "Schema: Article missing required fields",
+            "Article schema should have headline and datePublished"),
+    ]
 
-    arr = F.array_compact(F.array(*[c.otherwise(F.lit(None).cast(_ISSUE_T)) for c in checks]))
-    for m in multi:
-        arr = F.concat(arr, m)
+    arr = F.concat(
+        F.array_compact(F.array(*[c.otherwise(F.lit(None).cast(_ISSUE_T)) for c in checks])),
+        non_sequential)
     return (
         pages.select(url.alias("url"), F.explode(arr).alias("i"))
         .select("url", "i.*")
@@ -639,13 +641,10 @@ def per_page_issues(pages: DataFrame) -> DataFrame:
 
 # --- site-wide checks --------------------------------------------------------
 
-def _fetch_ord(pages: DataFrame):
-    """Fetch-order key for first-page attribution: (wave, seq) when the
-    pages frame carries them (the crawl plan always does), else a
-    deterministic URL fallback for bare unit fixtures."""
-    if "seq" in pages.columns and "wave" in pages.columns:
-        return F.struct("wave", "seq")
-    return F.struct(F.col("url").alias("wave"), F.col("url").alias("seq"))
+def _fetch_ord() -> Column:
+    """Fetch order: the reference appends results as it fetches them,
+    and the engine's pages carry that order as (wave, seq)."""
+    return F.struct("wave", "seq")
 
 
 def security_header_issues(pages: DataFrame) -> DataFrame:
@@ -654,50 +653,39 @@ def security_header_issues(pages: DataFrame) -> DataFrame:
     reference's reported_sitewide_issues set), attributed to the domain's
     first crawled page in fetch order and emitted as scheme://domain.
 
-    Scale shape: one groupBy(domain) with min_by — no window, no
-    all-pages shuffle beyond the single keyed aggregation."""
+    Scale shape: one groupBy(domain) with one min_by per check, whose
+    ordering is NULL on the pages that pass it (min_by skips NULL
+    orderings) — no window, one keyed aggregation for all three."""
     hm = F.coalesce(F.col("response_headers"), F.expr("map()"))
-    live = F.col("status_code") != 0
-    domain = F.regexp_extract("url", _NETLOC_RE, 1)
-    base = (
-        pages.filter(live)
-        .select(
-            "url", _fetch_ord(pages).alias("_ord"),
-            domain.alias("domain"), _uscheme(F.col("url")).alias("scheme"),
-            (~F.map_contains_key(hm, "content-security-policy")).alias("miss_csp"),
-            (F.col("url").startswith("https://")
-             & ~F.map_contains_key(hm, "strict-transport-security")).alias("miss_hsts"),
-            (~F.map_contains_key(hm, "x-frame-options")).alias("miss_xfo"),
-        )
-    )
-    rows = []
-    for flag, typ, issue, details in (
-        ("miss_csp", "info", "Security: Missing Content-Security-Policy",
+    checks = (
+        (~F.map_contains_key(hm, "content-security-policy"),
+         "info", "Security: Missing Content-Security-Policy",
          "Server does not send Content-Security-Policy header. "
          "This is a site-wide configuration issue."),
-        ("miss_hsts", "warning", "Security: Missing HSTS Header",
+        (F.col("url").startswith("https://")
+         & ~F.map_contains_key(hm, "strict-transport-security"),
+         "warning", "Security: Missing HSTS Header",
          "HTTP Strict Transport Security (HSTS) is not enabled. "
          "Users effectively can be downgraded to HTTP."),
-        ("miss_xfo", "info", "Security: Missing X-Frame-Options",
+        (~F.map_contains_key(hm, "x-frame-options"),
+         "info", "Security: Missing X-Frame-Options",
          "Missing X-Frame-Options header can leave the site vulnerable "
          "to Clickjacking."),
-    ):
-        rows.append(
-            base.filter(F.col(flag))
-            .groupBy("domain")
-            .agg(F.min_by("scheme", F.col("_ord")).alias("scheme"))
-            .select(
-                F.concat("scheme", F.lit("://"), "domain").alias("url"),
-                F.lit(typ).alias("type"),
-                F.lit("Security").alias("category"),
-                F.lit(issue).alias("issue"),
-                F.lit(details).alias("details"),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
+    )
+    first = (
+        pages.filter(F.col("status_code") != 0)
+        .groupBy(F.regexp_extract("url", _NETLOC_RE, 1).alias("domain"))
+        .agg(*[F.min_by(_uscheme(F.col("url")), F.when(cond, _fetch_ord())).alias(f"s{k}")
+               for k, (cond, *_) in enumerate(checks)])
+    )
+    rows = F.array_compact(F.array(*[
+        F.when(F.col(f"s{k}").isNotNull(), F.struct(
+            F.concat(F.col(f"s{k}"), F.lit("://"), F.col("domain")).alias("url"),
+            F.lit(typ).alias("type"), F.lit("Security").alias("category"),
+            F.lit(issue).alias("issue"), F.lit(details).alias("details")))
+        for k, (_, typ, issue, details) in enumerate(checks)
+    ]))
+    return first.select(F.explode(rows).alias("i")).select("i.*")
 
 
 def unsafe_cross_origin_issues(pages: DataFrame) -> DataFrame:
@@ -724,7 +712,7 @@ def unsafe_cross_origin_issues(pages: DataFrame) -> DataFrame:
         F.col("l")["href"], r"(?i)^(?:[a-z][a-z0-9+.\-]*:)?//([^/?#]*)", 1)
     return (
         pages.filter(F.col("status_code") != 0)
-        .select("url", _fetch_ord(pages).alias("_ord"), F.explode(unsafe).alias("l"))
+        .select("url", _fetch_ord().alias("_ord"), F.explode(unsafe).alias("l"))
         .select("url", "_ord", dom.alias("domain"))
         .filter(F.col("domain") != "")
         .groupBy("domain")
@@ -745,36 +733,59 @@ def unsafe_cross_origin_issues(pages: DataFrame) -> DataFrame:
 
 # --- whole-crawl checks ------------------------------------------------------
 
-def _link_ord(links: DataFrame):
-    """Collection-order key for the links table: (src_wave, src_seq, pos)
-    when the crawl plan's ordering columns are present (all_links is
-    built per fetched page in fetch order, per-page in document order —
-    link_manager.py:120-199), else a deterministic source-URL fallback
-    for bare unit fixtures."""
-    cols = [c for c in ("src_wave", "src_seq", "pos") if c in links.columns]
-    if cols:
-        return F.struct(*cols)
-    return F.struct(F.col("source_url"))
+def _link_ord() -> Column:
+    """Link-collection order: all_links is built per fetched page in
+    fetch order, per page in document order (link_manager.py:120-199),
+    and the engine's links carry that order as (src_wave, src_seq, pos)."""
+    return F.struct("src_wave", "src_seq", "pos")
+
+
+def _last_by_url(pages: DataFrame) -> DataFrame:
+    """One row per normalized page URL `_k`. The reference's whole-crawl
+    detectors look crawl results up in dicts keyed on the normalized URL
+    and filled in fetch order, so the LAST result wins a collision
+    (issue_detector.py:1516-1521, 1643-1654, 1736-1746, 1854-1855):
+    that result is `last`. url_hreflang_map (:1845-1862) takes only the
+    results that carry hreflangs: `hl_last` is the last of those, NULL
+    when there is none.
+
+    J3-J6 all read this frame. It is one collect_list, not a max_by per
+    rule: Spark prunes the aggregates a detector does not read, so two
+    would give the detectors different plans, where one gives them all
+    the same plan, whose exchange runs once and is reused elsewhere in
+    the report."""
+    hl = F.coalesce(F.col("hreflang"),
+                    F.expr("array()").cast("array<struct<lang:string, url:string>>"))
+    noindex = (F.lower(F.coalesce("robots", F.lit(""))).contains("noindex")
+               | F.lower(F.coalesce("x_robots_tag", F.lit(""))).contains("noindex"))
+    results = F.collect_list(F.struct(
+        _fetch_ord().alias("ord"), "url", "status_code", noindex.alias("noindex"),
+        F.coalesce("canonical_url", F.lit("")).alias("canonical_url"), hl.alias("hl")))
+    # `ord` leads each struct and is unique, so array_max is the last
+    # result. The NULL-key filter is stated here, not inferred per join,
+    # so that every detector's copy of the aggregate's input is the same.
+    return (
+        pages.groupBy(_norm_cmp(F.col("url")).alias("_k"))
+        .agg(results.alias("_r"))
+        .filter(F.col("_k").isNotNull())
+        .select("_k", F.array_max("_r").alias("last"),
+                F.array_max(F.filter("_r", lambda r: F.size(r["hl"]) > 0)).alias("hl_last"))
+    )
 
 
 def links_to_redirects(pages: DataFrame, links: DataFrame) -> DataFrame:
     """J4 (issue_detector.py:1628-1718): internal links whose target is a
     3xx page, grouped by source page; details carry the first 3
     '{target} ({status})' examples in link-collection order."""
-    # url_status_map last-wins on normalized collisions (issue_detector
-    # .py:1643-1654), so reduce pages per normalized key first
     redirecting = (
-        pages.select(_norm_cmp(F.col("url")).alias("_t"), "status_code",
-                     _fetch_ord(pages).alias("_ord"))
-        .groupBy("_t")
-        .agg(F.max_by("status_code", F.col("_ord")).alias("_tstat"))
+        _last_by_url(pages).select("_k", F.col("last.status_code").alias("_tstat"))
         .filter((F.col("_tstat") >= 300) & (F.col("_tstat") < 400))
     )
     j = (
         links.filter("is_internal")
-        .select("source_url", "target_url", _norm_cmp(F.col("target_url")).alias("_t"),
-                _link_ord(links).alias("_lord"))
-        .join(redirecting, "_t")
+        .select("source_url", "target_url", _norm_cmp(F.col("target_url")).alias("_k"),
+                _link_ord().alias("_lord"))
+        .join(redirecting, "_k")
     )
     g = (
         j.groupBy("source_url")
@@ -810,27 +821,19 @@ def broken_link_sources(pages: DataFrame, links: DataFrame) -> DataFrame:
     normalized-URL match). The issue LABEL itself is dynamic; details
     list the first 5 sources in link-collection order; status 0 targets
     are 'warning', 4xx/5xx 'error'."""
-    # url_status_map is keyed on the normalized URL, last result in
-    # fetch order winning a collision (issue_detector.py:1736-1746)
     broken = (
-        pages.select(_norm_cmp(F.col("url")).alias("_t"), "url", "status_code",
-                     _fetch_ord(pages).alias("_ord"))
-        .groupBy("_t")
-        .agg(F.max_by(F.struct("url", "status_code"), F.col("_ord")).alias("_v"))
-        .select("_t", "_v.*")
+        _last_by_url(pages).select("_k", "last.url", "last.status_code")
         .filter((F.col("status_code") >= 400) | (F.col("status_code") == 0))
     )
     srcs = (
-        links.withColumn("_t", _norm_cmp(F.col("target_url")))
-        .withColumn("_ord", _link_ord(links))
-        .groupBy("_t")
+        links.groupBy(_norm_cmp(F.col("target_url")).alias("_k"))
         .agg(F.transform(
             F.array_sort(F.collect_list(F.struct(
-                F.col("_ord").alias("o"), F.col("source_url").alias("s")))),
+                _link_ord().alias("o"), F.col("source_url").alias("s")))),
             lambda x: x["s"],
         ).alias("linked_from"))
     )
-    j = broken.join(srcs, "_t")
+    j = broken.join(srcs, "_k")
     n = F.size("linked_from")
     return j.select(
         "url",
@@ -862,48 +865,39 @@ _VALID_LANG_CODES = (
 _HREFLANG_RE = r"(?i)^[a-z]{2,3}(-[A-Za-z]{2,4})?(-[A-Za-z]{2})?$|^x-default$"
 
 
-def _hreflang_pages(pages: DataFrame) -> DataFrame:
-    """url_hreflang_map (issue_detector.py:1845-1862): one entry per
-    normalized URL with non-empty hreflangs, LAST result in fetch order
-    winning a collision."""
-    hl = F.coalesce(F.col("hreflang"),
-                    F.expr("array()").cast("array<struct<lang:string, url:string>>"))
+def _hreflang_edges(last: DataFrame) -> DataFrame:
+    """One row per hreflang entry of each url_hreflang_map page, keeping
+    duplicates, since the reference emits one issue row per entry. The
+    checks read only the entries with a lang and a target (`edge`,
+    issue_detector.py:1874-1879); the reciprocity lookup reads every
+    entry's url. Each row carries its target's entries in url_status_map
+    (`t_status`, the last result's status, NULL when never crawled) and
+    url_hreflang_map (`t_has_hl`)."""
+    targets = last.select(
+        F.col("_k").alias("norm_target"), F.col("last.status_code").alias("t_status"),
+        F.col("hl_last").isNotNull().alias("t_has_hl"))
     return (
-        pages.filter(F.size(hl) > 0)
-        .select(_norm_cmp(F.col("url")).alias("norm_source"), "url",
-                hl.alias("hl"), _fetch_ord(pages).alias("_ord"))
-        .groupBy("norm_source")
-        .agg(F.max_by(F.struct(F.col("url").alias("source"),
-                               F.col("hl").alias("hl")), F.col("_ord")).alias("_v"))
-        .select("norm_source", "_v.*")
-    )
-
-
-def _hreflang_edges(pages: DataFrame) -> DataFrame:
-    """Per-page hreflang edges, skipping empty lang/target entries
-    (issue_detector.py:1874-1879). Keeps duplicate entries — the
-    reference emits one issue row per entry."""
-    return (
-        _hreflang_pages(pages)
-        .select("source", "norm_source", F.explode("hl").alias("h"))
+        last.filter(F.col("hl_last").isNotNull())
+        .select(F.col("hl_last.url").alias("source"), F.col("_k").alias("norm_source"),
+                F.explode("hl_last.hl").alias("h"))
         .select("source", "norm_source",
                 F.coalesce(F.col("h.lang"), F.lit("")).alias("lang"),
                 F.coalesce(F.col("h.url"), F.lit("")).alias("target"))
-        .filter((F.col("lang") != "") & (F.col("target") != ""))
-        .withColumn("norm_target", _norm_cmp(F.col("target")))
+        .select("*", ((F.col("lang") != "") & (F.col("target") != "")).alias("edge"),
+                _norm_cmp(F.col("target")).alias("norm_target"))
+        .join(targets, "norm_target", "left")
     )
 
 
-def hreflang_invalid_codes(pages: DataFrame) -> DataFrame:
+def _invalid_code_rows(edges: DataFrame) -> DataFrame:
     """C12 (issue_detector.py:1883-1902): format check first ('Invalid
     Language Code'), then primary-subtag lookup ('Unknown Language
     Code') — two distinct labels, transcribed details."""
-    edges = _hreflang_edges(pages)
     primary = F.lower(F.element_at(F.split(F.col("lang"), "-"), 1))
     bad_fmt = ~F.col("lang").rlike(_HREFLANG_RE)
     unknown = (~bad_fmt & ~primary.isin(*_VALID_LANG_CODES)
                & (F.lower(F.col("lang")) != "x-default"))
-    return edges.filter(bad_fmt | unknown).select(
+    return edges.filter(F.col("edge") & (bad_fmt | unknown)).select(
         F.col("source").alias("url"), F.lit("warning").alias("type"),
         F.lit("International").alias("category"),
         F.when(bad_fmt, F.lit("Hreflang: Invalid Language Code"))
@@ -918,26 +912,19 @@ def hreflang_invalid_codes(pages: DataFrame) -> DataFrame:
     )
 
 
-def hreflang_reciprocity(pages: DataFrame) -> DataFrame:
+def _reciprocity_rows(edges: DataFrame) -> DataFrame:
     """J6 (issue_detector.py:1908-1928): an edge (A -> B) is flagged only
     when B itself carries hreflang tags (it is in url_hreflang_map) and
-    none of B's edges point back to A (normalized comparison)."""
-    edges = _hreflang_edges(pages)
-    has_hl = _hreflang_pages(pages).select(
-        F.col("norm_source").alias("hl_norm"))
-    back = edges.select(
-        F.col("norm_source").alias("b_source"), F.col("norm_target").alias("b_target")
-    ).distinct()
-    j = (
-        edges.join(F.broadcast(has_hl), edges["norm_target"] == has_hl["hl_norm"])
-        .join(
-            back,
-            (F.col("norm_target") == back["b_source"])
-            & (F.col("norm_source") == back["b_target"]),
-            "left",
-        )
-    )
-    return j.filter(F.col("b_source").isNull()).select(
+    none of B's entries, with or without a lang, points back to A
+    (normalized comparison)."""
+    back = edges.select(F.col("norm_source").alias("b_source"),
+                        F.col("norm_target").alias("b_target"))
+    return edges.filter(F.col("edge") & F.col("t_has_hl")).join(
+        back,
+        (F.col("norm_target") == back["b_source"])
+        & (F.col("norm_source") == back["b_target"]),
+        "left_anti",
+    ).select(
         F.col("source").alias("url"), F.lit("warning").alias("type"),
         F.lit("International").alias("category"),
         F.lit("Hreflang: Missing Reciprocal Link").alias("issue"),
@@ -948,43 +935,32 @@ def hreflang_reciprocity(pages: DataFrame) -> DataFrame:
     )
 
 
-def hreflang_non200(pages: DataFrame) -> DataFrame:
+def _non200_rows(edges: DataFrame) -> DataFrame:
     """issue_detector.py:1933-1943: every hreflang edge whose target is
     4xx/5xx, connection-failed, or never crawled (lookup default 0)."""
-    edges = _hreflang_edges(pages)
-    # url_status_map last-wins on normalized collisions (:1854-1855)
-    statuses = (
-        pages.select(_norm_cmp(F.col("url")).alias("s_norm"), "status_code",
-                     _fetch_ord(pages).alias("_ord"))
-        .groupBy("s_norm")
-        .agg(F.max_by("status_code", F.col("_ord")).alias("t_status"))
-    )
-    j = edges.join(statuses, edges["norm_target"] == statuses["s_norm"], "left")
     ts = F.coalesce(F.col("t_status"), F.lit(0))
-    return j.filter((ts >= 400) | (ts == 0)).select(
+    return edges.filter(F.col("edge") & ((ts >= 400) | (ts == 0))).select(
         F.col("source").alias("url"), F.lit("error").alias("type"),
         F.lit("International").alias("category"),
         F.lit("Hreflang: Points to Non-200 Page").alias("issue"),
         F.concat(F.lit("Hreflang ("), F.col("lang"), F.lit(") points to "),
                  F.col("target"), F.lit(" which returns status "),
                  _s(ts)).alias("details"),
-        "lang", F.col("target").alias("hreflang_target"),
     )
 
 
-def hreflang_missing_self(pages: DataFrame) -> DataFrame:
+def _missing_self_rows(last: DataFrame) -> DataFrame:
     """issue_detector.py:1954-1963: pages with hreflang tags but no
     self-referencing entry (only non-empty lang+url entries count as a
     self-reference, matching the loop's `continue`)."""
-    hp = _hreflang_pages(pages)
     has_self = F.exists(
-        F.col("hl"),
+        F.col("hl_last.hl"),
         lambda h: (F.coalesce(h["lang"], F.lit("")) != "")
         & (F.coalesce(h["url"], F.lit("")) != "")
-        & (_norm_cmp(h["url"]) == F.col("norm_source")),
+        & (_norm_cmp(h["url"]) == F.col("_k")),
     )
-    return hp.filter(~has_self).select(
-        F.col("source").alias("url"), F.lit("info").alias("type"),
+    return last.filter(F.col("hl_last").isNotNull() & ~has_self).select(
+        F.col("hl_last.url").alias("url"), F.lit("info").alias("type"),
         F.lit("International").alias("category"),
         F.lit("Hreflang: Missing Self-Reference").alias("issue"),
         F.lit("Page has hreflang tags but no self-referencing hreflang")
@@ -992,14 +968,27 @@ def hreflang_missing_self(pages: DataFrame) -> DataFrame:
     )
 
 
+def hreflang_invalid_codes(pages: DataFrame) -> DataFrame:
+    """C12 rows with each edge's lang and target."""
+    return _invalid_code_rows(_hreflang_edges(_last_by_url(pages)))
+
+
+def hreflang_reciprocity(pages: DataFrame) -> DataFrame:
+    """J6 rows with each edge's hreflang_target and lang."""
+    return _reciprocity_rows(_hreflang_edges(_last_by_url(pages)))
+
+
 def hreflang_issues(pages: DataFrame) -> DataFrame:
-    """All four hreflang families (issue_detector.py:1817-1969)."""
+    """All four hreflang families (issue_detector.py:1817-1969), built
+    from one edge frame."""
     core = ["url", "type", "category", "issue", "details"]
+    last = _last_by_url(pages)
+    edges = _hreflang_edges(last)
     return (
-        hreflang_invalid_codes(pages).select(*core)
-        .unionByName(hreflang_reciprocity(pages).select(*core))
-        .unionByName(hreflang_non200(pages).select(*core))
-        .unionByName(hreflang_missing_self(pages).select(*core))
+        _invalid_code_rows(edges).select(*core)
+        .unionByName(_reciprocity_rows(edges).select(*core))
+        .unionByName(_non200_rows(edges))
+        .unionByName(_missing_self_rows(last))
     )
 
 
@@ -1014,32 +1003,12 @@ def sitemap_cross_ref(sitemap_urls: DataFrame, pages: DataFrame) -> DataFrame:
     sm = sitemap_urls.select(
         F.col("url").alias("sitemap_url"), _norm_cmp(F.col("url")).alias("_k")
     )
-    xr = (F.lower(F.coalesce("x_robots_tag", F.lit("")))
-          if "x_robots_tag" in pages.columns else F.lit(""))
-    pg = pages.select(
-        _norm_cmp(F.col("url")).alias("_k"), "status_code",
-        (F.lower(F.coalesce("robots", F.lit(""))).contains("noindex")
-         | xr.contains("noindex")).alias("_noindex"),
-        F.coalesce("canonical_url", F.lit("")).alias("canonical_url"),
-        F.col("url").alias("crawled_url"),
-        _fetch_ord(pages).alias("_ord"),
-    )
-    # results_lookup is a dict keyed on the normalized URL — the LAST
-    # result in fetch order wins on a collision (issue_detector.py:
-    # 1516-1521); one keyed reduce, no window
-    pg = (
-        pg.groupBy("_k")
-        .agg(F.max_by(
-            F.struct("status_code", "_noindex", "canonical_url", "crawled_url"),
-            F.col("_ord")).alias("_v"))
-        .select("_k", "_v.*")
-    )
-    j = sm.join(pg, "_k", "left")
+    j = sm.join(_last_by_url(pages).select("_k", "last.*"), "_k", "left")
     cls = (
-        F.when(F.col("crawled_url").isNull(), "not_crawled")
+        F.when(F.col("url").isNull(), "not_crawled")
         .when((F.col("status_code") >= 400) | (F.col("status_code") == 0), "error")
         .when((F.col("status_code") >= 300) & (F.col("status_code") < 400), "redirect")
-        .when(F.col("_noindex"), "noindex")
+        .when(F.col("noindex"), "noindex")
         .when(
             (F.length("canonical_url") > 0)
             & (_norm_cmp(F.col("canonical_url")) != F.col("_k")), "non_canonical")
@@ -1161,20 +1130,17 @@ def detect_all_issues(pages: DataFrame, links: DataFrame, *,
     core = ["url", "type", "category", "issue", "details"]
     pages_f = exclude_pages(pages, tuple(exclusion_patterns))
     parts = [
-        per_page_issues(pages_f).select(*core),
+        per_page_issues(pages_f),
         links_to_redirects(pages, links).select(*core),
         broken_link_sources(pages, links).select(*core),
-        hreflang_issues(pages).select(*core),
+        hreflang_issues(pages),
+        security_header_issues(pages_f),
+        unsafe_cross_origin_issues(pages_f),
     ]
     if sitemap_urls is not None:
-        parts.append(sitemap_issue_rows(sitemap_urls, pages).select(*core))
-    if "response_headers" in pages.columns:
-        parts.append(security_header_issues(pages_f).select(*core))
-    if "links_data" in pages.columns:
-        parts.append(unsafe_cross_origin_issues(pages_f).select(*core))
+        parts.append(sitemap_issue_rows(sitemap_urls, pages))
     if enable_duplication_check:
-        parts.append(
-            duplicate_content_issues(pages_f, duplication_threshold).select(*core))
+        parts.append(duplicate_content_issues(pages_f, duplication_threshold))
     out = parts[0]
     for part in parts[1:]:
         out = out.unionByName(part)
@@ -1206,7 +1172,9 @@ def dup_candidate_pairs(pages: DataFrame, threshold: float = 0.85) -> DataFrame:
        (threshold-0.8)/0.2 > 0, hence both h1 non-empty and the same
        ratio bound on h1 lengths.
     The conjuncts are evaluated inside the join (no extra shuffle), and
-    a 1e-9 slack keeps boundary pairs for the exact verify stage.
+    a 1e-9 slack keeps boundary pairs for the exact verify stage. At
+    threshold <= 0.65 cuts 1 and 2 bound nothing (need <= 0): the band
+    keys are one constant and every pair is a candidate.
 
     At threshold 0.85 these length cuts are provably the best LOSSLESS
     blocking available: the per-field similarity floor is only ~0.57,
@@ -1214,29 +1182,30 @@ def dup_candidate_pairs(pages: DataFrame, threshold: float = 0.85) -> DataFrame:
     content-based keys cannot be complete."""
     w = DUP_WEIGHTS
     need = (threshold - (1.0 - w["title"])) / w["title"]  # == the desc bound
-    if need <= 0:
-        raise ValueError("threshold too low for lossless title blocking; use <=0.65 path")
-    ratio_bound = need / (2.0 - need)  # min/max title length
-    base = 1.0 / ratio_bound
     need_h = (threshold - (1.0 - w["h1"])) / w["h1"]
 
-    # fetch order (wave, seq): the reference scores each pair as
-    # (earlier page, later page), and SequenceMatcher.ratio() is not
-    # symmetric. Pages without those columns tie and keep url order.
-    fetch_order = F.struct(*[F.col(c) if c in pages.columns else F.lit(0)
-                             for c in ("wave", "seq")])
+    # fetch order: the reference scores each pair as (earlier page,
+    # later page), and SequenceMatcher.ratio() is not symmetric
     d = pages.select(
-        "url", fetch_order.alias("fo"),
+        "url", _fetch_ord().alias("fo"),
         F.lower(F.trim(F.coalesce("title", F.lit("")))).alias("t"),
         F.lower(F.trim(F.coalesce("meta_description", F.lit("")))).alias("d"),
         F.lower(F.trim(F.coalesce("h1", F.lit("")))).alias("h"),
         F.coalesce("word_count", F.lit(0)).alias("wc"),
-    ).filter((F.length("t") > 0) & (F.length("d") > 0))
+    )
+    if need > 0:
+        d = d.filter((F.length("t") > 0) & (F.length("d") > 0))
+        base = 1.0 / (need / (2.0 - need))  # 1 / (min/max length ratio)
+        band, dband = (
+            F.floor(F.log(base, F.greatest(F.length(c), F.lit(1)).cast("double"))).cast("int")
+            for c in ("t", "d"))
+    else:
+        # threshold <= 0.65: a pair can reach it with no title or no
+        # description similarity, so every pair is a candidate (the
+        # length conjuncts below are vacuous too)
+        band = dband = F.lit(0)
     if need_h > 0:
         d = d.filter(F.length("h") > 0)
-
-    band = F.floor(F.log(float(base), F.greatest(F.length("t"), F.lit(1)).cast("double"))).cast("int")
-    dband = F.floor(F.log(float(base), F.greatest(F.length("d"), F.lit(1)).cast("double"))).cast("int")
     d = d.withColumn("band", band).withColumn("dband", dband)
     # a valid pair's bands differ by at most 1 on each key, but the
     # url_a<url_b pair order is independent of length order — probe all
@@ -1275,7 +1244,7 @@ def duplicate_content_pairs(pages: DataFrame, threshold: float = 0.85) -> DataFr
     similarity over (title, meta_description, h1, word_count); pairs with
     score >= threshold are duplicates.
 
-    Blocking (lossless for threshold > 0.65): a flagged pair needs
+    Blocking (see dup_candidate_pairs; for threshold > 0.65): a flagged pair needs
     title_sim >= (threshold-0.65)/0.35 AND desc_sim >= (threshold-0.65)/0.35,
     hence both titles and both descriptions non-empty, and SequenceMatcher
     ratio = 2M/(l1+l2) <= 2*min(l)/(l1+l2) forces a length-ratio bound
@@ -1340,17 +1309,13 @@ def duplicate_content_pairs(pages: DataFrame, threshold: float = 0.85) -> DataFr
 def duplicate_content_issues(pages: DataFrame, threshold: float = 0.85) -> DataFrame:
     """Two issue rows per duplicate pair (issue_detector.py:1404-1417)."""
     p = duplicate_content_pairs(pages, threshold)
-    a = p.select(
-        F.col("url_a").alias("url"),
+    # both orientations from one pass over the scored pairs
+    row = F.explode(F.array(
+        F.struct(F.col("url_a").alias("url"), F.col("url_b").alias("other")),
+        F.struct(F.col("url_b").alias("url"), F.col("url_a").alias("other"))))
+    return p.select(row.alias("r"), "pct").select(
+        "r.url", F.lit("warning").alias("type"), F.lit("Duplication").alias("category"),
+        F.lit("Duplicate Content Detected").alias("issue"),
         F.concat(F.lit("Content is "), F.col("pct"), F.lit("% similar to "),
-                 F.col("url_b")).alias("details"),
-    )
-    b = p.select(
-        F.col("url_b").alias("url"),
-        F.concat(F.lit("Content is "), F.col("pct"), F.lit("% similar to "),
-                 F.col("url_a")).alias("details"),
-    )
-    return a.unionByName(b).select(
-        "url", F.lit("warning").alias("type"), F.lit("Duplication").alias("category"),
-        F.lit("Duplicate Content Detected").alias("issue"), "details",
+                 F.col("r.other")).alias("details"),
     )

@@ -1,19 +1,23 @@
 """The benchmark's view of the package. ``perfbench/workloads.py`` calls
 the frontier (``FR``) and extraction (``X``) operators and
-``CrawlEngine`` directly, so every name it references and every keyword
-it passes must exist — checked here from the source, without a Spark
-session, so that removing one fails this suite and not only the
-benchmark run."""
+``CrawlEngine`` directly, and ``perfbench/tracing.py`` patches the layer
+entry points it lists in ``TRACED``, so every name they reference and
+every keyword the workloads pass must exist — checked here from the
+source, without a Spark session, so that removing or renaming one fails
+this suite and not only the benchmark run."""
 
 import ast
+import importlib
 import inspect
 import os
 
 from librecrawl_spark.operators import extract as X, frontier as FR
 from librecrawl_spark.plans.crawl import CrawlEngine
 
-WORKLOADS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                         "perfbench", "workloads.py")
+PERFBENCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                         "perfbench")
+WORKLOADS = os.path.join(PERFBENCH, "workloads.py")
+TRACING = os.path.join(PERFBENCH, "tracing.py")
 MODULES = {"FR": FR, "X": X}
 
 
@@ -58,3 +62,20 @@ def test_passed_keywords_are_accepted():
                 if k.arg is not None and k.arg not in params]
     assert calls >= 3
     assert not bad, bad
+
+
+def test_traced_hooks_resolve():
+    with open(TRACING) as f:
+        tree = ast.parse(f.read(), TRACING)
+    traced = next(ast.literal_eval(n.value) for n in tree.body
+                  if isinstance(n, ast.Assign)
+                  and any(getattr(t, "id", None) == "TRACED" for t in n.targets))
+    assert len(traced) >= 10
+    missing = []
+    for module, attr, _ in traced:
+        owner = importlib.import_module(module)
+        for part in attr.split("."):
+            owner = getattr(owner, part, None)
+        if not callable(owner):
+            missing.append(f"{module}.{attr}")
+    assert not missing, missing

@@ -42,25 +42,38 @@ def test_per_page_issue_shapes(pages):
     assert recovered and all(r["status_code"] == 200 for r in recovered)
 
 
-def test_per_page_issue_unit_rows(spark):
-    """Targeted unit rows for checks the crawl fixture may not reach:
-    missing description, noindex/nofollow, viewport, soft-404."""
+def _page_frame(spark, rows):
+    """Pages as the crawl engine passes them to the issue report: the
+    extractor's PAGE_SCHEMA without links/candidates. Columns a row does
+    not set are NULL."""
     from librecrawl_spark.operators.extract import PAGE_SCHEMA
     from pyspark.sql import Row
     from pyspark.sql.types import StructType
 
-    schema = StructType.fromDDL(PAGE_SCHEMA)
-    schema = StructType([f for f in schema.fields if f.name not in ("links", "candidates")])
-    base = {f.name: None for f in schema.fields}
-    base.update(url="https://x.example/some-page", depth=0, seq=0, wave=0,
-                status_code=200, content_type="text/html", size=9000,
-                is_internal=True, error=None, redirect_count=0, redirects=[],
-                redirect_chain=[], title="A fine title of reasonable length here",
-                meta_description="", h1="Welcome", h1_list=["Welcome"],
-                headings_structure=[], h2=[], h3=[], word_count=500,
-                canonical_url="https://x.example/some-page", robots="",
-                viewport="width=device-width", images=[], internal_links=1,
-                external_links=0, hreflang=[], json_ld_count=0)
+    schema = StructType([f for f in StructType.fromDDL(PAGE_SCHEMA).fields
+                         if f.name not in ("links", "candidates")])
+    return spark.createDataFrame(
+        [Row(**{f.name: r.get(f.name) for f in schema.fields}) for r in rows], schema)
+
+
+_UNIT_PAGE = dict(
+    url="https://x.example/some-page", depth=0, seq=0, wave=0,
+    status_code=200, content_type="text/html", size=9000,
+    is_internal=True, error=None, redirect_count=0, redirects=[],
+    redirect_chain=[], title="A fine title of reasonable length here",
+    meta_description="", h1="Welcome", h1_list=["Welcome"],
+    headings_structure=[], h2=[], h3=[], word_count=500,
+    canonical_url="https://x.example/some-page", robots="",
+    viewport="width=device-width", images=[], internal_links=1,
+    external_links=0, hreflang=[], json_ld_count=0, json_ld=[], schema_org=[],
+    schema_types=[], faq_count=0, has_organization=False, has_website=False,
+    article_fields_ok=False)
+
+
+def test_per_page_issue_unit_rows(spark):
+    """Targeted unit rows for checks the crawl fixture may not reach:
+    missing description, noindex/nofollow, viewport, soft-404."""
+    base = _UNIT_PAGE
     rows = [
         dict(base),  # clean page: only what the defaults trigger
         dict(base, url="https://x.example/p2", robots="noindex, nofollow"),
@@ -68,7 +81,7 @@ def test_per_page_issue_unit_rows(spark):
         dict(base, url="https://x.example/p4", title="404 Page Not Found",
              h1="page not found"),
     ]
-    df = spark.createDataFrame([Row(**r) for r in rows], schema)
+    df = _page_frame(spark, rows)
     iss = I.per_page_issues(df)
     by_url = {}
     for r in iss.collect():
@@ -178,8 +191,13 @@ def test_sitemap_issue_rows_match_oracle(spark, pages):
     pg_rows = [r.asDict(recursive=True) for r in pg.orderBy("wave", "seq").collect()]
     # sitemap list: every crawled URL plus variants exercising each class
     sm_urls = [r["url"] for r in pg_rows]
+    # an exact duplicate and a trailing-slash variant: each list entry
+    # is classified and tallied on its own
+    variant = next(u for u in sm_urls
+                   if not u.endswith("/") and "?" not in u and "#" not in u) + "/"
     sm_urls += ["https://site0.example/never-crawled-1",
-                "https://site0.example/never-crawled-2"]
+                "https://site0.example/never-crawled-2",
+                sm_urls[1], variant]
     from librecrawl_spark.oracle.refissues import RefIssueDetector
 
     det = RefIssueDetector()
@@ -190,9 +208,8 @@ def test_sitemap_issue_rows_match_oracle(spark, pages):
                   for r in I.sitemap_issue_rows(sm, pg).collect())
     assert got == want
     h = I.sitemap_health(sm, pg).collect()[0].asDict()
-    # engine health counts sitemap URLs after DISTINCT on normalized key;
-    # the oracle counts the raw list — this fixture has no normalized
-    # duplicates, so the tallies must agree key-for-key
+    # neither side dedups the list (issue_detector.py:1545 classifies
+    # every entry), so the tallies agree key-for-key with duplicates in it
     for k in ("total", "valid", "errors", "redirects", "noindex",
               "non_canonical", "not_crawled"):
         assert h[k] == summary[k], (k, h, summary)
@@ -220,15 +237,19 @@ def test_links_to_redirects(pages):
         assert set(r["redirect_targets"]) <= redirecting
 
 
-def test_duplicate_content_matches_reference_transcription(pages):
+@pytest.mark.parametrize("threshold", [0.6, 0.85])
+def test_duplicate_content_matches_reference_transcription(pages, threshold):
+    """At 0.6 a pair can reach the threshold with no title or no
+    description similarity, so blocking on those lengths would lose it."""
     pg, _ = pages
-    threshold = 0.85
     got = {
         (r["url_a"], r["url_b"]): r["similarity"]
         for r in I.duplicate_content_pairs(pg, threshold).collect()
     }
-    # direct O(n^2) transcription (issue_detector.py:1299-1431)
-    rows = pg.select("url", "title", "meta_description", "h1", "word_count").collect()
+    # direct O(n^2) transcription (issue_detector.py:1299-1431), pairs
+    # scored as (earlier page, later page) in fetch order
+    rows = pg.orderBy("wave", "seq").select(
+        "url", "title", "meta_description", "h1", "word_count").collect()
     data = [
         {
             "url": r["url"],
@@ -325,18 +346,12 @@ def test_issue_exclusion_patterns(spark, pages):
 
 
 def test_hreflang_invalid_codes(spark):
-    from librecrawl_spark.operators.extract import PAGE_SCHEMA
-    from pyspark.sql import Row
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromDDL(PAGE_SCHEMA)
-    schema = StructType([f for f in schema.fields if f.name in ("url", "hreflang")])
-    df = spark.createDataFrame(
-        [Row(url="https://x/1", hreflang=[{"lang": "en-US", "url": "https://x/2"},
-                                          {"lang": "zz", "url": "https://x/3"},
-                                          {"lang": "x-default", "url": "https://x/4"},
-                                          {"lang": "english", "url": "https://x/5"}])],
-        schema)
+    df = _page_frame(spark, [dict(
+        url="https://x/1", wave=0, seq=0, status_code=200,
+        hreflang=[{"lang": "en-US", "url": "https://x/2"},
+                  {"lang": "zz", "url": "https://x/3"},
+                  {"lang": "x-default", "url": "https://x/4"},
+                  {"lang": "english", "url": "https://x/5"}])])
     out = {(r["lang"]) for r in I.hreflang_invalid_codes(df).collect()}
     assert out == {"zz", "english"}
 
@@ -524,6 +539,81 @@ def test_detect_all_issues_union(pages):
     kept = I.detect_all_issues(pg, links, exclusion_patterns=("*/page/*",))
     assert kept.filter(F.col("url").contains("/page/")).count() == 0
     assert kept.count() < len(allr)
+
+
+def test_normalized_url_collisions_match_oracle(spark):
+    """Fetches that share a normalized URL (trailing-slash variants):
+    every whole-crawl detector looks up the LAST result in fetch order,
+    except url_hreflang_map, which keeps the last result that carries
+    hreflangs (here the earlier fetch of /a). The full report plus the
+    sitemap rows must equal the reference as a multiset."""
+    from collections import Counter
+
+    from librecrawl_spark.operators.extract import LINK_STRUCT
+
+    site = "https://c.example"
+    hl = lambda *es: [{"lang": lang, "url": site + path} for lang, path in es]
+    fetches = [  # (url path, status, hreflang) in fetch order
+        ("/a", 200, hl(("en", "/a"), ("de", "/b"))),
+        ("/b", 200, hl(("de", "/b"), ("en", "/a/"))),
+        ("/c", 200, []),
+        ("/d", 200, hl(("en", "/d"), ("fr", "/e"))),
+        # /e's back-pointer to /d has no lang: it is not an edge of its
+        # own, but it still counts as pointing back (the reciprocity
+        # lookup, issue_detector.py:1908-1928, reads every entry's url)
+        ("/e", 200, hl(("fr", "/e"), ("", "/d"))),
+        ("/a/", 404, []),
+        ("/c/", 301, []),
+    ]
+    rows = [dict(_UNIT_PAGE, url=site + path, wave=seq // 5, seq=seq,
+                 status_code=status, hreflang=h, canonical_url=site + path,
+                 title=f"Collision fixture page {path} with a long enough title",
+                 meta_description=f"Description of {path}")
+            for seq, (path, status, h) in enumerate(fetches)]
+    pg = _page_frame(spark, rows)
+    link_rows = [
+        dict(src_wave=0, src_seq=1, pos=pos, source_url=site + "/b",
+             target_url=site + target, anchor_text="x", is_internal=True,
+             target_domain="c.example", placement="content", nofollow=False,
+             scope="internal")
+        for pos, target in enumerate(("/c", "/a", "/c/"))
+    ]
+    links = spark.createDataFrame(
+        [tuple(r.values()) for r in link_rows],
+        "src_wave int, src_seq long, pos int, " + LINK_STRUCT.replace(": ", " "))
+    sm_urls = [site + "/a", site + "/c/", site + "/b", site + "/b", site + "/x"]
+    sm = spark.createDataFrame([(u,) for u in sm_urls], "url string")
+
+    pg_rows = [r.asDict(recursive=True) for r in pg.orderBy("wave", "seq").collect()]
+    det = _oracle_replay(pg_rows, link_rows, sitemap_urls=sm_urls)
+    want = Counter(_issue_key(i) for i in det.get_issues())
+    got = Counter(_issue_key(r.asDict()) for r in
+                  I.detect_all_issues(pg, links, sitemap_urls=sm).collect())
+    assert got == want, (want - got, got - want)
+    # the collisions reach each lookup: J4 (/c -> 301), J5 (/a -> 404),
+    # hreflang non-200 (/b -> /a/), Sitemap (/a broken, /c/ redirecting)
+    issues = {k[3] for k in got}
+    for must in ("Links: Internal Links to Redirects", "Sitemap: Broken URL",
+                 "Sitemap: Redirecting URL", "Hreflang: Points to Non-200 Page"):
+        assert must in issues, must
+    assert any(k[3].startswith("Broken Link Sources") for k in got)
+
+
+def test_report_job_count(pages):
+    """The whole report over the fixture runs in at most 20 Spark jobs:
+    J3-J6 share one per-URL reduce, the three security-header checks one
+    aggregate and the duplicate scoring one pass (with a reduce per
+    detector, the same report ran 25)."""
+    pg, links = pages
+    pg.count(), links.count()  # the cached fixture, materialized
+    sc = pg.sparkSession.sparkContext
+    sc.setJobGroup("issue-report", "issue-report")
+    try:
+        I.detect_all_issues(pg, links).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("issue-report"))
+    assert n_jobs <= 20, n_jobs
 
 
 def test_crawl_result_issue_surface(spark):
