@@ -588,13 +588,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return winnow_fingerprints(_t(spark, sf, "documents"))
 
-    def events_session_window(spark, sf):
-        # Spark's native gap-based session_window (streaming/windows.py);
-        # merge rule: new session iff gap >= 30min (window end exclusive)
-        from librecrawl_spark.streaming.windows import user_session_counts
-
-        return user_session_counts(_t(spark, sf, "events"))
-
     def sim_neardup_exact(spark, sf):
         # exact O(n^2) near-dup baseline (operators/similarity.py) —
         # recall-1 reference for the LSH-blocked variant
@@ -1223,9 +1216,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def events_hopping_window(spark, sf):
         """Hopping (sliding) event-time window: 600s length, 300s slide —
-        every event lands in exactly two windows. Streaming twin of the
-        tumbling/session rows (streaming/windows.py uses the same
-        F.window operator under a watermark)."""
+        every event lands in exactly two windows. One F.window group-by:
+        each event is expanded to the windows that contain it, keyed by
+        window start."""
         e = _t(spark, sf, "events")
         return (
             e.groupBy(F.window("ts", "600 seconds", "300 seconds").alias("w"),
@@ -1671,26 +1664,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .orderBy(F.desc("numwait"), F.asc("s_name"))
                 .limit(100))
 
-    def inc_snapshot_diff(spark, sf):
-        """Recrawl delta classification (streaming/incremental.py:
-        snapshot_diff): two crawl snapshots synthesized from documents
-        (old = doc_id % 10 != 0, new = doc_id % 7 != 0, content hash
-        perturbed for doc_id % 5 == 0) -> added/removed/changed/
-        unchanged per URL via a single full-outer key join."""
-        from librecrawl_spark.streaming.incremental import snapshot_diff
-
-        d = _t(spark, sf, "documents").select("doc_id", "text")
-        url = F.concat(F.lit("https://inc.example/doc/"),
-                       F.col("doc_id").cast("string"))
-        old = (d.filter(F.col("doc_id") % 10 != 0)
-               .select(url.alias("url"), F.md5("text").alias("content_hash")))
-        new = (d.filter(F.col("doc_id") % 7 != 0)
-               .select(url.alias("url"),
-                       F.when(F.col("doc_id") % 5 == 0,
-                              F.md5(F.concat(F.col("text"), F.lit("v2"))))
-                       .otherwise(F.md5("text")).alias("content_hash")))
-        return snapshot_diff(old, new)
-
     def pipe_domain_mix(spark, sf):
         """Corpus mix planning (pipeline.domain_mix_rates): per-language
         token totals, shares, and the keep-rate that downsampling needs
@@ -1737,53 +1710,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .agg(F.count("*").alias("n_docs"),
                      F.sum("n_words").cast("long").alias("tot_words"),
                      F.round(F.avg("word_rep_ratio"), 4).alias("avg_rep")))
-
-    def inc_changelog_compact(spark, sf):
-        """Changelog -> latest-state compaction (incremental.
-        changelog_compact): last-writer-wins upsert merge via one
-        max_by(struct) hash aggregation — no per-key window. Changelog
-        synthesized from documents: key = doc_id % 97, version wave =
-        doc_id // 97, every 13th record a delete."""
-        from librecrawl_spark.streaming.incremental import changelog_compact
-
-        d = _t(spark, sf, "documents").select("doc_id", "text")
-        log = d.select(
-            F.concat(F.lit("https://inc.example/u/"),
-                     F.pmod("doc_id", F.lit(97)).cast("string")).alias("url"),
-            F.floor(F.col("doc_id") / F.lit(97)).cast("long").alias("wave"),
-            F.when(F.pmod("doc_id", F.lit(13)) == 0, F.lit("delete"))
-            .otherwise(F.lit("upsert")).alias("op"),
-            F.md5("text").alias("content_hash"),
-            F.length("text").cast("long").alias("n_chars"),
-        )
-        return changelog_compact(log)
-
-    def t_recrawl_priority(spark, sf):
-        """Freshness-driven recrawl priority (recrawl.recrawl_priority):
-        Cho & Garcia-Molina change-rate estimate per page from fetch
-        observations, times hours since last fetch. Observations come
-        from events: page = user, changed = click/purchase rows. One
-        hash aggregate on the key; all time math in exact integer
-        microseconds so the DuckDB twin feeds ln identical operands."""
-        from librecrawl_spark.operators.recrawl import recrawl_priority
-
-        e = _t(spark, sf, "events").select(
-            F.col("user_id").alias("url"), "ts",
-            F.col("event_type").isin("click", "purchase").alias("changed"))
-        return (recrawl_priority(e, as_of="2024-03-01 00:00:00")
-                .withColumnRenamed("key", "page"))
-
-    def p2_budget_alloc(spark, sf):
-        """Host crawl-budget split (recrawl.crawl_budget_allocation):
-        1000 pages across sources proportional to corpus bytes, 90-page
-        cap, largest-remainder rounding with host-name tie-break — the
-        per-run politeness planner upstream of p1's quota window."""
-        from librecrawl_spark.operators.recrawl import crawl_budget_allocation
-
-        hs = (_t(spark, sf, "documents")
-              .groupBy(F.col("source").alias("host"))
-              .agg(F.sum("n_chars").alias("score")))
-        return crawl_budget_allocation(hs, budget=1000, cap=90)
 
     def kw_cannibalization(spark, sf):
         """Keyword cannibalization report (keywords.
@@ -1921,7 +1847,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "a12_rollup": a12_rollup,
         "a13_pivot": a13_pivot,
         "events_sessionize": events_sessionize,
-        "events_session_window": events_session_window,
         "sim_neardup_exact": sim_neardup_exact,
         "sim_ivf_topk": sim_ivf_topk,
         "text_winnow": text_winnow,
@@ -1958,11 +1883,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pipe_kmeans": pipe_kmeans,
         "pipe_tfidf": pipe_tfidf,
         "pipe_quality_gate": pipe_quality_gate,
-        "inc_changelog_compact": inc_changelog_compact,
-        "inc_snapshot_diff": inc_snapshot_diff,
         "pipe_domain_mix": pipe_domain_mix,
-        "t_recrawl_priority": t_recrawl_priority,
-        "p2_budget_alloc": p2_budget_alloc,
         "kw_cannibalization": kw_cannibalization,
         "kw_page_keywords": kw_page_keywords,
         "sk_kmv_distinct": sk_kmv_distinct,
@@ -3054,22 +2975,6 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n_events
             FROM s GROUP BY user_id
         """,
-        # session_window merge rule: an event joins the session iff it
-        # starts strictly before prev_ts + gap, so a NEW session starts
-        # at gap >= 1800 (contrast events_sessionize's strict >)
-        "events_session_window": """
-            WITH g AS (
-              SELECT user_id, ts,
-                     CASE WHEN lag(ts) OVER w IS NULL
-                          OR epoch(ts) - epoch(lag(ts) OVER w) >= 1800
-                          THEN 1 ELSE 0 END AS newsess
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            )
-            SELECT user_id, CAST(sum(newsess) AS BIGINT) AS n_sessions,
-                   count(*) AS n_events
-            FROM g GROUP BY user_id
-        """,
         "text_winnow": """
             WITH t AS (
               SELECT doc_id, regexp_extract_all(lower(text), '\\w+') AS toks
@@ -3642,26 +3547,6 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY s_name
             ORDER BY numwait DESC, s_name ASC LIMIT 100
         """,
-        "inc_snapshot_diff": """
-            WITH old AS (
-              SELECT 'https://inc.example/doc/' || CAST(doc_id AS VARCHAR)
-                       AS url,
-                     md5(text) AS h
-              FROM documents WHERE doc_id % 10 <> 0),
-            new AS (
-              SELECT 'https://inc.example/doc/' || CAST(doc_id AS VARCHAR)
-                       AS url,
-                     CASE WHEN doc_id % 5 = 0 THEN md5(text || 'v2')
-                          ELSE md5(text) END AS h
-              FROM documents WHERE doc_id % 7 <> 0)
-            SELECT coalesce(old.url, new.url) AS url,
-                   CASE WHEN old.url IS NULL THEN 'added'
-                        WHEN new.url IS NULL THEN 'removed'
-                        WHEN old.h IS NOT DISTINCT FROM new.h
-                          THEN 'unchanged'
-                        ELSE 'changed' END AS change
-            FROM old FULL OUTER JOIN new ON old.url = new.url
-        """,
         "pipe_domain_mix": """
             WITH per AS (
               SELECT lang AS stratum, count(*) AS n_docs,
@@ -3763,73 +3648,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(n_words) AS BIGINT) AS tot_words,
                    round(avg(word_rep), 4) AS avg_rep
             FROM r GROUP BY reason
-        """,
-        "inc_changelog_compact": """
-            WITH log AS (
-              SELECT 'https://inc.example/u/' || CAST(doc_id % 97 AS VARCHAR)
-                       AS url,
-                     doc_id // 97 AS wave,
-                     CASE WHEN doc_id % 13 = 0 THEN 'delete'
-                          ELSE 'upsert' END AS op,
-                     md5(text) AS content_hash,
-                     CAST(len(text) AS BIGINT) AS n_chars
-              FROM documents),
-            r AS (
-              SELECT *, row_number() OVER (
-                       PARTITION BY url ORDER BY wave DESC, op DESC) AS rn
-              FROM log)
-            SELECT url, wave, content_hash, n_chars
-            FROM r WHERE rn = 1 AND op = 'upsert'
-        """,
-        "t_recrawl_priority": """
-            WITH g AS (
-              SELECT user_id AS page, count(*) AS n_obs,
-                     CAST(sum(CASE WHEN event_type IN ('click', 'purchase')
-                              THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-                     min(epoch_us(ts)) AS t0, max(epoch_us(ts)) AS t1
-              FROM events GROUP BY user_id
-              HAVING count(*) >= 2),
-            m AS (
-              SELECT page, n_obs, n_changed,
-                     CAST(t1 - t0 AS DOUBLE)
-                       / CAST(n_obs - 1 AS DOUBLE) / 3.6e9 AS ibar_h,
-                     CAST(epoch_us(TIMESTAMP '2024-03-01 00:00:00') - t1
-                          AS DOUBLE) / 3.6e9 AS age_h
-              FROM g)
-            SELECT page, n_obs, n_changed,
-                   round(abs(-ln((n_obs - n_changed + 0.5) / (n_obs + 0.5))
-                         / ibar_h), 6) AS lambda_per_hour,
-                   round(age_h, 6) AS age_hours,
-                   round(abs(-ln((n_obs - n_changed + 0.5) / (n_obs + 0.5))
-                         / ibar_h) * age_h, 6) AS priority
-            FROM m
-        """,
-        "p2_budget_alloc": """
-            WITH hs AS (
-              SELECT source AS host, CAST(sum(n_chars) AS BIGINT) AS score
-              FROM documents GROUP BY source),
-            tot AS (SELECT CAST(sum(score) AS DOUBLE) AS t FROM hs),
-            d AS (
-              SELECT host, score,
-                     least(CAST(90 AS BIGINT),
-                           CAST(floor(1000.0 * score / t) AS BIGINT)) AS base,
-                     1000.0 * score / t
-                       - floor(1000.0 * score / t) AS frac,
-                     CAST(90 AS BIGINT)
-                       - least(CAST(90 AS BIGINT),
-                                CAST(floor(1000.0 * score / t) AS BIGINT))
-                       AS headroom
-              FROM hs, tot),
-            r AS (
-              SELECT *, 1000 - sum(base) OVER () AS leftover,
-                     row_number() OVER (
-                       ORDER BY CASE WHEN headroom > 0 THEN frac
-                                     ELSE -1.0 END DESC, host ASC) AS rk
-              FROM d)
-            SELECT host, score,
-                   base + CASE WHEN headroom > 0 AND rk <= leftover
-                               THEN 1 ELSE 0 END AS allocated
-            FROM r
         """,
         "kw_cannibalization": """
             WITH tk AS (

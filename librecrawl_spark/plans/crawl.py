@@ -408,7 +408,13 @@ class CrawlEngine:
                 pages_parts.append(pages_wave)
                 links_parts.append(wave_links)
                 sources_parts.append(wave_sources)
+            # the checkpointed state no longer reads new_frontier, and a
+            # checkpointed crawl's _finalize reads the committed tables,
+            # not pages; an in-memory crawl's result unions its pages
             occ.unpersist()
+            new_frontier.unpersist()
+            if self.tio:
+                pages.unpersist()
             lineage.append({
                 "wave": wave, "pending_in": n_eligible, "fetched": n_fetched,
                 "new_frontier": n_new, "crawled_total": st["crawled"],
@@ -421,6 +427,7 @@ class CrawlEngine:
             if n_new == 0 and st["pending"].isEmpty():
                 break
 
+        fetch_map.unpersist()
         return self._finalize(st, pages_parts, links_parts, sources_parts,
                               lineage, resumed)
 

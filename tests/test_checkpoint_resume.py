@@ -32,15 +32,27 @@ def snap(res):
     return pages, links, seen
 
 
+def n_cached(spark):
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+
 def test_kill_and_resume_equals_uninterrupted(spark, tmp_path):
     site = generate_site(SITE)
     full = mk_engine(spark, site).run()
 
+    # a checkpointed run() leaves no Dataset cache behind: its result
+    # reads the committed tables
     ckdir = str(tmp_path / "ck")
-    partial = mk_engine(spark, site, checkpoint_dir=ckdir, max_waves=2).run()
+    eng = mk_engine(spark, site, checkpoint_dir=ckdir, max_waves=2)
+    n0 = n_cached(spark)
+    partial = eng.run()
+    assert n_cached(spark) == n0
     assert partial.stats["crawled"] < full.stats["crawled"]
 
-    resumed = mk_engine(spark, site, checkpoint_dir=ckdir).run()
+    eng = mk_engine(spark, site, checkpoint_dir=ckdir)
+    n0 = n_cached(spark)
+    resumed = eng.run()
+    assert n_cached(spark) == n0
     assert resumed.stats["resumed"] is True
     assert resumed.stats["crawled"] == full.stats["crawled"]
     assert snap(resumed) == snap(full)

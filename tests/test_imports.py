@@ -60,3 +60,52 @@ def test_package_imports_resolve():
                 except ImportError:
                     broken.append(f"{where}: {mod}.{name}")
     assert not broken, broken
+
+
+# Modules that nothing on the crawl, resume, issue-report, script or
+# benchmark path imports: the off-path families ROADMAP.md still lists for
+# deletion. Deleting a family shrinks this set; a new module must be
+# reached from that path.
+OFF_PATH = {f"operators.{m}" for m in (
+    "dedup", "similarity", "text", "pipeline", "sketch", "keywords", "misc")} | {
+    "functions.lint"}
+
+
+def _module_file(mod):
+    base = os.path.join(ROOT, *mod.split("."))
+    for f in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.isfile(f):
+            return f
+    return None
+
+
+def _closure(paths):
+    """Package source files ``paths`` import, transitively."""
+    todo, reached = list(paths), set()
+    while todo:
+        path = todo.pop()
+        if path is None or path in reached:
+            continue
+        reached.add(path)
+        for mod, names in _imports(path):
+            parts = mod.split(".")
+            # importing a.b.c runs a and a.b first; a name may be a submodule
+            todo += [_module_file(".".join(parts[:k])) for k in range(1, len(parts) + 1)]
+            todo += [_module_file(f"{mod}.{n}") for n in names]
+    return reached
+
+
+def test_off_path_modules_are_the_pending_families():
+    roots = [os.path.join(ROOT, PACKAGE, "plans", "crawl.py"),
+             os.path.join(ROOT, PACKAGE, "operators", "issues.py"),
+             os.path.join(ROOT, "scripts", "run_crawl.py")]
+    bench = os.path.join(ROOT, "perfbench")
+    roots += [os.path.join(bench, f) for f in sorted(os.listdir(bench)) if f.endswith(".py")]
+    reached = _closure(roots)
+    pkg_dir = os.path.join(ROOT, PACKAGE)
+    off = set()
+    for p in _sources():
+        if p.startswith(pkg_dir + os.sep) and p not in reached:
+            rel = os.path.relpath(p, pkg_dir)[:-len(".py")].split(os.sep)
+            off.add(".".join(rel[:-1] if rel[-1] == "__init__" else rel))
+    assert off == OFF_PATH

@@ -1,5 +1,5 @@
 """Unit tests for the operator library: dedup, similarity, text,
-sitemap, lint, exports, incremental reads."""
+sitemap, lint, exports."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -448,22 +448,6 @@ class TestExportsAndIncremental:
         assert nodes.count() <= 5
         stats = E.crawl_stats(res.pages, res.seen).collect()[0]
         assert stats["crawled"] == res.stats["crawled"]
-
-    def test_incremental_reader(self, spark, tmp_path):
-        from librecrawl_spark.storage.tableio import TableIO
-        from librecrawl_spark.streaming.incremental import IncrementalReader
-
-        tio = TableIO(str(tmp_path / "inc"))
-        tio.commit("pages", spark.range(5).selectExpr("id", "'a' as v"))
-        r = IncrementalReader(tio)
-        df, snap = r.new_since(spark, None)
-        assert df.count() == 5
-        tio.commit("pages", spark.range(3).selectExpr("id + 100 as id", "'b' as v"))
-        delta, snap2 = r.new_since(spark, snap)
-        assert delta.count() == 3
-        assert {x["id"] for x in delta.collect()} == {100, 101, 102}
-        none, _ = r.new_since(spark, snap2)
-        assert none.count() == 0
 
 
 class TestMisc:

@@ -340,39 +340,6 @@ class TestTfidfTopTerms:
         assert got == want and len(want) == 50
 
 
-class TestSnapshotDiff:
-    def test_all_four_classes(self, spark):
-        from librecrawl_spark.streaming.incremental import snapshot_diff
-
-        old = spark.createDataFrame(
-            [("a", "h1"), ("b", "h2"), ("c", "h3"), ("n", None)],
-            schema="url string, content_hash string")
-        new = spark.createDataFrame(
-            [("a", "h1"), ("b", "CHANGED"), ("d", "h4"), ("n", "now-set")],
-            schema="url string, content_hash string")
-        got = {r["url"]: r["change"]
-               for r in snapshot_diff(old, new).collect()}
-        assert got == {
-            "a": "unchanged", "b": "changed", "c": "removed",
-            "d": "added",
-            # NULL -> value is a change (eqNullSafe, not SQL-NULL equal)
-            "n": "changed",
-        }
-
-    def test_multi_column_content(self, spark):
-        from librecrawl_spark.streaming.incremental import snapshot_diff
-
-        old = spark.createDataFrame(
-            [("a", "h", 200), ("b", "h", 200)],
-            schema="url string, content_hash string, status int")
-        new = spark.createDataFrame(
-            [("a", "h", 404), ("b", "h", 200)],
-            schema="url string, content_hash string, status int")
-        got = {r["url"]: r["change"] for r in snapshot_diff(
-            old, new, content_cols=("content_hash", "status")).collect()}
-        assert got == {"a": "changed", "b": "unchanged"}
-
-
 class TestDomainMixRates:
     def test_rates_hit_targets_and_cap_at_one(self, spark):
         from librecrawl_spark.operators.pipeline import domain_mix_rates
