@@ -4,7 +4,7 @@
 parquet tables (TESTDATA.md); each has a DuckDB twin in ``oracle_sql()``
 with identically-aliased columns. Names map to SURVEY.md §2 operator IDs
 (J*/A*/W*/F*/C*/U*) plus the training-data-pipeline suite
-(dedup_*/sim_*/text_*/events_*).
+(dedup_fingerprint/sim_*/text_*/events_*).
 
 The crawl-core operators that need the span-document corpus (fetch join,
 extraction, trap windows, politeness) are verified against the
@@ -338,12 +338,8 @@ def _sitewide_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# exactly 8 \w+ tokens — one full k=8 chunk when prepended (dedup_chunks)
-_CHUNK_BOILER = "all rights reserved contact us for more info"
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from librecrawl_spark.operators import dedup as D, similarity as S, text as T
+    from librecrawl_spark.operators import similarity as S, text as T
 
     def a1_stats_counts(spark, sf):
         li = _t(spark, sf, "lineitem")
@@ -498,20 +494,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from librecrawl_spark.operators.text import fingerprint
 
         return fingerprint(_t(spark, sf, "documents"))
-
-    def dedup_minhash(spark, sf):
-        return D.minhash_signatures(_t(spark, sf, "documents"), n_hashes=4)
-
-    def dedup_simhash(spark, sf):
-        return D.simhash(_t(spark, sf, "documents"))
-
-    def dedup_simhash_pairs(spark, sf):
-        return D.simhash_dup_groups(_t(spark, sf, "documents"), max_hamming=3)
-
-    def dedup_jaccard_pairs(spark, sf):
-        return D.ngram_jaccard_pairs(
-            _t(spark, sf, "documents"), threshold=0.4, max_df=1000
-        )
 
     def sim_cosine_topk(spark, sf):
         e = _t(spark, sf, "embeddings")
@@ -1085,20 +1067,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return homepage_of(pages, "https://w.example/start").select(
             "url", "status_code")
 
-    def dedup_clusters(spark, sf):
-        """Duplicate-cluster assignment (dedup.dup_clusters): transitive
-        closure over a deterministic sparse pair graph on the documents
-        id space — min-label propagation + pointer jumping on the Spark
-        side, a recursive CTE on the DuckDB side."""
-        d = _t(spark, sf, "documents").select("doc_id")
-        n = d.count()
-        o = _t(spark, sf, "orders").filter(F.col("o_orderkey") % 149 == 0)
-        pairs = o.select(
-            (F.col("o_orderkey") % n).alias("doc_a"),
-            ((F.col("o_orderkey") * 7 + 3) % n).alias("doc_b"),
-        ).filter("doc_a <> doc_b")
-        return D.dup_clusters(d, pairs)
-
     def pipe_stratified_sample(spark, sf):
         """Deterministic per-stratum rate sampling
         (pipeline.stratified_sample): keep a doc iff the first 16 bits
@@ -1128,25 +1096,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return out.select("doc_id", "n_tokens", "start_off",
                           "chunk_first", "chunk_last", "n_chunks")
 
-    def pipe_cluster_reps(spark, sf):
-        """Duplicate-cluster representative selection
-        (pipeline.cluster_representatives): over dedup_clusters' same
-        deterministic pair graph, keep the longest-text member per
-        cluster (ties -> min doc_id) via a map-side-combinable
-        max(struct) argmax — no per-cluster ordered window."""
-        from librecrawl_spark.operators.pipeline import cluster_representatives
-
-        d = _t(spark, sf, "documents")
-        n = d.count()
-        o = _t(spark, sf, "orders").filter(F.col("o_orderkey") % 149 == 0)
-        pairs = o.select(
-            (F.col("o_orderkey") % n).alias("doc_a"),
-            ((F.col("o_orderkey") * 7 + 3) % n).alias("doc_b"),
-        ).filter("doc_a <> doc_b")
-        cl = D.dup_clusters(d.select("doc_id"), pairs)
-        docs_q = d.select("doc_id", F.length("text").cast("long").alias("q"))
-        return cluster_representatives(docs_q, cl.select("doc_id", "cluster"), "q")
-
     def pipe_contamination(spark, sf):
         """Benchmark decontamination (pipeline.benchmark_contamination):
         corpus docs sharing 3-token shingles with a benchmark subset
@@ -1173,25 +1122,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         lined = F.when(n > 0, F.concat_ws("\n", lines)).otherwise(F.lit(""))
         return repetition_filter(d.select("doc_id", lined.alias("text")))
-
-    def dedup_chunks(spark, sf):
-        """Cross-document duplicated-chunk gate (dedup.dup_chunk_filter,
-        k=8): the chunk-hash approximation of exact-substring dedup.
-        Every doc_id % 7 == 0 document gets an 8-token boilerplate
-        PREPENDED (chunk-aligned at position 0, so the planted chunk is
-        byte-identical across all planted docs) — both engines apply the
-        same expression, exercising the corpus-wide hash counts, the
-        within-doc double-occurrence path, and the short-doc zero-chunk
-        restore."""
-        from librecrawl_spark.operators.dedup import dup_chunk_filter
-
-        d = _t(spark, sf, "documents").select("doc_id", "text")
-        t = F.concat(
-            F.when(F.col("doc_id") % 7 == 0,
-                   F.lit(_CHUNK_BOILER + " ")).otherwise(F.lit("")),
-            F.col("text"),
-        )
-        return dup_chunk_filter(d.select("doc_id", t.alias("text")), k=8)
 
     def text_pii(spark, sf):
         """PII scrubbing (text.scrub_pii) over documents with
@@ -1778,41 +1708,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return kmv_distinct(_t(spark, sf, "lineitem"), "l_orderkey", k=512)
 
-    def dedup_containment(spark, sf):
-        """Ordered shingle-containment pairs (dedup.py:containment_pairs,
-        t=0.8): the asymmetric near-dup detector for short-doc-inside-
-        long-doc (template/quote embedding) that Jaccard misses. Every
-        83rd document spawns a 'quote' doc (its first 30 tokens, id +
-        10^7) so the fixture contains planted containments at C=1."""
-        from librecrawl_spark.operators.dedup import containment_pairs
-
-        d = _t(spark, sf, "documents").select("doc_id", "text")
-        quotes = d.filter(F.col("doc_id") % 83 == 0).select(
-            (F.col("doc_id") + 10_000_000).alias("doc_id"),
-            F.concat_ws(
-                " ",
-                F.slice(F.expr(r"regexp_extract_all(text, '\\w+', 0)"),
-                        1, 30),
-            ).alias("text"),
-        )
-        return containment_pairs(d.unionByName(quotes), threshold=0.8)
-
-    def dedup_minhash_inc(spark, sf):
-        """Incremental LSH dedup (dedup.py:minhash_incremental_candidates):
-        odd doc_ids are 'this wave', even doc_ids are the already-indexed
-        corpus (minhash_band_index) — new-vs-index + new-vs-new candidate
-        pairs without recomputing the historical side."""
-        from librecrawl_spark.operators.dedup import (
-            minhash_band_index, minhash_incremental_candidates)
-
-        d = _t(spark, sf, "documents").select("doc_id", "text")
-        old = d.filter(F.col("doc_id") % 2 == 0)
-        new = d.filter(F.col("doc_id") % 2 == 1)
-        idx = minhash_band_index(old, n_hashes=4, n_bands=2)
-        pairs, _ = minhash_incremental_candidates(
-            new, idx, n_hashes=4, n_bands=2)
-        return pairs
-
     def sk_kmv_by_group(spark, sf):
         """Per-group KMV distinct estimate (sketch.py:kmv_distinct_by,
         k=256): distinct orderkeys per returnflag — the 'distinct URLs
@@ -1854,7 +1749,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "w2_homepage": w2_homepage,
         "events_hopping_window": events_hopping_window,
         "w7_percentiles": w7_percentiles,
-        "dedup_clusters": dedup_clusters,
         "q4_late_orders": q4_late_orders,
         "q13_custdist": q13_custdist,
         "q22_idle_rich": q22_idle_rich,
@@ -1866,11 +1760,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q14_promo_share": q14_promo_share,
         "pipe_stratified_sample": pipe_stratified_sample,
         "pipe_chunk_packing": pipe_chunk_packing,
-        "pipe_cluster_reps": pipe_cluster_reps,
         "pipe_contamination": pipe_contamination,
         "text_repetition": text_repetition,
         "text_pii": text_pii,
-        "dedup_chunks": dedup_chunks,
         "q7_volume_shipping": q7_volume_shipping,
         "q8_market_share": q8_market_share,
         "q10_returned_items": q10_returned_items,
@@ -1888,10 +1780,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kw_page_keywords": kw_page_keywords,
         "sk_kmv_distinct": sk_kmv_distinct,
         "text_unigram_lm": text_unigram_lm,
-        "dedup_containment": dedup_containment,
         "sk_kmv_by_group": sk_kmv_by_group,
         "pipe_priority_sample": pipe_priority_sample,
-        "dedup_minhash_inc": dedup_minhash_inc,
         "a1_stats_counts": a1_stats_counts,
         "q3_shipping_priority": q3_shipping_priority,
         "q5_nation_revenue": q5_nation_revenue,
@@ -1930,10 +1820,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "a9_bigram_topk": a9_bigram_topk,
         "w6_top_docs_cap": w6_top_docs_cap,
         "dedup_fingerprint": dedup_fingerprint,
-        "dedup_minhash": dedup_minhash,
-        "dedup_simhash": dedup_simhash,
-        "dedup_simhash_pairs": dedup_simhash_pairs,
-        "dedup_jaccard_pairs": dedup_jaccard_pairs,
         "sim_cosine_topk": sim_cosine_topk,
         "text_tokens": text_tokens,
         "text_quality": text_quality,
@@ -2307,21 +2193,6 @@ def oracle_sql() -> dict[str, str]:
     pred_chain = "'unknown'"
     for l in reversed(langs):
         pred_chain = f"CASE WHEN s_{l} = {best} THEN '{l}' ELSE {pred_chain} END"
-    # 64-bit simhash: bit j <- nibble j of md5(tok) for j<32, nibble j-32 of
-    # md5('x:' || tok) for j>=32; band g = bits [16g, 16g+16) as an int.
-    hi = "('8','9','a','b','c','d','e','f')"
-    _h1, _h2 = "md5(tok)", "md5('x:' || tok)"
-    simhash_sums = ", ".join(
-        f"sum(CASE WHEN substr({_h1 if j < 32 else _h2}, "
-        f"{(j % 32) + 1}, 1) IN {hi} THEN 1 ELSE -1 END) AS s{j}"
-        for j in range(64)
-    )
-    simhash_bands = ", ".join(
-        "CAST(" + " + ".join(
-            f"(CASE WHEN s{g * 16 + r} > 0 THEN {1 << r} ELSE 0 END)" for r in range(16)
-        ) + f" AS BIGINT) AS band{g}"
-        for g in range(4)
-    )
 
     return {
         "q3_shipping_priority": """
@@ -2851,65 +2722,6 @@ def oracle_sql() -> dict[str, str]:
                    md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fingerprint
             FROM documents
         """,
-        "dedup_minhash": rf"""
-            WITH s AS (SELECT doc_id, {shingles} AS sh FROM documents)
-            SELECT doc_id,
-                   list_min(list_transform(sh, x -> md5('0:' || x))) AS mh0,
-                   list_min(list_transform(sh, x -> md5('1:' || x))) AS mh1,
-                   list_min(list_transform(sh, x -> md5('2:' || x))) AS mh2,
-                   list_min(list_transform(sh, x -> md5('3:' || x))) AS mh3
-            FROM s WHERE len(sh) > 0
-        """,
-        "dedup_simhash": rf"""
-            WITH t AS (SELECT doc_id, unnest({toks}) AS tok FROM documents),
-            agg AS (SELECT doc_id, {simhash_sums} FROM t GROUP BY doc_id),
-            bands AS (SELECT doc_id, {simhash_bands} FROM agg)
-            SELECT doc_id, band0, band1, band2, band3,
-                   printf('%04x%04x%04x%04x', band3, band2, band1, band0) AS simhash
-            FROM bands
-        """,
-        "dedup_simhash_pairs": rf"""
-            WITH t AS (SELECT doc_id, unnest({toks}) AS tok FROM documents),
-            agg AS (SELECT doc_id, {simhash_sums} FROM t GROUP BY doc_id),
-            bands AS (SELECT doc_id, {simhash_bands} FROM agg),
-            cand AS (
-              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM bands a JOIN bands b
-                ON a.doc_id < b.doc_id
-               AND (a.band0 = b.band0 OR a.band1 = b.band1
-                    OR a.band2 = b.band2 OR a.band3 = b.band3)
-            )
-            SELECT doc_a, doc_b,
-                   CAST(bit_count(xor(a.band0, b.band0)) + bit_count(xor(a.band1, b.band1))
-                      + bit_count(xor(a.band2, b.band2)) + bit_count(xor(a.band3, b.band3))
-                    AS INTEGER) AS hamming
-            FROM cand
-            JOIN bands a ON a.doc_id = cand.doc_a
-            JOIN bands b ON b.doc_id = cand.doc_b
-            WHERE bit_count(xor(a.band0, b.band0)) + bit_count(xor(a.band1, b.band1))
-                + bit_count(xor(a.band2, b.band2)) + bit_count(xor(a.band3, b.band3)) <= 3
-        """,
-        "dedup_jaccard_pairs": rf"""
-            WITH s AS (
-              SELECT doc_id, list_distinct({shingles}) AS sh FROM documents
-            ),
-            nz AS (SELECT doc_id, sh FROM s WHERE len(sh) > 0),
-            inv AS (SELECT doc_id, unnest(sh) AS shingle FROM nz),
-            cold AS (SELECT shingle FROM inv GROUP BY shingle HAVING count(*) <= 1000),
-            invc AS (SELECT inv.doc_id, inv.shingle FROM inv JOIN cold USING (shingle)),
-            cand AS (
-              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM invc a JOIN invc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            )
-            SELECT doc_a, doc_b,
-                   round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                         / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 6) AS jaccard
-            FROM cand
-            JOIN nz sa ON sa.doc_id = cand.doc_a
-            JOIN nz sb ON sb.doc_id = cand.doc_b
-            WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                  / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.4
-        """,
         "sim_cosine_topk": """
             WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
             SELECT vec_id,
@@ -3085,25 +2897,6 @@ def oracle_sql() -> dict[str, str]:
                      url ASC
             LIMIT 1
         """,
-        "dedup_clusters": """
-            WITH RECURSIVE nd AS (SELECT count(*) AS n FROM documents),
-            e0 AS (
-              SELECT CAST(o_orderkey % (SELECT n FROM nd) AS BIGINT) AS a,
-                     CAST((o_orderkey * 7 + 3) % (SELECT n FROM nd) AS BIGINT) AS b
-              FROM orders WHERE o_orderkey % 149 = 0
-            ),
-            e1 AS (SELECT a, b FROM e0 WHERE a <> b),
-            e AS (SELECT a AS s, b AS d FROM e1 UNION SELECT b, a FROM e1),
-            nodes AS (SELECT doc_id AS id FROM documents UNION SELECT s FROM e),
-            reach(id, r) AS (
-              SELECT id, id FROM nodes
-              UNION
-              SELECT reach.id, e.d FROM reach JOIN e ON e.s = reach.r
-            )
-            SELECT id AS doc_id, min(r) AS cluster,
-                   min(r) = id AS is_keeper
-            FROM reach GROUP BY id
-        """,
         "pipe_stratified_sample": f"""
             WITH s AS (
               SELECT doc_id, lang,
@@ -3219,73 +3012,6 @@ def oracle_sql() -> dict[str, str]:
             FROM f
         """,
         "text_pii": _pii_oracle_sql(),
-        "dedup_chunks": f"""
-            WITH d AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 7 = 0
-                          THEN '{_CHUNK_BOILER} ' || text ELSE text END AS text
-              FROM documents
-            ),
-            tk AS (
-              SELECT doc_id, regexp_extract_all(lower(text), '\\w+') AS t
-              FROM d
-            ),
-            ch AS (
-              SELECT doc_id, unnest(list_transform(
-                       range(0, CAST(len(t) // 8 AS INT)),
-                       i -> array_to_string(t[i*8+1 : i*8+8], ' '))) AS chunk
-              FROM tk
-            ),
-            occ AS (
-              SELECT doc_id, chunk, count(*) AS cnt FROM ch GROUP BY 1, 2
-            ),
-            tot AS (SELECT chunk, sum(cnt) AS total FROM occ GROUP BY 1),
-            per AS (
-              SELECT occ.doc_id,
-                     CAST(sum(occ.cnt) AS INT) AS n_chunks,
-                     CAST(sum(CASE WHEN tot.total > 1 THEN occ.cnt ELSE 0 END)
-                          AS INT) AS n_dup_chunks
-              FROM occ JOIN tot USING (chunk) GROUP BY 1
-            )
-            SELECT d.doc_id,
-                   coalesce(per.n_chunks, 0) AS n_chunks,
-                   coalesce(per.n_dup_chunks, 0) AS n_dup_chunks,
-                   CASE WHEN coalesce(per.n_chunks, 0) > 0
-                        THEN round(per.n_dup_chunks * 1.0 / per.n_chunks, 6)
-                        ELSE 0.0 END AS dup_chunk_frac,
-                   (CASE WHEN coalesce(per.n_chunks, 0) > 0
-                         THEN round(per.n_dup_chunks * 1.0 / per.n_chunks, 6)
-                         ELSE 0.0 END) <= 0.5 AS keep
-            FROM d LEFT JOIN per USING (doc_id)
-        """,
-        "pipe_cluster_reps": """
-            WITH RECURSIVE nd AS (SELECT count(*) AS n FROM documents),
-            e0 AS (
-              SELECT CAST(o_orderkey % (SELECT n FROM nd) AS BIGINT) AS a,
-                     CAST((o_orderkey * 7 + 3) % (SELECT n FROM nd) AS BIGINT) AS b
-              FROM orders WHERE o_orderkey % 149 = 0
-            ),
-            e1 AS (SELECT a, b FROM e0 WHERE a <> b),
-            e AS (SELECT a AS s, b AS d FROM e1 UNION SELECT b, a FROM e1),
-            nodes AS (SELECT doc_id AS id FROM documents UNION SELECT s FROM e),
-            reach(id, r) AS (
-              SELECT id, id FROM nodes
-              UNION
-              SELECT reach.id, e.d FROM reach JOIN e ON e.s = reach.r
-            ),
-            cl AS (SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id),
-            q AS (
-              SELECT cl.cluster, cl.doc_id, CAST(len(d.text) AS BIGINT) AS q
-              FROM cl JOIN documents d USING (doc_id)),
-            r AS (
-              SELECT cluster, doc_id, q,
-                     row_number() OVER (PARTITION BY cluster
-                                        ORDER BY q DESC, doc_id ASC) AS rn,
-                     count(*) OVER (PARTITION BY cluster) AS cluster_size
-              FROM q)
-            SELECT cluster, doc_id AS rep_doc_id, q AS rep_quality, cluster_size
-            FROM r WHERE rn = 1
-        """,
         "events_hopping_window": """
             WITH hop AS (
               SELECT to_timestamp(CAST(floor(epoch(ts) / 300) AS BIGINT) * 300
@@ -3896,42 +3622,6 @@ def oracle_sql() -> dict[str, str]:
             FROM words JOIN freq USING (w), tot
             GROUP BY doc_id
         """,
-        "dedup_containment": rf"""
-            WITH base AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 10000000,
-                     array_to_string(
-                       list_slice(regexp_extract_all(text, '\w+'), 1, 30),
-                       ' ')
-              FROM documents WHERE doc_id % 83 = 0
-            ),
-            s AS (
-              SELECT doc_id, list_distinct({shingles}) AS sh FROM base
-            ),
-            nz AS (SELECT doc_id, sh FROM s WHERE len(sh) > 0),
-            inv AS (SELECT doc_id, unnest(sh) AS shingle FROM nz),
-            cold AS (
-              SELECT shingle FROM inv GROUP BY shingle
-              HAVING count(*) <= 1000),
-            invc AS (
-              SELECT inv.doc_id, inv.shingle
-              FROM inv JOIN cold USING (shingle)),
-            cand AS (
-              SELECT DISTINCT a.doc_id AS doc_inner, b.doc_id AS doc_outer
-              FROM invc a
-              JOIN invc b
-                ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
-            )
-            SELECT doc_inner, doc_outer,
-                   round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                         / len(sa.sh), 6) AS containment
-            FROM cand
-            JOIN nz sa ON sa.doc_id = cand.doc_inner
-            JOIN nz sb ON sb.doc_id = cand.doc_outer
-            WHERE round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                        / len(sa.sh), 6) >= 0.8
-        """,
         "sk_kmv_by_group": """
             WITH d AS (
               SELECT DISTINCT l_returnflag,
@@ -3963,32 +3653,5 @@ def oracle_sql() -> dict[str, str]:
             FROM p
             ORDER BY q DESC, doc_id ASC
             LIMIT 50
-        """,
-        "dedup_minhash_inc": rf"""
-            WITH s AS (SELECT doc_id, {shingles} AS sh FROM documents),
-            sig AS (
-              SELECT doc_id,
-                list_min(list_transform(sh, x -> md5('0:' || x))) AS mh0,
-                list_min(list_transform(sh, x -> md5('1:' || x))) AS mh1,
-                list_min(list_transform(sh, x -> md5('2:' || x))) AS mh2,
-                list_min(list_transform(sh, x -> md5('3:' || x))) AS mh3
-              FROM s WHERE len(sh) > 0),
-            bands AS (
-              SELECT doc_id, '0|' || mh0 || '|' || mh1 AS band_key FROM sig
-              UNION ALL
-              SELECT doc_id, '1|' || mh2 || '|' || mh3 FROM sig),
-            newb AS (SELECT * FROM bands WHERE doc_id % 2 = 1),
-            oldb AS (SELECT * FROM bands WHERE doc_id % 2 = 0),
-            vs_index AS (
-              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     'index' AS against
-              FROM newb a JOIN oldb b
-                ON a.band_key = b.band_key AND a.doc_id <> b.doc_id),
-            in_wave AS (
-              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     'wave' AS against
-              FROM newb a JOIN newb b
-                ON a.band_key = b.band_key AND a.doc_id < b.doc_id)
-            SELECT * FROM vs_index UNION ALL SELECT * FROM in_wave
         """,
     }

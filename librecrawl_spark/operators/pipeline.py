@@ -49,7 +49,7 @@ def stratified_sample(
     re-running over a grown corpus keeps exactly the previously-kept keys
     plus new ones at the same rate — reproducible snapshots without
     storing a kept-keys table. md5-hex-prefix comparison is portable
-    across engines (same trick as dedup.py's minhash primitive).
+    across engines.
 
     Scale shape: a single filter over the scan — no shuffle, no sort, no
     sampling pass; Catalyst pushes surviving-column pruning into the
@@ -149,6 +149,31 @@ def concat_chunk_packing(
     return out, d
 
 
+SHINGLE_K = 3
+
+
+def _shingles(text_col: str, k: int):
+    """Distinct k-token shingles as strings, via tokens + transform/slice
+    (JVM-side higher-order functions, no UDF).
+
+    CASE-guarded for short docs: Spark's sequence(1, 0) counts DOWN to
+    [1, 0], so a doc with fewer than k tokens would evaluate slice at
+    index 0 and abort the whole job (ANSI INVALID_PARAMETER_VALUE)."""
+    toks = f"regexp_extract_all({text_col}, '\\\\w+', 0)"
+    return F.expr(
+        f"""
+        CASE WHEN size({toks}) >= {k} THEN
+          array_distinct(
+            transform(
+              sequence(1, size({toks}) - {k - 1}),
+              i -> concat_ws(' ', slice({toks}, i, {k}))
+            )
+          )
+        ELSE array() END
+        """
+    )
+
+
 def benchmark_contamination(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -163,9 +188,8 @@ def benchmark_contamination(
     doc: distinct overlapping shingles, distinct benchmark docs hit,
     the doc's shingle count, and the contamination ratio.
 
-    Both sides reuse dedup.py's distinct k-shingle construction (JVM
-    higher-order functions, no UDF), so the n-gram definition is shared
-    with the jaccard/minhash operators and their oracles.
+    Both sides use the same distinct k-shingle construction
+    (``_shingles``: JVM higher-order functions, no UDF).
 
     Scale shape: benchmark sets are small next to a 100 TB corpus
     (10^4-10^6 docs), so the exploded benchmark index broadcasts and the
@@ -175,13 +199,13 @@ def benchmark_contamination(
     degrades to an ordinary shuffled inverted-index join (still never
     quadratic).
     """
-    from .dedup import SHINGLE_K, shingle_sets
-
     kk = SHINGLE_K if k is None else k
-    c_nz = shingle_sets(corpus, text_col, kk).filter(F.size("shingles") > 0)
+    c_nz = corpus.select("doc_id", _shingles(text_col, kk).alias("shingles")).filter(
+        F.size("shingles") > 0)
     c_inv = c_nz.select("doc_id", F.explode("shingles").alias("shingle"))
-    b_inv = shingle_sets(benchmark, text_col, kk).select(
-        F.col("doc_id").alias("bench_id"), F.explode("shingles").alias("shingle")
+    b_inv = benchmark.select(
+        F.col("doc_id").alias("bench_id"),
+        F.explode(_shingles(text_col, kk)).alias("shingle"),
     )
     right = F.broadcast(b_inv) if broadcast_benchmark else b_inv
     g = (
@@ -209,10 +233,10 @@ def cluster_representatives(
 ) -> DataFrame:
     """Pick one representative per duplicate cluster: the member with the
     highest ``quality_col``, ties broken by the smallest ``id_col`` —
-    the refinement of dup_clusters' min-id ``is_keeper`` that a real
-    corpus build wants (keep the best copy, not an arbitrary one).
+    what a real corpus build wants (keep the best copy, not an
+    arbitrary one).
 
-    ``clusters`` is dup_clusters' output (``id_col``, ``cluster``).
+    ``clusters`` holds one (``id_col``, ``cluster``) row per member.
 
     Scale shape: one hash join on the doc id plus one groupBy(cluster)
     with a map-side-combinable max(struct) — the argmax is an ordinary

@@ -100,9 +100,9 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
 
     All JVM higher-order functions (transform/slice/array_min) over
     md5-hex gram hashes (lexicographic min == uniform permutation min,
-    engine-portable — same trick as dedup.minhash_signatures). Output is
-    one row per doc with the sorted fingerprint set flattened to a CSV
-    string (scalar => directly oracle-comparable) plus the set size.
+    engine-portable). Output is one row per doc with the sorted
+    fingerprint set flattened to a CSV string (scalar => directly
+    oracle-comparable) plus the set size.
 
     Scale: per-row array work only, no shuffle at all — the downstream
     dedup join (explode + groupBy fingerprint) shuffles hash keys, never
@@ -274,7 +274,7 @@ def winnow_dup_candidates(df: DataFrame, text_col: str = "text",
                           k: int = 5, w: int = 4) -> DataFrame:
     """Candidate near-dup pairs: docs sharing any winnowing fingerprint.
     Explode + self-join on the fingerprint key — band-join shape, never
-    all-pairs (same scale contract as minhash_lsh_candidates)."""
+    all-pairs."""
     base = winnow_fingerprints(df, text_col, k, w).select(
         "doc_id", F.explode(F.split("fingerprints_csv", ",")).alias("fp")
     ).filter(F.col("fp") != "")

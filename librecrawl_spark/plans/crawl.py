@@ -401,20 +401,20 @@ class CrawlEngine:
             for k in ("seen", "pending", "counts", "traps"):
                 st[k] = st[k].localCheckpoint(eager=True)
 
-            pages_wave = pages.drop("links", "candidates")
             if self.tio:
-                self._commit_state(st, pages_wave, wave_links, wave_sources)
+                # _finalize reads the committed tables, not pages
+                self._commit_state(st, pages.drop("links", "candidates"),
+                                   wave_links, wave_sources)
+                pages.unpersist()
             else:
-                pages_parts.append(pages_wave)
+                # kept persisted: _finalize checkpoints the result from
+                # these, then unpersists them
+                pages_parts.append(pages)
                 links_parts.append(wave_links)
                 sources_parts.append(wave_sources)
-            # the checkpointed state no longer reads new_frontier, and a
-            # checkpointed crawl's _finalize reads the committed tables,
-            # not pages; an in-memory crawl's result unions its pages
+            # the checkpointed state no longer reads new_frontier
             occ.unpersist()
             new_frontier.unpersist()
-            if self.tio:
-                pages.unpersist()
             lineage.append({
                 "wave": wave, "pending_in": n_eligible, "fetched": n_fetched,
                 "new_frontier": n_new, "crawled_total": st["crawled"],
@@ -453,7 +453,8 @@ class CrawlEngine:
             links_all = self.tio.read(self.spark, "links")
             sources_all = self.tio.read(self.spark, "sources")
         else:
-            pages_all = self._union(pages_parts) or self._empty_pages()
+            pages_all = (self._union([p.drop("links", "candidates") for p in pages_parts])
+                         or self._empty_pages())
             links_all = self._union(links_parts) or self._empty_links()
             sources_all = self._union(sources_parts) or self._empty_sources()
 
@@ -480,6 +481,15 @@ class CrawlEngine:
                 F.coalesce("linked_from", F.array().cast("array<string>")),
             )
         )
+
+        if not self.tio:
+            # materialize the result off the per-wave caches: a report
+            # over unions of cached frames plans one TableCacheQueryStage
+            # per reader, so its shared exchanges are never reused
+            pages_all = pages_all.localCheckpoint(eager=True)
+            links_all = links_all.localCheckpoint(eager=True)
+            for p in pages_parts:
+                p.unpersist()
 
         traps_out = st["traps"].select(
             F.col("signature").alias("pattern"), "example_url",

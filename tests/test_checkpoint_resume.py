@@ -4,6 +4,8 @@ uninterrupted run's — plus snapshot time-travel on the TableIO layer."""
 
 from dataclasses import replace
 
+import pytest
+
 from librecrawl_spark.config import CrawlConfig
 from librecrawl_spark.fixtures.sitegen import SiteGenConfig, generate_site, site_to_spark
 from librecrawl_spark.plans.crawl import CrawlEngine
@@ -36,10 +38,23 @@ def n_cached(spark):
     return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
 
 
-def test_kill_and_resume_equals_uninterrupted(spark, tmp_path):
-    site = generate_site(SITE)
-    full = mk_engine(spark, site).run()
+@pytest.fixture(scope="module")
+def site():
+    return generate_site(SITE)
 
+
+@pytest.fixture(scope="module")
+def full(spark, site):
+    """The uninterrupted in-memory crawl of SITE under CFG."""
+    n0 = n_cached(spark)
+    res = mk_engine(spark, site).run()
+    # an in-memory run() leaves no Dataset cache behind either: its
+    # result is checkpointed off the per-wave caches
+    assert n_cached(spark) == n0
+    return res
+
+
+def test_kill_and_resume_equals_uninterrupted(spark, site, full, tmp_path):
     # a checkpointed run() leaves no Dataset cache behind: its result
     # reads the committed tables
     ckdir = str(tmp_path / "ck")
@@ -58,13 +73,10 @@ def test_kill_and_resume_equals_uninterrupted(spark, tmp_path):
     assert snap(resumed) == snap(full)
 
 
-def test_crash_after_append_before_checkpoint(spark, tmp_path):
+def test_crash_after_append_before_checkpoint(spark, site, full, tmp_path):
     """Crash-atomicity: an append that committed AFTER the last crawl
     checkpoint (process died before checkpoint()) must not leak into the
     resumed run — the re-run wave would otherwise duplicate its rows."""
-    site = generate_site(SITE)
-    full = mk_engine(spark, site).run()
-
     ckdir = str(tmp_path / "ck2")
     mk_engine(spark, site, checkpoint_dir=ckdir, max_waves=2).run()
 
@@ -81,15 +93,12 @@ def test_crash_after_append_before_checkpoint(spark, tmp_path):
     assert snap(resumed) == snap(full)
 
 
-def test_resume_from_wider_state_tables(spark, tmp_path):
+def test_resume_from_wider_state_tables(spark, site, full, tmp_path):
     """A checkpoint whose state tables carry columns the engine no
     longer writes — pending with (wave, retry_count, ready_wave), seen
     with url_hash — resumes to the uninterrupted crawl: the resume
     projects both tables to (url, depth, seq)."""
     from pyspark.sql import functions as F
-
-    site = generate_site(SITE)
-    full = mk_engine(spark, site).run()
 
     ckdir = str(tmp_path / "ck_wide")
     mk_engine(spark, site, checkpoint_dir=ckdir, max_waves=1).run()
@@ -124,12 +133,9 @@ def test_resume_from_wider_state_tables(spark, tmp_path):
     assert resumed.stats["crawled"] == full.stats["crawled"]
 
 
-def test_fresh_run_ignores_stale_snapshots(spark, tmp_path):
+def test_fresh_run_ignores_stale_snapshots(spark, site, full, tmp_path):
     """A crash before the FIRST checkpoint leaves snapshots but no
     checkpoint.json; a fresh run over the same dir must start clean."""
-    site = generate_site(SITE)
-    full = mk_engine(spark, site).run()
-
     ckdir = str(tmp_path / "ck3")
     tio = TableIO(ckdir)
     stale = spark.createDataFrame([("https://stale.example/", 1)], "url string, seq long")
@@ -140,6 +146,51 @@ def test_fresh_run_ignores_stale_snapshots(spark, tmp_path):
     urls = {r["url"] for r in fresh.pages.collect()}
     assert "https://stale.example/" not in urls
     assert fresh.stats["crawled"] == full.stats["crawled"]
+
+
+def test_resume_under_politeness_and_traps_matches_oracle(spark, tmp_path):
+    """Stop after wave 1 and resume a crawl with politeness cuts, external
+    hosts and a low trap threshold: seen set, fetch order, traps and the
+    crawled count equal the reference oracle's. Trap pages are seeds, so
+    wave 1 already trips the trap that the resumed leg keeps counting."""
+    from librecrawl_spark.oracle.refcrawl import ReferenceCrawlOracle
+
+    site = generate_site(SiteGenConfig(seed=11, n_hosts=3, pages_base_host=15,
+                                       pages_other_host=4, trap_pages=40))
+    cfg = CrawlConfig(max_depth=4, max_urls=80, trap_threshold=3,
+                      crawl_external=True, wave_seconds=2.0,
+                      discover_sitemaps=False)
+    seeds = [site.base_url + "/"] + [f"{site.base_url}/p/{n}" for n in (0, 10, 20)]
+    want = ReferenceCrawlOracle(site.documents, site.hosts, site.base_url,
+                                cfg).run(seeds)
+    docs, hosts, _ = site_to_spark(spark, site)
+
+    def mk(**kw):
+        return CrawlEngine(spark, docs, hosts, site.base_url, cfg, seed_urls=seeds,
+                           politeness=True, checkpoint_dir=str(tmp_path / "pt"), **kw)
+
+    def traps_of(res):
+        return {(r["pattern"], r["example_url"], r["count"]) for r in res.traps.collect()}
+
+    leg1 = mk(max_waves=1).run()
+    res = mk().run()
+    assert res.stats["resumed"] is True
+    assert {(r["url"], r["seq"], r["depth"]) for r in res.seen.collect()} == {
+        (u, i, d) for i, (u, d) in enumerate(want["seen"])}
+    assert [(r["url"], r["depth"]) for r in res.pages.orderBy("wave", "seq")
+            .select("url", "depth").collect()] == want["fetch_order"]
+    assert traps_of(res) == {(t["pattern"], t["example_url"], t["count"])
+                             for t in want["traps"]}
+    assert res.stats["crawled"] == want["stats"]["crawled"]
+
+    # premises: some wave ended on the politeness cut, below both its
+    # eligible rows and the remaining budget; a trap from leg 1 grew
+    cut = [w for w in leg1.lineage + res.lineage
+           if w["fetched"] < min(w["pending_in"],
+                                 cfg.max_urls - w["crawled_total"] + w["fetched"])]
+    assert cut
+    leg1_counts = {p: c for p, _, c in traps_of(leg1)}
+    assert any(c > leg1_counts.get(p, c) for p, _, c in traps_of(res))
 
 
 def test_tableio_snapshot_time_travel(spark, tmp_path):
@@ -255,16 +306,13 @@ def test_tableio_compact_small_binpacks_only_small_files(spark, tmp_path):
         tio.snapshots("t")[-1]
 
 
-def test_maintenance_wave_loop_bounds_files_and_resumes(spark, tmp_path):
+def test_maintenance_wave_loop_bounds_files_and_resumes(spark, site, full, tmp_path):
     """Wave-loop maintenance (config.maintenance_every_waves): a crawl
     with a 1-wave cadence keeps manifest generations bounded (expiry
     collapses history to the pinned generation), matches the
     no-maintenance run row-for-row, and a kill-and-resume across a
     maintenance boundary still reconstructs the uninterrupted result."""
     import os
-
-    site = generate_site(SITE)
-    full = mk_engine(spark, site).run()
 
     cfg_m = CrawlConfig(max_depth=3, max_urls=60, discover_sitemaps=False,
                         maintenance_every_waves=1)
@@ -304,12 +352,11 @@ def test_maintenance_wave_loop_bounds_files_and_resumes(spark, tmp_path):
     assert snap(resumed) == snap(full)
 
 
-def test_resume_into_maintenance_on_last_wave(spark, tmp_path):
+def test_resume_into_maintenance_on_last_wave(spark, site, tmp_path):
     """Kill-and-resume where the first resumed wave both runs storage
     maintenance and empties the frontier. Expiry deletes the pending
     snapshot the resumed run was reading, so the end-of-crawl check
     must test the wave's checkpointed state, not the resumed files."""
-    site = generate_site(SITE)
     cfg = CrawlConfig(max_depth=3, max_urls=500, discover_sitemaps=False,
                       maintenance_every_waves=0)
     docs, hosts, _ = site_to_spark(spark, site)

@@ -21,7 +21,7 @@ def pages(spark):
     res = CrawlEngine(spark, docs, hosts, site.base_url,
                       CrawlConfig(max_depth=3, max_urls=100, discover_sitemaps=False),
                       seed_urls=[s["url"] for s in site.seeds]).run()
-    return res.pages.persist(), res.links.persist()
+    return res.pages, res.links
 
 
 def test_per_page_issue_shapes(pages):
@@ -600,20 +600,23 @@ def test_normalized_url_collisions_match_oracle(spark):
 
 
 def test_report_job_count(pages):
-    """The whole report over the fixture runs in at most 20 Spark jobs:
-    J3-J6 share one per-URL reduce, the three security-header checks one
-    aggregate and the duplicate scoring one pass (with a reduce per
-    detector, the same report ran 25)."""
+    """The whole report over an in-memory crawl's result runs in at most
+    13 Spark jobs and reuses exchanges: J3-J6 share one per-URL reduce,
+    the three security-header checks one aggregate and the duplicate
+    scoring one pass. The result must be plain scans for that: over
+    unions of per-wave cached pages each reader plans its own cache
+    stage, nothing is reused and the same report ran 30 jobs."""
     pg, links = pages
-    pg.count(), links.count()  # the cached fixture, materialized
     sc = pg.sparkSession.sparkContext
     sc.setJobGroup("issue-report", "issue-report")
     try:
-        I.detect_all_issues(pg, links).collect()
+        report = I.detect_all_issues(pg, links)
+        report.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("issue-report"))
-    assert n_jobs <= 20, n_jobs
+    assert n_jobs <= 13, n_jobs
+    assert "ReusedExchange" in report._jdf.queryExecution().executedPlan().toString()
 
 
 def test_crawl_result_issue_surface(spark):

@@ -1,5 +1,5 @@
-"""Unit tests for the operator library: dedup, similarity, text,
-sitemap, lint, exports."""
+"""Unit tests for the operator library: similarity, text, sitemap,
+lint, exports."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,184 +15,6 @@ def docs(spark):
 @pytest.fixture(scope="module")
 def emb(spark):
     return spark.read.parquet(f"{TD}/embeddings.parquet").persist()
-
-
-class TestDedup:
-    def test_exact_dups_on_planted(self, spark):
-        from librecrawl_spark.operators.dedup import exact_dups
-
-        df = spark.createDataFrame(
-            [(1, "hello  world"), (2, "Hello World"), (3, "other text")],
-            "doc_id long, text string",
-        )
-        out = exact_dups(df).collect()
-        assert len(out) == 1 and out[0]["n_docs"] == 2 and out[0]["keeper"] == 1
-
-    def test_minhash_lsh_finds_near_dups(self, spark):
-        from librecrawl_spark.operators.dedup import minhash_lsh_candidates
-
-        base = "the quick brown fox jumps over the lazy dog again and again " * 5
-        df = spark.createDataFrame(
-            [(1, base), (2, base + " extra tail tokens"), (3, "completely different words here")],
-            "doc_id long, text string",
-        )
-        pairs = {(r["doc_a"], r["doc_b"]) for r in minhash_lsh_candidates(df).collect()}
-        assert (1, 2) in pairs
-        assert (1, 3) not in pairs and (2, 3) not in pairs
-
-    def test_connected_components_planted(self, spark):
-        from librecrawl_spark.operators.dedup import dup_clusters
-
-        # triangle {1,2,3}, pair {10,11}, a 20-node path (exercises the
-        # pointer-jumping rounds), and singletons 50/51
-        path = [(100 + i, 101 + i) for i in range(19)]
-        pairs = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 1), (10, 11)] + path,
-            "doc_a long, doc_b long",
-        )
-        docs = spark.createDataFrame(
-            [(i,) for i in (1, 2, 3, 10, 11, 50, 51)]
-            + [(100 + i,) for i in range(20)],
-            "doc_id long",
-        )
-        got = {r["doc_id"]: (r["cluster"], r["is_keeper"])
-               for r in dup_clusters(docs, pairs).collect()}
-        assert got[1] == (1, True) and got[2] == (1, False) and got[3] == (1, False)
-        assert got[10] == (10, True) and got[11] == (10, False)
-        assert got[50] == (50, True) and got[51] == (51, True)
-        for i in range(20):
-            assert got[100 + i] == (100, i == 0)
-
-    def test_dup_clusters_from_simhash_pairs(self, spark):
-        from librecrawl_spark.operators.dedup import (
-            dup_clusters, simhash_dup_groups)
-
-        base = "alpha beta gamma delta epsilon zeta eta theta " * 8
-        df = spark.createDataFrame(
-            [(1, base), (2, base + " tail"), (3, base + " tail two"),
-             (9, "entirely unrelated words in this document body here")],
-            "doc_id long, text string",
-        )
-        pairs = simhash_dup_groups(df, max_hamming=6)
-        out = {r["doc_id"]: r["cluster"]
-               for r in dup_clusters(df.select("doc_id"), pairs).collect()}
-        assert out[1] == out[2] == out[3] == 1
-        assert out[9] == 9
-
-    def test_jaccard_threshold_monotone(self, docs):
-        from librecrawl_spark.operators.dedup import ngram_jaccard_pairs
-
-        lo = ngram_jaccard_pairs(docs, threshold=0.3).count()
-        hi = ngram_jaccard_pairs(docs, threshold=0.6).count()
-        assert hi <= lo
-
-    def test_jaccard_hot_shingle_cap(self, spark):
-        """A shingle shared by every doc must not create the n^2 join:
-        with max_df below the corpus size the boilerplate-only pairs
-        disappear, while genuinely-similar pairs (sharing cold shingles)
-        keep their EXACT jaccard."""
-        from librecrawl_spark.operators.dedup import ngram_jaccard_pairs
-
-        boiler = "all rights reserved copyright notice "
-        rows = [(i, boiler + f"unique words number {i} here padding tokens") for i in range(20)]
-        # docs 100/101 share cold content beyond the boilerplate
-        sim = boiler + "identical middle section of real content words"
-        rows += [(100, sim + " tail a"), (101, sim + " tail b")]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-
-        capped = ngram_jaccard_pairs(df, threshold=0.2, max_df=10)
-        got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in capped.collect()}
-        assert (100, 101) in got
-        # no boilerplate-only pair survives (their only shared shingles are hot)
-        assert all(p == (100, 101) for p in got)
-
-        # the surviving pair's jaccard is EXACT (equals the uncapped value)
-        uncapped = ngram_jaccard_pairs(df, threshold=0.2, max_df=10**9)
-        full = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in uncapped.collect()}
-        assert got[(100, 101)] == full[(100, 101)]
-
-    def test_simhash_hamming_banding(self, spark):
-        """simhash_dup_groups finds near-identical docs (small Hamming
-        distance) without an all-pairs scan and never pairs unrelated
-        docs."""
-        from librecrawl_spark.operators.dedup import simhash_dup_groups
-
-        base = "the quick brown fox jumps over the lazy dog " * 8
-        df = spark.createDataFrame(
-            [(1, base), (2, base + " extra"), (3, "entirely different vocabulary here " * 8)],
-            "doc_id long, text string",
-        )
-        pairs = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in
-                 simhash_dup_groups(df, max_hamming=3).collect()}
-        assert (1, 2) in pairs and pairs[(1, 2)] <= 3
-        assert (1, 3) not in pairs and (2, 3) not in pairs
-
-    def test_simhash_identical_docs_same_hash(self, spark):
-        from librecrawl_spark.operators.dedup import simhash
-
-        df = spark.createDataFrame(
-            [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "zz yy xx")],
-            "doc_id long, text string",
-        )
-        rows = {r["doc_id"]: r for r in simhash(df).collect()}
-        assert rows[1]["simhash"] == rows[2]["simhash"]
-        assert len(rows[1]["simhash"]) == 16  # 64-bit sketch as hex
-        for g in range(4):
-            assert 0 <= rows[1][f"band{g}"] < (1 << 16)
-        assert rows[1]["simhash"] != rows[3]["simhash"]
-
-    def test_dup_chunk_stats_planted(self, spark):
-        from librecrawl_spark.operators.dedup import (
-            dup_chunk_filter, dup_chunk_stats)
-
-        boiler = "all rights reserved contact us for more info"  # 8 tokens
-        d = spark.createDataFrame(
-            [
-                # 2 chunks: unique 8 tokens + the shared boilerplate
-                (1, "aa bb cc dd ee ff gg hh " + boiler),
-                # 1 chunk: the boilerplate alone (trailing token dropped)
-                (2, boiler + " tail"),
-                # internal duplication only: same 8-token chunk twice
-                (3, "p q r s t u v w p q r s t u v w"),
-                # shorter than k -> zero chunks
-                (4, "too short"),
-                (5, "ii jj kk ll mm nn oo pp qq rr ss tt uu vv ww xx"),
-            ],
-            "doc_id long, text string",
-        )
-        got = {r["doc_id"]: r for r in dup_chunk_stats(d, k=8).collect()}
-        assert (got[1]["n_chunks"], got[1]["n_dup_chunks"]) == (2, 1)
-        assert got[1]["dup_chunk_frac"] == 0.5
-        assert (got[2]["n_chunks"], got[2]["n_dup_chunks"]) == (1, 1)
-        assert got[3]["n_dup_chunks"] == 2  # twice-in-one-doc counts
-        assert (got[4]["n_chunks"], got[4]["dup_chunk_frac"]) == (0, 0.0)
-        assert got[5]["n_dup_chunks"] == 0
-        keep = {r["doc_id"]: r["keep"]
-                for r in dup_chunk_filter(d, k=8).collect()}
-        assert keep == {1: True, 2: False, 3: False, 4: True, 5: True}
-
-    def test_dup_chunk_matches_python_transcription(self, docs):
-        import re
-        from collections import Counter
-
-        from librecrawl_spark.operators.dedup import dup_chunk_stats
-
-        k = 8
-        rows = docs.select("doc_id", "text").collect()
-        chunks = {}
-        for r in rows:
-            t = re.findall(r"[0-9A-Za-z_]+", (r["text"] or "").lower())
-            chunks[r["doc_id"]] = [
-                " ".join(t[i * k:(i + 1) * k]) for i in range(len(t) // k)]
-        tot = Counter(c for cs in chunks.values() for c in cs)
-        got = {r["doc_id"]: r for r in dup_chunk_stats(docs, k=k).collect()}
-        assert set(got) == set(chunks)
-        for did, cs in chunks.items():
-            nd = sum(1 for c in cs if tot[c] > 1)
-            g = got[did]
-            assert (g["n_chunks"], g["n_dup_chunks"]) == (len(cs), nd)
-            assert g["dup_chunk_frac"] == (
-                round(nd / len(cs), 6) if cs else 0.0)
 
 
 class TestSimilarity:

@@ -222,34 +222,6 @@ class TestClusterRepresentatives:
         # cluster 5: tie at q=2 -> doc 5
         assert got[5]["rep_doc_id"] == 5
 
-    def test_on_dup_clusters_output(self, spark, docs):
-        from librecrawl_spark.operators.dedup import dup_clusters
-        from librecrawl_spark.operators.pipeline import cluster_representatives
-
-        ids = docs.select("doc_id")
-        n = ids.count()
-        pairs = spark.createDataFrame(
-            [(i % n, (i * 3 + 1) % n) for i in range(0, n, 7)],
-            "doc_a long, doc_b long",
-        ).filter("doc_a <> doc_b")
-        cl = dup_clusters(ids, pairs)
-        q = docs.select("doc_id", F.length("text").cast("long").alias("q"))
-        reps = cluster_representatives(q, cl.select("doc_id", "cluster"), "q")
-        # every cluster gets exactly one representative; representative
-        # quality is the member max (checked via python argmax)
-        cl_rows = cl.collect()
-        q_map = {r["doc_id"]: r["q"] for r in q.collect()}
-        by_cluster = {}
-        for r in cl_rows:
-            by_cluster.setdefault(r["cluster"], []).append(r["doc_id"])
-        got = {r["cluster"]: r for r in reps.collect()}
-        assert set(got) == set(by_cluster)
-        for c, members in by_cluster.items():
-            best = sorted(members, key=lambda m: (-q_map[m], m))[0]
-            assert got[c]["rep_doc_id"] == best
-            assert got[c]["rep_quality"] == q_map[best]
-            assert got[c]["cluster_size"] == len(members)
-
 
 class TestKmeansCodebook:
     @staticmethod

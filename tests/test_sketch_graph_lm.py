@@ -1,6 +1,5 @@
 """Unit tests for the KMV distinct sketch (operators/sketch.py), the
-unigram-LM fluency score (operators/text.py:unigram_logprob), shingle
-containment and incremental MinHash (operators/dedup.py) and priority
+unigram-LM fluency score (operators/text.py:unigram_logprob) and priority
 sampling (operators/pipeline.py:priority_sample) — each against an
 independent pure-Python transcription."""
 
@@ -96,68 +95,6 @@ class TestUnigramLogprob:
         assert got[2] > got[3]  # repeated common words beat rare junk
 
 
-def _py_containment(docs, t=0.8, k=3, max_df=1000):
-    shsets = {}
-    for i, txt in docs:
-        ws = re.findall(r"\w+", txt)
-        sh = {" ".join(ws[j:j + k]) for j in range(len(ws) - k + 1)}
-        if sh:
-            shsets[i] = sh
-    dfreq = Counter(s for sh in shsets.values() for s in sh)
-    out = {}
-    for a, sa in shsets.items():
-        for b, sb in shsets.items():
-            if a == b:
-                continue
-            inter = sa & sb
-            # candidate iff any shared shingle is cold (df <= max_df)
-            if not any(dfreq[s] <= max_df for s in inter):
-                continue
-            c = round(len(inter) / len(sa), 6)
-            if c >= t:
-                out[(a, b)] = c
-    return out
-
-
-class TestContainmentPairs:
-    def test_planted_quote_and_transcription(self, spark):
-        from librecrawl_spark.operators.dedup import containment_pairs
-
-        base = ("alpha bravo charlie delta echo foxtrot golf hotel india "
-                "juliet kilo lima mike november oscar papa quebec romeo "
-                "sierra tango uniform victor whiskey xray yankee zulu")
-        docs = [
-            (1, base + " one two three four five six seven eight nine ten"),
-            (2, " ".join(base.split()[:12])),        # prefix quote of 1
-            (3, "completely different words about nothing shared here at "
-                "all in any way whatsoever through the entire text body"),
-            (4, "tiny"),                              # < k tokens: no shingles
-            (5, base + " one two three four five six seven eight nine ten"),
-        ]
-        df = spark.createDataFrame(docs, schema="doc_id long, text string")
-        got = {(r["doc_inner"], r["doc_outer"]): r["containment"]
-               for r in containment_pairs(df, threshold=0.8).collect()}
-        want = _py_containment(docs)
-        assert got == want
-        # the quote is contained in both long docs; reverse is not
-        assert got[(2, 1)] == 1.0 and got[(2, 5)] == 1.0
-        assert (1, 2) not in got
-        # exact duplicates contain each other
-        assert got[(1, 5)] == 1.0 and got[(5, 1)] == 1.0
-
-    def test_jaccard_misses_what_containment_catches(self, spark):
-        from librecrawl_spark.operators.dedup import (containment_pairs,
-                                                      ngram_jaccard_pairs)
-
-        long_txt = " ".join(f"w{i} w{i + 1} w{i + 2}" for i in range(200))
-        docs = [(1, long_txt), (2, " ".join(long_txt.split()[:15]))]
-        df = spark.createDataFrame(docs, schema="doc_id long, text string")
-        cp = containment_pairs(df, threshold=0.8).collect()
-        jp = ngram_jaccard_pairs(df, threshold=0.8).collect()
-        assert any(r["doc_inner"] == 2 and r["doc_outer"] == 1 for r in cp)
-        assert jp == []  # symmetric Jaccard can't see the embedding
-
-
 class TestKmvDistinctBy:
     def test_matches_python_per_group(self, spark):
         from librecrawl_spark.operators.sketch import kmv_distinct_by
@@ -211,50 +148,6 @@ class TestPrioritySample:
         got = priority_sample(df, "id", "w", 50).collect()
         n_heavy = sum(1 for r in got if r["w"] == 1000)
         assert n_heavy >= 40
-
-
-class TestMinhashIncremental:
-    DOCS = [
-        (1, "the quick brown fox jumps over the lazy dog again and again "
-            "with some more filler words to make shingles"),
-        (2, "the quick brown fox jumps over the lazy dog again and again "
-            "with some more filler words to make shingles"),     # dup of 1
-        (3, "completely different content about spark dataframes and "
-            "shuffle partitions in distributed execution engines"),
-        (4, "the quick brown fox jumps over the lazy dog again and again "
-            "with some more filler words to make shingles today"),  # near 1
-        (5, "another entirely unrelated document mentioning nothing that "
-            "overlaps with any of the previous texts at all honestly"),
-    ]
-
-    def test_incremental_covers_exactly_new_pairs(self, spark):
-        from librecrawl_spark.operators.dedup import (
-            minhash_band_index, minhash_incremental_candidates,
-            minhash_lsh_candidates)
-
-        df = spark.createDataFrame(self.DOCS, schema="doc_id long, text string")
-        old = df.filter("doc_id <= 2")
-        new = df.filter("doc_id >= 3")
-        idx = minhash_band_index(old)
-        pairs, new_bands = minhash_incremental_candidates(new, idx)
-        got = {(r["doc_a"], r["doc_b"], r["against"])
-               for r in pairs.collect()}
-        # full-corpus candidates, restricted to pairs touching a new doc
-        full = {(r["doc_a"], r["doc_b"])
-                for r in minhash_lsh_candidates(df).collect()}
-        want = set()
-        for a, b in full:
-            if a >= 3 and b >= 3:
-                want.add((a, b, "wave"))
-            elif b >= 3:                       # old doc_a < new doc_b
-                want.add((b, a, "index"))      # new doc is always doc_a
-            elif a >= 3:
-                want.add((a, b, "index"))
-        assert got == want
-        # the dup/near-dup of doc 1 must surface against the index
-        assert (4, 1, "index") in got or (4, 2, "index") in got
-        # band rows are appendable index rows for the new docs only
-        assert set(r["doc_id"] for r in new_bands.collect()) <= {3, 4, 5}
 
 
 class TestKmvMerge:
